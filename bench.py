@@ -112,8 +112,9 @@ def main() -> None:
 
 
 def _git_head() -> str:
-    """HEAD commit of the repo this bench.py lives in (+ a dirty marker);
-    'unknown' where git is unavailable. Best-effort: provenance must never
+    """HEAD commit of the repo this bench.py lives in (+ a dirty marker
+    when a TRACKED file is modified — the bench's own untracked BENCH_*.json
+    output does not count); 'unknown' where git is unavailable. Best-effort: provenance must never
     break the bench."""
     import subprocess
 
@@ -124,7 +125,7 @@ def _git_head() -> str:
             capture_output=True, text=True, timeout=10,
         ).stdout.strip()
         dirty = subprocess.run(
-            ["git", "-C", here, "status", "--porcelain"],
+            ["git", "-C", here, "status", "--porcelain", "-uno"],
             capture_output=True, text=True, timeout=10,
         ).stdout.strip()
         return (head + ("-dirty" if dirty else "")) if head else "unknown"

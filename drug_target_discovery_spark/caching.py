@@ -10,25 +10,37 @@ through one of two tiers:
   (a subtree consumed 2+ times by one returned DataFrame) and iterative-
   loop results. Harness loops (bench.py, tools/check_correctness.py) call
   ``release_caches()`` after consuming each query's result.
-- ``fixture_cache(df)`` + ``register_fixture_hook(fn)`` — SWEEP-scoped:
-  memoized shared intermediates deliberately reused ACROSS queries (the
-  correlation graph, the GEO pipeline outputs, minhash signatures).
-  Released by ``release_caches(fixtures=True)`` at the end of a sweep;
-  hooks clear the memo dicts so a later call rebuilds cleanly.
+- ``memo(spark, family, build, *key)`` — SWEEP-scoped: the one memo layer
+  for shared intermediates deliberately reused ACROSS queries (the
+  correlation graph, the GEO pipeline outputs, minhash signatures, lazy
+  table scans). ``build`` runs once per key and materializes what it
+  builds through ``fixture_cache`` / ``fixture_checkpoint``;
+  ``release_caches(fixtures=True)`` at the end of a sweep frees that
+  storage and empties the memo, so the next ``memo()`` call rebuilds.
 
-Releasing is always safe: ``unpersist`` drops the materialized data, not
-the plan — a DataFrame referenced after release recomputes correctly.
+Checkpoint contract: ``unpersist`` on a cached frame drops the data, not
+the plan — a frame referenced after release recomputes. A checkpointed
+memo has no plan to recompute from: its blocks ARE the data. A consumer
+must therefore not hold a memo-backed frame across a fixture release; one
+that does fails loudly (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``) instead of
+recomputing. Fetch the memo again instead — the next ``memo()`` call
+rebuilds it.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import Any, TypeVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 _SCOPED: list[DataFrame] = []
-_FIXTURE: list[DataFrame] = []
-_HOOKS: list[Callable[[], None]] = []
+# sweep-scoped storage: cached DataFrames, and the JVM RDD behind each
+# checkpointed one (DataFrame.unpersist() cannot free a checkpoint)
+_FIXTURE: list[Any] = []
+_MEMO: dict[tuple, Any] = {}
 
 
 def scoped_cache(df: DataFrame) -> DataFrame:
@@ -62,41 +74,50 @@ def fixture_checkpoint(df: DataFrame) -> DataFrame:
     query (guide §3.3 "materialising truncates the plan", §7.3 planning
     time). A checkpointed memo is a LogicalRDD leaf: consumers' plans
     stop scaling with the memo's build lineage. Storage is the executor
-    block manager (MEMORY_AND_DISK), as with cache; blocks are freed by
-    the ContextCleaner once the memo dicts are cleared by the release
-    hooks (unpersist() has no effect on checkpoints). The at-scale trade
-    is documented: a lost executor fails dependents instead of
-    recomputing the memo — acceptable for sweep-scoped intermediates a
+    block manager (MEMORY_AND_DISK), as with cache; release unpersists
+    the LogicalRDD's backing RDD directly. The at-scale trade is
+    documented: a lost executor (or a release) fails dependents instead
+    of recomputing the memo — acceptable for sweep-scoped intermediates a
     nightly pipeline would materialize to storage anyway."""
     df = df.localCheckpoint(eager=True)
-    _FIXTURE.append(df)
+    _FIXTURE.append(df._jdf.queryExecution().analyzed().rdd())
     return df
 
 
-def register_fixture_hook(fn: Callable[[], None]) -> None:
-    """Run ``fn`` (typically: clear a memo dict) on fixture release."""
-    _HOOKS.append(fn)
+def memo(spark: SparkSession, family: str, build: Callable[[], T], *key: Any) -> T:
+    """The sweep-scoped value of ``build()`` under ``(family,
+    applicationId, *key)``: built on the first call, returned as-is on
+    every later one, dropped by ``release_caches(fixtures=True)``."""
+    k = (family, spark.sparkContext.applicationId, *key)
+    if k not in _MEMO:
+        _MEMO[k] = build()
+    return _MEMO[k]
+
+
+def _free(handle: Any) -> bool:
+    """Unpersist one tracked DataFrame or checkpoint RDD; True only when
+    it still held storage (a shared or already-freed entry is a no-op)."""
+    try:
+        jlevel = (
+            handle._jdf.storageLevel()
+            if isinstance(handle, DataFrame)
+            else handle.getStorageLevel()
+        )
+        held = jlevel.isValid()
+        handle.unpersist(False)
+        return held
+    except Exception:  # session already stopped — nothing to release
+        return False
 
 
 def release_caches(fixtures: bool = False) -> int:
-    """Unpersist tracked caches; returns how many were released. With
-    ``fixtures=True`` also drops sweep-scoped caches and clears memos."""
-    n = 0
-    for df in _SCOPED:
-        try:
-            df.unpersist(blocking=False)
-            n += 1
-        except Exception:  # session already stopped — nothing to release
-            pass
+    """Unpersist tracked caches; returns how many really held storage.
+    With ``fixtures=True`` also frees sweep-scoped storage and empties the
+    memo."""
+    n = sum(_free(df) for df in _SCOPED)
     _SCOPED.clear()
     if fixtures:
-        for df in _FIXTURE:
-            try:
-                df.unpersist(blocking=False)
-                n += 1
-            except Exception:
-                pass
+        n += sum(_free(h) for h in _FIXTURE)
         _FIXTURE.clear()
-        for hook in _HOOKS:
-            hook()
+        _MEMO.clear()
     return n

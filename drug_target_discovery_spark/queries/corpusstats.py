@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as PWindow
 from pyspark.sql import functions as F
 
+from drug_target_discovery_spark.caching import fixture_checkpoint, memo
 from drug_target_discovery_spark.functions.rounding import rnd, rnd_sql
 from drug_target_discovery_spark.operators.dedup import MD5_INT_DUCK, MD5_INT_SPARK
 from drug_target_discovery_spark.operators.heavyhitters import exact_heavy_hitters
@@ -184,29 +185,18 @@ _BM25_SCORED_SQL = f"""
 # (bm25_keyword_search, hybrid_retrieval_rerank, reciprocal_rank_fusion)
 # consume the same scored table; the matched-docs result is corpus-bounded
 # and small, so one build per sweep replaces three token-stream passes.
-_BM25_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-from drug_target_discovery_spark.caching import (  # noqa: E402
-    register_fixture_hook as _bm25_reg_hook,
-)
-
-_bm25_reg_hook(_BM25_CACHE.clear)
-
-
 def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared BM25 scorer: (doc_id, n_matched_terms, s_sum) with s_sum the
     per-doc sum of integer micro-unit term scores (un-rounded — consumers
     round or normalize). Plan shape documented on bm25_keyword_search.
-    Sweep-memoized (see _BM25_CACHE above)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _BM25_CACHE:
-        return _BM25_CACHE[key]
-    from drug_target_discovery_spark.caching import fixture_checkpoint
-
-    # checkpoint, not cache: the token-stream lineage otherwise rides
-    # inside all three consumer plans (optimization r14)
-    _BM25_CACHE[key] = fixture_checkpoint(_bm25_plan(spark, sf_dir))
-    return _BM25_CACHE[key]
+    Sweep-memoized; checkpoint, not cache: the token-stream lineage
+    otherwise rides inside all three consumer plans (optimization r14)."""
+    return memo(
+        spark,
+        "corpus.bm25",
+        lambda: fixture_checkpoint(_bm25_plan(spark, sf_dir)),
+        sf_dir,
+    )
 
 
 def _bm25_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from drug_target_discovery_spark.caching import fixture_cache, fixture_checkpoint, memo
 from drug_target_discovery_spark.functions.rounding import rnd, rnd_sql
 from drug_target_discovery_spark.operators.dedup import (
     MD5_INT_DUCK,
@@ -31,14 +32,6 @@ _JACCARD_T = 0.8
 
 _H_DUCK = MD5_INT_DUCK.format(col="shingle")
 
-# Shared per-session signature cache: minhash_signatures, lsh_candidate_pairs
-# and near_dup_groups all need the same signatures — compute once, cache.
-_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-from drug_target_discovery_spark.caching import register_fixture_hook  # noqa: E402
-
-register_fixture_hook(_SIG_CACHE.clear)
-
 # Raw (unfiltered) distinct-shingle stream, sweep-scoped (optimization
 # r13): the signature build and the exact-pairs memo each reconstructed
 # the shingle stream from text (split + transform + array_distinct +
@@ -46,43 +39,39 @@ register_fixture_hook(_SIG_CACHE.clear)
 # dedup family). One cached build now feeds both; the stop-shingle filter
 # stays downstream in the exact-pairs memo (signatures must see ALL
 # shingles — the oracle's _SIG_SQL is unfiltered).
-_RAW_SH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-register_fixture_hook(_RAW_SH_CACHE.clear)
-
-
 def _raw_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _RAW_SH_CACHE:
-        from drug_target_discovery_spark.caching import fixture_cache
-
-        docs = load_table(spark, sf_dir, "documents")
-        _RAW_SH_CACHE[key] = fixture_cache(
-            token_shingles(docs, "text", "doc_id", _N)
-        )
-    return _RAW_SH_CACHE[key]
+    return memo(
+        spark,
+        "dedup.raw_shingles",
+        lambda: fixture_cache(
+            token_shingles(load_table(spark, sf_dir, "documents"), "text", "doc_id", _N)
+        ),
+        sf_dir,
+    )
 
 
 def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIG_CACHE:
-        from drug_target_discovery_spark.caching import fixture_checkpoint
+    from drug_target_discovery_spark.operators.dedup import (
+        minhash_signatures_from_shingles,
+    )
 
-        from drug_target_discovery_spark.operators.dedup import (
-            minhash_signatures_from_shingles,
-        )
-
-        # checkpoint, not cache: the signature lineage (shingle explode +
-        # 16-min aggregate) otherwise rides inside every LSH consumer's
-        # plan (optimization r14 — see caching.fixture_checkpoint)
-        _SIG_CACHE[key] = fixture_checkpoint(
+    # minhash_signatures, lsh_candidate_pairs and near_dup_groups all need
+    # the same signatures — compute once per sweep. Checkpoint, not cache:
+    # the signature lineage (shingle explode + 16-min aggregate) otherwise
+    # rides inside every LSH consumer's plan (optimization r14 — see
+    # caching.fixture_checkpoint)
+    return memo(
+        spark,
+        "dedup.signatures",
+        lambda: fixture_checkpoint(
             minhash_signatures_from_shingles(
                 _raw_shingles(spark, sf_dir),
                 num_hashes=_NUM_HASHES,
                 seed=_SEED,
             )
-        )
-    return _SIG_CACHE[key]
+        ),
+        sf_dir,
+    )
 
 
 # The band self-join (signatures -> banded sums -> bucket-local join ->
@@ -91,39 +80,15 @@ def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 # connected_components_near_dups). Sweep-scoped like the signatures: the
 # pair table is tiny (candidates << corpus by construction), so memoizing
 # it trades kilobytes of storage for re-running the band join per query.
-_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-register_fixture_hook(_PAIR_CACHE.clear)
-
-
 def candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PAIR_CACHE:
-        from drug_target_discovery_spark.caching import fixture_checkpoint
-
-        _PAIR_CACHE[key] = fixture_checkpoint(
-            lsh_candidate_pairs(
-                _signatures(spark, sf_dir), rows_per_band=_BANDS_ROWS
-            )
-        )
-    return _PAIR_CACHE[key]
-
-
-# Exact-verification memo (optimization r14 refinement of the r13 memo):
-# ONE unfiltered scored table (threshold=-1, i.e. exact Jaccard for EVERY
-# LSH candidate pair) now serves BOTH consumer families — the
-# threshold=_JACCARD_T consumers (near_dup_groups, split_contamination_audit,
-# curation_end_to_end, near_dup_best_representative) read it through a
-# cheap filter, and minhash_jaccard_estimate_error (which needs ALL pairs,
-# including true-Jaccard-0 banding collisions) reads it directly. Before,
-# the estimate-error query re-ran the whole scoring pass (collect_list
-# groupBy + two joins) on its own because its threshold differs; the filter
-# commutes with the scoring (same jaccard column, same float comparisons),
-# so the pass runs once per sweep (guide §1.2). The table is
-# (d1, d2, jaccard, n_common), candidates << corpus by construction.
-_SCORED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-register_fixture_hook(_SCORED_CACHE.clear)
+    return memo(
+        spark,
+        "dedup.candidate_pairs",
+        lambda: fixture_checkpoint(
+            lsh_candidate_pairs(_signatures(spark, sf_dir), rows_per_band=_BANDS_ROWS)
+        ),
+        sf_dir,
+    )
 
 
 def verify_pairs_from_memo(
@@ -148,19 +113,29 @@ def verify_pairs_from_memo(
     return _score_candidate_pairs(sh, pairs, "doc_id", threshold)
 
 
+# Exact-verification memo (optimization r14 refinement of the r13 memo):
+# ONE unfiltered scored table (threshold=-1, i.e. exact Jaccard for EVERY
+# LSH candidate pair) now serves BOTH consumer families — the
+# threshold=_JACCARD_T consumers (near_dup_groups, split_contamination_audit,
+# curation_end_to_end, near_dup_best_representative) read it through a
+# cheap filter, and minhash_jaccard_estimate_error (which needs ALL pairs,
+# including true-Jaccard-0 banding collisions) reads it directly. Before,
+# the estimate-error query re-ran the whole scoring pass (collect_list
+# groupBy + two joins) on its own because its threshold differs; the filter
+# commutes with the scoring (same jaccard column, same float comparisons),
+# so the pass runs once per sweep (guide §1.2). The table is
+# (d1, d2, jaccard, n_common), candidates << corpus by construction.
 def scored_all_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sweep-scoped memo: exact shingle-Jaccard for EVERY LSH candidate
     pair (threshold=-1 keeps all, including true-Jaccard-0 collisions)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SCORED_CACHE:
-        from drug_target_discovery_spark.caching import fixture_checkpoint
-
-        _SCORED_CACHE[key] = fixture_checkpoint(
-            verify_pairs_from_memo(
-                spark, sf_dir, candidate_pairs(spark, sf_dir), -1.0
-            )
-        )
-    return _SCORED_CACHE[key]
+    return memo(
+        spark,
+        "dedup.scored_pairs",
+        lambda: fixture_checkpoint(
+            verify_pairs_from_memo(spark, sf_dir, candidate_pairs(spark, sf_dir), -1.0)
+        ),
+        sf_dir,
+    )
 
 
 def verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -180,25 +155,13 @@ def verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # differ only in the final normalization (k/(s1+s2-k) vs k/s1), so the
 # join runs once per sweep. Sweep-scoped like the LSH memos; the pair
 # table is pairs-sharing-a-rare-shingle, orders below the corpus.
-_EXACT_PAIR_CACHE: dict[
-    tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]
-] = {}
-
-register_fixture_hook(_EXACT_PAIR_CACHE.clear)
-
-
-def shingle_sizes_and_intersections(
+def _exact_pair_tables(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(sizes(doc_id, sz), inter(d1 < d2, k)) under the family conventions:
-    distinct {_N}-token shingles, stop-shingles with df > 50% dropped from
-    both sides of the metric."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EXACT_PAIR_CACHE:
-        from drug_target_discovery_spark.caching import fixture_checkpoint
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(filtered shingles, sizes, inter): one build per sweep."""
 
-        docs = load_table(spark, sf_dir, "documents")
-        n_docs = docs.count()
+    def build() -> tuple[DataFrame, DataFrame, DataFrame]:
+        n_docs = load_table(spark, sf_dir, "documents").count()
         # rides the sweep-scoped raw-shingle memo (shared with the
         # signature build) instead of re-deriving shingles from text;
         # all three tables checkpoint (not cache) so the stop-filter +
@@ -222,9 +185,19 @@ def shingle_sizes_and_intersections(
             .groupBy("d1", "d2")
             .agg(F.count(F.lit(1)).alias("k"))
         )
-        _EXACT_PAIR_CACHE[key] = (sh, sizes, inter)
-    cached = _EXACT_PAIR_CACHE[key]
-    return cached[1], cached[2]
+        return sh, sizes, inter
+
+    return memo(spark, "dedup.exact_pairs", build, sf_dir)
+
+
+def shingle_sizes_and_intersections(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(sizes(doc_id, sz), inter(d1 < d2, k)) under the family conventions:
+    distinct {_N}-token shingles, stop-shingles with df > 50% dropped from
+    both sides of the metric."""
+    _, sizes, inter = _exact_pair_tables(spark, sf_dir)
+    return sizes, inter
 
 
 def shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -232,11 +205,10 @@ def shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, shingle) — the shared front half of the exact-pairs memo,
     exposed for consumers that need the shingle stream itself (prefix-
     filter candidate generation, first-owner novelty) rather than the
-    pairwise intersection. Same sweep-scoped cache entry: calling either
+    pairwise intersection. Same sweep-scoped memo entry: calling either
     accessor builds all three tables once."""
-    shingle_sizes_and_intersections(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _EXACT_PAIR_CACHE[key][0]
+    return _exact_pair_tables(spark, sf_dir)[0]
+
 
 # shared oracle CTE: distinct 3-token shingles per doc
 _SHINGLES_SQL = f"""

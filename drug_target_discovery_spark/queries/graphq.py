@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from drug_target_discovery_spark.caching import fixture_checkpoint, memo
 from drug_target_discovery_spark.functions.rounding import rnd, rnd_sql
 from drug_target_discovery_spark.functions.stats import minmax_scale
 from drug_target_discovery_spark.graph.centrality import (
@@ -91,97 +92,86 @@ def _top_genes(cell: DataFrame) -> DataFrame:
     )
 
 
-# One correlation graph per (application, sf_dir): five downstream queries
-# (edges, degree, eigenvector, betweenness, composite scores) share the same
-# cached nodes/edges instead of re-running the fact join + pairwise corr —
-# the Spark-idiomatic "materialized shared intermediate".
-_GRAPH_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-# The cell matrix gets its own sweep-scoped memo (VERDICT r3 #3): it is a
-# diamond INSIDE _corr_graph (top-K variance + semi-joined pairwise input)
-# AND a cross-query intermediate (mllib_corr_matrix_top pivots the same
-# table) — query-scoping it made the lineitem⋈orders fact-fact join rebuild
-# once per consuming query. Post-aggregation it is small (|parts|×|nations|
-# rows), so holding it for the sweep costs little storage.
-_CELL_CACHE: dict[tuple[str, str], DataFrame] = {}
-# Sweep-scoped {n_nodes, n_edges} of the memoized graph (optimization r14,
-# VERDICT r13 #3): ~8 downstream queries each ran their own count() jobs to
-# gate driver-twin strategy selection or to read the degree normalizer —
-# pure overhead on the cached tables. n_nodes is free at build time (the
-# top-K list is collected); n_edges is counted ONCE per sweep over the
-# eagerly-checkpointed edge table.
-_GRAPH_COUNT_CACHE: dict[tuple[str, str], dict[str, int]] = {}
-
-from drug_target_discovery_spark.caching import register_fixture_hook  # noqa: E402
-
-register_fixture_hook(_GRAPH_CACHE.clear)
-register_fixture_hook(_CELL_CACHE.clear)
-register_fixture_hook(_GRAPH_COUNT_CACHE.clear)
-
-
+# One correlation graph per (application, sf_dir), sweep-scoped through
+# caching.memo: five downstream queries (edges, degree, eigenvector,
+# betweenness, composite scores) share the same materialized nodes/edges
+# instead of re-running the fact join + pairwise corr — the
+# Spark-idiomatic "materialized shared intermediate".
 def cell_matrix_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sweep-scoped memo of the (g, s, v) cell matrix — the single shared
-    build of the only fact-fact join in the graph/mllib tiers."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CELL_CACHE:
-        from drug_target_discovery_spark.caching import fixture_checkpoint
+    build of the only fact-fact join in the graph/mllib tiers (VERDICT r3
+    #3): it is a diamond INSIDE _corr_graph (top-K variance + pairwise
+    input) AND a cross-query intermediate (mllib_corr_matrix_top pivots
+    the same table). Post-aggregation it is small (|parts|×|nations|
+    rows), so holding it for the sweep costs little storage. Checkpoint,
+    not cache (optimization r14): the 3-table join lineage otherwise rides
+    inside the edges build AND the mllib pivot consumer's plan."""
+    return memo(
+        spark,
+        "graph.cell_matrix",
+        lambda: fixture_checkpoint(_cell_matrix(spark, sf_dir)),
+        sf_dir,
+    )
 
-        # checkpoint, not cache (optimization r14): the 3-table join
-        # lineage otherwise rides inside the edges build AND the mllib
-        # pivot consumer's plan
-        _CELL_CACHE[key] = fixture_checkpoint(_cell_matrix(spark, sf_dir))
-    return _CELL_CACHE[key]
+
+def _corr_graph_memo(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, int]:
+    """(nodes, edges, n_nodes) of the thresholded correlation graph (G1).
+    The top-K gene ids are COLLECTED once (K <= {TOP_K} bigints — the
+    reference's cardinality-reduction-first structure, SURVEY §4): the
+    node table becomes a local relation, its size is known without a job,
+    and the pairwise-corr input is an ``isin`` filter over the K literals
+    instead of a broadcast semi-join (optimization r14, guide §1.2 — the
+    semi-join + node-cache materialization cost 3 extra jobs and a
+    BroadcastExchange per sweep; filtering on the identical id set feeds
+    the identical rows into the identical corr() aggregate, so edge values
+    cannot move). Memoized per session+sf_dir."""
+
+    def build() -> tuple[DataFrame, DataFrame, int]:
+        # Without the shared memo the lineitem⋈orders fact-fact join would
+        # run three times inside this builder alone (top-K variance,
+        # pairwise-corr input, node set) plus once more in
+        # mllib_corr_matrix_top.
+        cell = cell_matrix_cached(spark, sf_dir)
+        # ONE job: ranks the genes and materializes the cell memo en route
+        top_vals = [r["g"] for r in _top_genes(cell).collect()]
+        g_type = dict(cell.dtypes)["g"]
+        nodes = spark.createDataFrame([(v,) for v in top_vals], f"node {g_type}")
+        sub = cell.filter(F.col("g").isin(top_vals)) if top_vals else cell.filter(F.lit(False))
+        edges = corr_edges(sub, "g", "s", "v", threshold=CORR_THRESHOLD, min_periods=MIN_PERIODS)
+        # checkpoint, not cache (optimization r14): ~12 graph consumers
+        # embed this memo's lineage (cell matrix join + pairwise corr) in
+        # their own plans otherwise; as a LogicalRDD leaf their plan-build
+        # cost stops scaling with the build chain
+        edges = fixture_checkpoint(
+            edges.select(
+                F.col("g1").alias("src"), F.col("g2").alias("dst"), "r", "weight", "n_samples"
+            )
+        )
+        return nodes, edges, len(top_vals)
+
+    return memo(spark, "graph.corr_graph", build, sf_dir)
 
 
 def _corr_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(nodes, edges) of the thresholded correlation graph (G1). The top-K
-    gene ids are COLLECTED once (K <= {TOP_K} bigints — the reference's
-    cardinality-reduction-first structure, SURVEY §4): the node table
-    becomes a zero-job local relation and the pairwise-corr input is an
-    ``isin`` filter over the K literals instead of a broadcast semi-join
-    (optimization r14, guide §1.2 — the semi-join + node-cache
-    materialization cost 3 extra jobs and a BroadcastExchange per sweep;
-    filtering on the identical id set feeds the identical rows into the
-    identical corr() aggregate, so edge values cannot move). Cached per
-    session+sf_dir."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _GRAPH_CACHE:
-        return _GRAPH_CACHE[key]
-    from drug_target_discovery_spark.caching import fixture_checkpoint
-
-    # Without the shared memo the lineitem⋈orders fact-fact join would run
-    # three times inside this builder alone (top-K variance, semi-joined
-    # pairwise-corr input, node set) plus once more in mllib_corr_matrix_top.
-    cell = cell_matrix_cached(spark, sf_dir)
-    # ONE job: ranks the genes and materializes the cell cache en route
-    top_vals = [r["g"] for r in _top_genes(cell).collect()]
-    g_type = dict(cell.dtypes)["g"]
-    nodes = spark.createDataFrame([(v,) for v in top_vals], f"node {g_type}")
-    sub = cell.filter(F.col("g").isin(top_vals)) if top_vals else cell.filter(F.lit(False))
-    edges = corr_edges(sub, "g", "s", "v", threshold=CORR_THRESHOLD, min_periods=MIN_PERIODS)
-    # checkpoint, not cache (optimization r14): ~12 graph consumers embed
-    # this memo's lineage (cell matrix join + pairwise corr) in their own
-    # plans otherwise; as a LogicalRDD leaf their plan-build cost stops
-    # scaling with the build chain
-    edges = fixture_checkpoint(
-        edges.select(
-            F.col("g1").alias("src"), F.col("g2").alias("dst"), "r", "weight", "n_samples"
-        )
-    )
-    _GRAPH_CACHE[key] = (nodes, edges)
-    _GRAPH_COUNT_CACHE.setdefault(key, {})["n_nodes"] = len(top_vals)
+    """(nodes, edges) of the memoized correlation graph."""
+    nodes, edges, _ = _corr_graph_memo(spark, sf_dir)
     return nodes, edges
 
 
 def _corr_graph_counts(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
-    """(n_nodes, n_edges) of the memoized corr graph. n_nodes is known at
-    build time (the collected top-K list); n_edges is counted once per
-    sweep over the eagerly-checkpointed edge table."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    nodes, edges = _corr_graph(spark, sf_dir)
-    counts = _GRAPH_COUNT_CACHE[key]
-    if "n_edges" not in counts:
-        counts["n_edges"] = edges.count()
-    return counts["n_nodes"], counts["n_edges"]
+    """(n_nodes, n_edges) of the memoized corr graph, one memo per sweep
+    (optimization r14, VERDICT r13 #3): ~8 downstream queries gate
+    driver-twin strategy selection or read the degree normalizer from
+    these instead of running their own count() jobs. n_nodes is known at
+    build time; n_edges counts the eagerly-checkpointed edge table once."""
+
+    def build() -> tuple[int, int]:
+        _, edges, n_nodes = _corr_graph_memo(spark, sf_dir)
+        return n_nodes, edges.count()
+
+    return memo(spark, "graph.corr_graph_counts", build, sf_dir)
 
 
 # --------------------------------------------------------------------------

@@ -8,11 +8,13 @@ against)."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from drug_target_discovery_spark.caching import fixture_checkpoint, memo
 from drug_target_discovery_spark.functions.rounding import rnd
 from drug_target_discovery_spark.plans.pipeline import (
     DrugTargetPipeline,
@@ -44,19 +46,6 @@ def _fixture_dir() -> str:
     return d
 
 
-_RUN_CACHE: dict[str, dict[str, DataFrame]] = {}
-
-from drug_target_discovery_spark.caching import (  # noqa: E402
-    fixture_checkpoint,
-    register_fixture_hook,
-)
-
-register_fixture_hook(_RUN_CACHE.clear)
-
-
-import contextlib  # noqa: E402
-
-
 @contextlib.contextmanager
 def _narrow_shuffle(spark: SparkSession):
     """Right-size shuffle width to the fixture volume for the duration of
@@ -77,9 +66,9 @@ def _narrow_shuffle(spark: SparkSession):
 def _diff_chain(spark: SparkSession) -> dict[str, DataFrame]:
     """Stages 1-4 (parse -> preprocess -> map -> differential), memoized.
     Split from the graph/validation half so the differential query pays
-    only its own stages; the targets query extends the same memo."""
-    key = spark.sparkContext.applicationId
-    if key not in _RUN_CACHE:
+    only its own stages; the targets memo extends this one."""
+
+    def build() -> dict[str, DataFrame]:
         d = _fixture_dir()
         with _narrow_shuffle(spark):
             expr, meta = parse_geo_series_matrix(
@@ -93,15 +82,17 @@ def _diff_chain(spark: SparkSession) -> dict[str, DataFrame]:
             gene_cond = fixture_checkpoint(pipe.attach_condition(gene_long, meta))
             diff = fixture_checkpoint(pipe.differential_expression(gene_cond))
             diff.count()
-        _RUN_CACHE[key] = {"pipe": pipe, "gene_cond": gene_cond, "differential": diff}
-    return _RUN_CACHE[key]
+        return {"pipe": pipe, "gene_cond": gene_cond, "differential": diff}
+
+    return memo(spark, "geo.diff_chain", build)
 
 
 def _full_chain(spark: SparkSession) -> dict[str, DataFrame]:
     """Stages 5-7 (network -> centralities -> validation) on top of the
     stage-1-4 memo."""
-    out = _diff_chain(spark)
-    if "validated_targets" not in out:
+
+    def build() -> dict[str, DataFrame]:
+        out = _diff_chain(spark)
         pipe, gene_cond, diff = out["pipe"], out["gene_cond"], out["differential"]
         with _narrow_shuffle(spark):
             sig = pipe.significant_genes(diff)
@@ -113,15 +104,15 @@ def _full_chain(spark: SparkSession) -> dict[str, DataFrame]:
                 pipe.validate_targets(scores, deterministic_fake_client)
             )
             validated.count()
-        out.update(
-            {
-                "network_nodes": nodes,
-                "network_edges": edges,
-                "target_scores": scores,
-                "validated_targets": validated,
-            }
-        )
-    return out
+        return {
+            **out,
+            "network_nodes": nodes,
+            "network_edges": edges,
+            "target_scores": scores,
+            "validated_targets": validated,
+        }
+
+    return memo(spark, "geo.full_chain", build)
 
 
 from drug_target_discovery_spark.queries._geo_oracles import GEO_ORACLES  # noqa: E402

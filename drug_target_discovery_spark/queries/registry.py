@@ -45,13 +45,10 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 
 # Driver-visit priority. The driver's correctness gate walks the queries()
 # dict in insertion order and stops at 50 entries per round, so coverage is a
-# rotation problem (VERDICT r3 #1). Round 13's 50 is exactly the plan written
-# at r12 close (and VERDICT r12 #1): the 49-query r9-evidence cohort (hits
-# the age-4 ceiling after r13 — includes the as-of/SCD2/funnel tier,
-# kaplan-meier-free round-7 family members refreshed at r9, cusum-free
-# seasonality twins, kmeans_lloyd_clusters, the session-window pair,
-# simhash/winnowing fingerprints, curation_end_to_end) + ann_recall_eval
-# (the stalest r10-cohort query) in slot 50.
+# rotation problem (VERDICT r3 #1). Round 15's 50 is the round-14 plan carried
+# forward one round (the r14 gate re-ran r13's 50 instead): the 49-query
+# r10-evidence cohort (hits the age-4 ceiling after r15) + the stalest
+# r11-cohort query (cusum_changepoint_daily_revenue) in slot 50.
 # ZERO registrations this round: the registry stays at 199/200 under the
 # freeze, so _GATE_PLAN_CHANGED is empty.
 # _PRIORITY_GATE must hold exactly _GATE_WINDOW names; a unit test pins the
@@ -130,114 +127,8 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 _GATE_WINDOW = 50
 
 _PRIORITY_GATE: tuple[str, ...] = (
-    # The full r9-evidence cohort (49) — the oldest driver evidence in the
-    # repo (age 4 at the r13 gate, the staleness ceiling; auc_by_cohort,
-    # the cohort's 50th member, was already refreshed in r12's slot 50).
-    "bigram_pmi_collocations",
-    "boilerplate_ngram_stats",
-    "chi2_status_priority",
-    "conditional_log2",
-    "core_numbers_corr_graph",
-    "count_min_frequency_probe",
-    "cube_order_stats",
-    "curation_end_to_end",
-    "embedding_label_stats",
-    "event_transition_matrix",
-    "grouping_sets_ship_stats",
-    "hybrid_retrieval_rerank",
-    "kmeans_lloyd_clusters",
-    "ks_test_price_drift",
-    "lang_id_stopwords",
-    "large_quantity_orders",
-    "late_sole_supplier_orders",
-    "media_metadata_stats",
-    "missing_census",
-    "na_threshold_filter",
-    "near_dup_groups",
-    "ntile_price_bands",
-    "pagerank_corr_graph",
-    "part_name_analysis",
-    "part_pair_affinity",
-    "pr_curve_sampled",
-    "promo_revenue_share",
-    "psi_price_stability",
-    "quantile_normalize_exact",
-    "repeated_ngram_fraction",
-    "revenue_pareto_deciles",
-    "rolling_hash_fingerprint",
-    "semantic_dedup_prune",
-    "sequence_packing",
-    "session_windows_builtin",
-    "session_windows_gap",
-    "simhash_fingerprints",
-    "simhash_near_dups",
-    "split_contamination_audit",
-    "supplier_composite_score",
-    "text_quality_scores",
-    "tfidf_top_terms",
-    "token_count_stats",
-    "top_variance_parts",
-    "training_shard_assignment",
-    "winnowing_fingerprints",
-    "winsorized_price_stats",
-    "zorder_file_layout",
-    "zscore_by_part",
-    # Slot 50: the stalest r10-cohort query, pulled one round early (no
-    # plan-changed re-gate materialized this round).
-    "ann_recall_eval",
-)
-
-# Gate members whose slot is justified by a NEW or CHANGED plan rather than
-# evidence staleness. tests/test_registry_rotation.py exempts these from the
-# stalest-first ordering check (their evidence, if any, is legitimately
-# fresh) — every other gate member must be at least as stale as everything
-# left outside the gate. Round 13 has ZERO registrations and zero
-# plan-changed re-gates (the registration freeze at 199 holds; all new r13
-# operator work lands in the tests-only lane per capacity-policy rule 3).
-_GATE_PLAN_CHANGED: tuple[str, ...] = ()
-
-# Slots 51+: refresh order for queries that already hold a green driver row
-# — oldest evidence first. After the r13 gate runs, the 49 remaining
-# r10-cohort queries (first block below; ann_recall_eval already refreshed
-# in slot 50 above) are the oldest evidence in the repo and head the
-# round-14 gate (age hits the 4-round ceiling after r14); the r11 and r12
-# cohorts follow.
-#
-# Round-14 gate plan (written at r13 close): the r14 gate is the 49-query
-# r10 cohort (every name in the first block below) + 1 headroom slot:
-#   slot 50 — the stalest r11-cohort query (cusum_changepoint_daily_revenue,
-#     first name in the r11 block below), pulled one round early; if a
-#     plan-changed re-gate materializes in r14 it takes this slot instead.
-# ZERO registrations in r14: the registry is at its 199 freeze; any new
-# registration requires the one-in-one-out delist recorded in the CAPACITY
-# POLICY above.
-#
-# ONE-IN-ONE-OUT DECISION (2026-08-15, VERDICT r9 #6): the tests-only lane
-# operators (exact_substring_dup_stats, ivf_index_refresh_audit,
-# lpa_community_modularity, bpe_top_merges, the gini scalable twin) STAY in
-# the lane permanently; the shortlisted delists (simhash_fingerprints,
-# minhash_signatures) are NOT executed.
-# (2026-08-16 addendum: the round-10 lane additions — cross-source overlap
-# matrix, bigram-LM quality filter, PQ / IVF-PQ ADC recall, Hilbert-vs-
-# Z-order layout, temperature mixture sampling, split-conformal intervals,
-# plus the earlier bpe_encode_stats / ivf_drift_retrain /
-# deterministic_epoch_shuffle — all enter under rule 3 with zero gate
-# slots; the lane gate is one command, tools/lane_check.py, runnable at
-# any scale factor, so the lane's evidence is reproducible without
-# trusting pytest internals.) Rationale: the driver-hash row a
-# swap would buy duplicates evidence the lane already has — each lane
-# operator's pytest oracle cross-check runs the SAME comparison (DuckDB
-# SQL, sorted-column hash, sf0.01) the driver runs — while the delisted
-# queries would LOSE their driver rows outright, and both shortlist members
-# exercise a distinct registered surface (the raw fingerprint/signature
-# tables feed downstream joins users run directly). Net evidence of a swap
-# is negative. Revisit only if a lane operator's plan changes in a way
-# pytest cannot gate (e.g. a nondeterministic form needing the driver's
-# rows-only lane).
-_PRIORITY_REST: tuple[str, ...] = (
-    # r10-green refreshes (round-14 gate head; the round-10 gate was the
-    # 47-query r6 cohort + the two r10 registrations + kaplan_meier in slot
-    # 50; ann_recall_eval moved to the r13 gate's slot 50)
+    # The r10-evidence cohort (49) — the oldest driver evidence in the
+    # repo (age 4 at the r15 gate, the staleness ceiling).
     "benford_first_digit_check",
     "calendar_gap_fill_revenue",
     "calibration_curve_bins",
@@ -287,10 +178,60 @@ _PRIORITY_REST: tuple[str, ...] = (
     "event_burstiness_fano",
     "label_propagation_communities",
     "kaplan_meier_customer_gaps",
+    # Slot 50: the stalest r11-cohort query, pulled one round early (no
+    # plan-changed re-gate materialized this round).
+    "cusum_changepoint_daily_revenue",
+)
+
+# Gate members whose slot is justified by a NEW or CHANGED plan rather than
+# evidence staleness. tests/test_registry_rotation.py exempts these from the
+# stalest-first ordering check (their evidence, if any, is legitimately
+# fresh) — every other gate member must be at least as stale as everything
+# left outside the gate. Round 15 has ZERO registrations and zero
+# plan-changed re-gates (the registration freeze at 199 holds).
+_GATE_PLAN_CHANGED: tuple[str, ...] = ()
+
+# Slots 51+: refresh order for queries that already hold a green driver row
+# — oldest evidence first. After the r15 gate runs, the 49 remaining
+# r11-cohort queries (first block below) are the oldest evidence in the repo
+# and head the round-16 gate (age hits the 4-round ceiling after r16); the
+# r12 and r14 cohorts follow.
+#
+# Round-16 gate plan (written at r15 close): the r16 gate is the 49-query
+# r11 remainder (every name in the first block below) + 1 headroom slot:
+#   slot 50 — the stalest r12-cohort query (first name in the r12 block
+#     below), pulled one round early; if a plan-changed re-gate
+#     materializes in r16 it takes this slot instead.
+# ZERO registrations in r16: the registry is at its 199 freeze; any new
+# registration requires the one-in-one-out delist recorded in the CAPACITY
+# POLICY above.
+#
+# ONE-IN-ONE-OUT DECISION (2026-08-15, VERDICT r9 #6): the tests-only lane
+# operators (exact_substring_dup_stats, ivf_index_refresh_audit,
+# lpa_community_modularity, bpe_top_merges, the gini scalable twin) STAY in
+# the lane permanently; the shortlisted delists (simhash_fingerprints,
+# minhash_signatures) are NOT executed.
+# (2026-08-16 addendum: the round-10 lane additions — cross-source overlap
+# matrix, bigram-LM quality filter, PQ / IVF-PQ ADC recall, Hilbert-vs-
+# Z-order layout, temperature mixture sampling, split-conformal intervals,
+# plus the earlier bpe_encode_stats / ivf_drift_retrain /
+# deterministic_epoch_shuffle — all enter under rule 3 with zero gate
+# slots; the lane gate is one command, tools/lane_check.py, runnable at
+# any scale factor, so the lane's evidence is reproducible without
+# trusting pytest internals.) Rationale: the driver-hash row a
+# swap would buy duplicates evidence the lane already has — each lane
+# operator's pytest oracle cross-check runs the SAME comparison (DuckDB
+# SQL, sorted-column hash, sf0.01) the driver runs — while the delisted
+# queries would LOSE their driver rows outright, and both shortlist members
+# exercise a distinct registered surface (the raw fingerprint/signature
+# tables feed downstream joins users run directly). Net evidence of a swap
+# is negative. Revisit only if a lane operator's plan changes in a way
+# pytest cannot gate (e.g. a nondeterministic form needing the driver's
+# rows-only lane).
+_PRIORITY_REST: tuple[str, ...] = (
     # r11-green refreshes (the round-11 gate: the 49-query r7 cohort +
     # price_band_lookup_binned in slot 50; cusum_changepoint_daily_revenue
-    # heads this block — it is the round-14 gate's slot-50 pull)
-    "cusum_changepoint_daily_revenue",
+    # moved to the r15 gate's slot 50)
     "basket_brand_lift",
     "minhash_jaccard_estimate_error",
     "shingle_novelty_ratio",
@@ -341,7 +282,7 @@ _PRIORITY_REST: tuple[str, ...] = (
     "source_lang_entropy",
     "price_band_lookup_binned",
     # r12-green refreshes (the round-12 gate: the 49-query r8 cohort +
-    # auc_by_cohort in slot 50 — the freshest evidence in the repo)
+    # auc_by_cohort in slot 50)
     "order_value_gini_by_nation",
     "hapax_ttr_by_source",
     "approx_distinct_parts",
@@ -392,12 +333,64 @@ _PRIORITY_REST: tuple[str, ...] = (
     "weighted_systematic_sample",
     "welch_t_by_part",
     "auc_by_cohort",
+    # r14-green refreshes (the round-14 gate re-ran the round-13 plan: the
+    # 49-query r9 cohort + ann_recall_eval in slot 50 — the freshest
+    # evidence in the repo)
+    "bigram_pmi_collocations",
+    "boilerplate_ngram_stats",
+    "chi2_status_priority",
+    "conditional_log2",
+    "core_numbers_corr_graph",
+    "count_min_frequency_probe",
+    "cube_order_stats",
+    "curation_end_to_end",
+    "embedding_label_stats",
+    "event_transition_matrix",
+    "grouping_sets_ship_stats",
+    "hybrid_retrieval_rerank",
+    "kmeans_lloyd_clusters",
+    "ks_test_price_drift",
+    "lang_id_stopwords",
+    "large_quantity_orders",
+    "late_sole_supplier_orders",
+    "media_metadata_stats",
+    "missing_census",
+    "na_threshold_filter",
+    "near_dup_groups",
+    "ntile_price_bands",
+    "pagerank_corr_graph",
+    "part_name_analysis",
+    "part_pair_affinity",
+    "pr_curve_sampled",
+    "promo_revenue_share",
+    "psi_price_stability",
+    "quantile_normalize_exact",
+    "repeated_ngram_fraction",
+    "revenue_pareto_deciles",
+    "rolling_hash_fingerprint",
+    "semantic_dedup_prune",
+    "sequence_packing",
+    "session_windows_builtin",
+    "session_windows_gap",
+    "simhash_fingerprints",
+    "simhash_near_dups",
+    "split_contamination_audit",
+    "supplier_composite_score",
+    "text_quality_scores",
+    "tfidf_top_terms",
+    "token_count_stats",
+    "top_variance_parts",
+    "training_shard_assignment",
+    "winnowing_fingerprints",
+    "winsorized_price_stats",
+    "zorder_file_layout",
+    "zscore_by_part",
+    "ann_recall_eval",
 )
 
-# (The r12-close "round-13 gate plan" comment was executed this round — the
-# r9 cohort moved into _PRIORITY_GATE, ann_recall_eval in slot 50, zero
-# registrations — and is superseded by the round-14 plan comment above
-# _PRIORITY_REST.)
+# (The r13-close "round-14 gate plan" is executed at r15 — the r14 gate
+# re-ran the round-13 plan — and is superseded by the round-16 plan
+# comment above _PRIORITY_REST.)
 _PRIORITY: tuple[str, ...] = _PRIORITY_GATE + _PRIORITY_REST
 
 

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from drug_target_discovery_spark.caching import fixture_cache, fixture_checkpoint, memo
 from drug_target_discovery_spark.functions.rounding import rnd, rnd_sql
 from drug_target_discovery_spark.queries.registry import register
 from drug_target_discovery_spark.sources.tables import load_table
@@ -48,28 +49,17 @@ def _cosine_expr() -> F.Column:
 # ranked set feeds ann_ivf_bucketed_topk and ann_recall_eval's candidate
 # side. Each memo holds the Q·k-row RESULT (bounded by construction), so
 # the scoring pass runs once per sweep instead of once per consumer.
-_RANKED_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-from drug_target_discovery_spark.caching import (  # noqa: E402
-    register_fixture_hook as _reg_hook,
-)
-
-_reg_hook(_RANKED_CACHE.clear)
-
-
 def _ranked_cached(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    if key not in _RANKED_CACHE:
-        from drug_target_discovery_spark.caching import fixture_checkpoint
-
+    def build() -> DataFrame:
         v = _emb_double(load_table(spark, sf_dir, "embeddings")).select(
             "vec_id", "emb"
         )
         fn = exact_cosine_ranked if kind == "exact" else ivf_cosine_ranked
         # checkpoint, not cache: the O(Q*N) scoring lineage otherwise rides
         # inside every consumer plan (optimization r14)
-        _RANKED_CACHE[key] = fixture_checkpoint(fn(v))
-    return _RANKED_CACHE[key]
+        return fixture_checkpoint(fn(v))
+
+    return memo(spark, "similarity.ranked", build, sf_dir, kind)
 
 
 def exact_cosine_ranked(v: DataFrame) -> DataFrame:
@@ -404,13 +394,6 @@ def centroid_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sweep-scoped E-step memo: (vec_id, label, emb, clabel, cosine) with clabel
 # the nearest label-seeded centroid. Consumed by centroid_assignment and
 # semantic_dedup_prune.
-_ESTEP_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-from drug_target_discovery_spark.caching import register_fixture_hook  # noqa: E402
-
-register_fixture_hook(_ESTEP_CACHE.clear)
-
-
 def _estep_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The E-step BUILD plan (centroids broadcast into the cross join +
     per-vector argmax window) — exposed un-memoized so the plan-shape test
@@ -451,12 +434,12 @@ def _estep_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _estep_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ESTEP_CACHE:
-        from drug_target_discovery_spark.caching import fixture_checkpoint
-
-        _ESTEP_CACHE[key] = fixture_checkpoint(_estep_plan(spark, sf_dir))
-    return _ESTEP_CACHE[key]
+    return memo(
+        spark,
+        "similarity.estep",
+        lambda: fixture_checkpoint(_estep_plan(spark, sf_dir)),
+        sf_dir,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -585,23 +568,16 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # covariance cells are consumed by two queries (the cell table and the PCA
 # eigendecomposition) — sweep-scoped memo like the LSH signatures
-_COV_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-from drug_target_discovery_spark.caching import register_fixture_hook  # noqa: E402
-
-register_fixture_hook(_COV_CACHE.clear)
-
-
 def _covariance_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unrounded upper-triangle covariance cells (i, j, n, _cov) — the
     join-free outer-product aggregation described in embedding_covariance.
     Memoized per (application, sf_dir); the cell table is D^2-bounded."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _COV_CACHE:
-        from drug_target_discovery_spark.caching import fixture_checkpoint
-
-        _COV_CACHE[key] = fixture_checkpoint(_covariance_plan(spark, sf_dir))
-    return _COV_CACHE[key]
+    return memo(
+        spark,
+        "similarity.covariance",
+        lambda: fixture_checkpoint(_covariance_plan(spark, sf_dir)),
+        sf_dir,
+    )
 
 
 def _covariance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -856,24 +832,18 @@ _KM_ITERS = 5
 # Sweep-scoped Lloyd memo: the trained model (quantized vectors + final
 # centroids) is shared by kmeans_lloyd_clusters and the silhouette
 # evaluation query, so the 5-round training loop runs once per sweep.
-_LLOYD_CACHE: dict[tuple[str, str], tuple[DataFrame, list]] = {}
-
-register_fixture_hook(_LLOYD_CACHE.clear)
-
-
 def _lloyd_cached(spark: SparkSession, sf_dir: str):
-    from drug_target_discovery_spark.caching import fixture_cache
     from drug_target_discovery_spark.operators.kmeans import (
         lloyd_iterations,
         quantize_embeddings,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LLOYD_CACHE:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         vq = fixture_cache(quantize_embeddings(emb.select("vec_id", "embedding")))
-        _LLOYD_CACHE[key] = (vq, lloyd_iterations(vq, _KM_K, _KM_ITERS))
-    return _LLOYD_CACHE[key]
+        return vq, lloyd_iterations(vq, _KM_K, _KM_ITERS)
+
+    return memo(spark, "similarity.lloyd", build, sf_dir)
 
 
 

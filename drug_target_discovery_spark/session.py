@@ -10,6 +10,9 @@ chosen to also be correct on a 1000-executor cluster:
 - UTC session timezone — deterministic event-time semantics regardless of host.
 - shuffle partitions default to the local core count; on a real cluster this
   would be set to ~2-3x total cores (or left to AQE's initialPartitionNum).
+- driver heap defaults to about half the host's memory (``MemTotal``), so a
+  query that outgrows it spills instead of getting the JVM OOM-killed;
+  ``$SPARK_DRIVER_MEMORY`` overrides it.
 """
 
 from __future__ import annotations
@@ -17,6 +20,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """About half of ``MemTotal``; Spark's own 1g where it is unreadable."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"  # kB / 2 -> MiB
+    except OSError:
+        pass
+    return "1g"
 
 
 def get_spark(
@@ -50,7 +65,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # vectorized parquet reader + pushdown are on by default; pin anyway
         .config("spark.sql.parquet.filterPushdown", "true")

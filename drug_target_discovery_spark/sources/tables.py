@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from drug_target_discovery_spark.caching import memo
+
 TABLES = [
     "region",
     "nation",
@@ -48,8 +50,7 @@ _NANO_TS_COLS = {
 # plan is immutable and session-bound, so one build per (session, dir,
 # table) serves every query — this memoizes the LAZY DataFrame only;
 # every execution still reads the parquet from disk (no data or result
-# caching; bench/oracle runs compute from the inputs unchanged — verified
-# by the unchanged driver hashes). Keyed on id(session)+applicationId so
+# caching). Keyed on id(session) (caching.memo adds the applicationId) so
 # a new session (or restarted context) rebuilds, PLUS the parquet path's
 # (mtime_ns, size): `spark.read.parquet` captures the file listing at plan
 # build, so a memoized plan over a REWRITTEN path would reference deleted
@@ -58,12 +59,6 @@ _NANO_TS_COLS = {
 # while still skipping the ~0.14s JVM listing+footer read on the immutable
 # bench tables. Cleared with the sweep fixtures so long test sessions
 # don't pin dead plan objects.
-_PLAN_MEMO: dict[tuple, DataFrame] = {}
-_HOOKED = False
-
-
-def _clear_plan_memo() -> None:
-    _PLAN_MEMO.clear()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -81,20 +76,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         pass  # locked-down session: proceed with its settings
     try:
         st = os.stat(f"{sf_dir}/{name}.parquet")
-        key = (
-            id(spark),
-            spark.sparkContext.applicationId,
-            sf_dir,
-            name,
-            st.st_mtime_ns,
-            st.st_size,
-        )
-    except Exception:  # context teardown / missing path: fall through uncached
-        key = None
-    if key is not None:
-        memo = _PLAN_MEMO.get(key)
-        if memo is not None:
-            return memo
+    except OSError:  # missing path: fall through uncached
+        return _scan(spark, sf_dir, name)
+    return memo(
+        spark,
+        "table_plan",
+        lambda: _scan(spark, sf_dir, name),
+        id(spark),
+        sf_dir,
+        name,
+        st.st_mtime_ns,
+        st.st_size,
+    )
+
+
+def _scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     for col in _NANO_TS_COLS.get(name, []):
         if col not in df.columns:
@@ -109,7 +105,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # naive micros parquet: restore TimestampType for downstream
             # epoch-seconds casts, which Spark forbids on TIMESTAMP_NTZ.
             # Under a UTC session tz the cast is a pure retag (same wall
-            # values, same epoch DuckDB computes). If the conf.set above was
+            # values, same epoch DuckDB computes). If load_table's conf.set was
             # rejected (locked-down session) and the session tz is NOT UTC,
             # a bare cast shifts epochs by the host offset — and offset
             # COMPENSATION (from/to_utc_timestamp) is wrong by the DST delta
@@ -134,14 +130,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                     )
                 )
             df = df.withColumn(col, ts)
-    if key is not None:
-        global _HOOKED
-        if not _HOOKED:
-            from drug_target_discovery_spark.caching import register_fixture_hook
-
-            register_fixture_hook(_clear_plan_memo)
-            _HOOKED = True
-        _PLAN_MEMO[key] = df
     return df
 
 

@@ -6,7 +6,12 @@ the check is independent of other test modules' fixtures."""
 
 from pyspark.sql import functions as F
 
-from drug_target_discovery_spark.caching import release_caches, scoped_cache
+from drug_target_discovery_spark import caching
+from drug_target_discovery_spark.caching import (
+    fixture_checkpoint,
+    release_caches,
+    scoped_cache,
+)
 from drug_target_discovery_spark.queries.registry import all_queries
 
 SF = "/root/testdata/sf0.001"
@@ -31,13 +36,20 @@ def _persistent_ids(spark) -> set[int]:
 
 class TestCacheLifecycle:
     def test_scoped_cache_releases(self, spark):
-        before = _persistent_ids(spark)
-        df = scoped_cache(spark.range(100).select(F.col("id") * 2))
-        df.count()
-        assert len(_persistent_ids(spark)) > len(before)
-        released = release_caches()
-        assert released >= 1
-        assert _persistent_ids(spark) <= before
+        """Each tier's release frees its storage for real and counts only
+        what it freed: a scoped cache on ``release_caches()``, a
+        checkpointed fixture (which ``DataFrame.unpersist`` cannot free) on
+        ``release_caches(fixtures=True)``."""
+        release_caches(fixtures=True)
+        for persist, fixtures in ((scoped_cache, False), (fixture_checkpoint, True)):
+            before = _persistent_ids(spark)
+            df = persist(spark.range(100).select(F.col("id") * 2))
+            df.count()
+            assert len(_persistent_ids(spark)) > len(before)
+            released = release_caches(fixtures=fixtures)
+            assert released == 1
+            assert _persistent_ids(spark) <= before
+            assert release_caches(fixtures=fixtures) == 0  # nothing left
 
     def test_registry_sweep_leaves_no_new_persistent_rdds(self, spark):
         before = _persistent_ids(spark)
@@ -88,7 +100,7 @@ class TestLoadTablePlanMemo:
 
         a = tables.load_table(spark, SF, "orders")
         release_caches(fixtures=True)
-        assert not tables._PLAN_MEMO
+        assert not caching._MEMO
         b = tables.load_table(spark, SF, "orders")
         assert a is not b  # rebuilt after release
         assert a.schema == b.schema

@@ -81,17 +81,18 @@ class TestLloydMemo:
         """kmeans_lloyd_clusters and the silhouette rider share ONE
         training run per sweep; releasing fixtures clears the memo so a
         later sweep retrains cleanly."""
+        from drug_target_discovery_spark import caching
         from drug_target_discovery_spark.caching import release_caches
-        from drug_target_discovery_spark.queries.similarity import (
-            _LLOYD_CACHE,
-            _lloyd_cached,
-        )
+        from drug_target_discovery_spark.queries.similarity import _lloyd_cached
+
+        def lloyd_memos():
+            return [k for k in caching._MEMO if k[0] == "similarity.lloyd"]
 
         release_caches(fixtures=True)
-        assert not _LLOYD_CACHE
+        assert not lloyd_memos()
         a = _lloyd_cached(spark, SF)
         b = _lloyd_cached(spark, SF)
         assert a is b  # second consumer reuses the trained model
-        assert len(_LLOYD_CACHE) == 1
+        assert len(lloyd_memos()) == 1
         release_caches(fixtures=True)
-        assert not _LLOYD_CACHE  # hook cleared: next sweep retrains
+        assert not lloyd_memos()  # memo cleared: next sweep retrains

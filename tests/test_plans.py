@@ -15,6 +15,20 @@ def plan_of(spark, name: str) -> str:
     return q.fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
 
 
+def reads_memo(spark, name: str, memo) -> bool:
+    """True when query ``name``'s optimized plan has a LogicalRDD leaf over
+    the checkpointed ``memo`` frame's backing RDD (the consumer reads the
+    memo instead of rebuilding it)."""
+    memo_rdd = memo._jdf.queryExecution().analyzed().rdd().id()
+    plan = all_queries()[name].fn(spark, SF)._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    return any(
+        leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+        and leaves.apply(i).rdd().id() == memo_rdd
+        for i in range(leaves.size())
+    )
+
+
 class TestPlanShape:
     def test_filter_pushdown_reaches_scan(self, spark):
         plan = plan_of(spark, "pricing_summary")
@@ -150,12 +164,16 @@ class TestPlanShape:
         # df + corpus stats reach the tf table via broadcast; no exchange
         # is keyed on the raw text payload. Asserted on the memo's BUILD
         # plan — the consumer plan is a checkpoint leaf since r14.
-        from drug_target_discovery_spark.queries.corpusstats import _bm25_plan
+        from drug_target_discovery_spark.queries.corpusstats import (
+            _bm25_plan,
+            _bm25_scored,
+        )
 
         plan = _bm25_plan(spark, SF)._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
         for part in plan.split("Exchange hashpartitioning")[1:]:
             assert "text" not in part.split("\n")[0], plan
+        assert reads_memo(spark, "bm25_keyword_search", _bm25_scored(spark, SF))
 
     def test_interval_join_is_equi_with_range_filter(self, spark):
         # the attribution join plans as a hash/sort-merge EQUI join on the
@@ -192,12 +210,16 @@ class TestPlanShape:
         # (numpy GEMM per cluster), not a relational self-join of members
         # centroid broadcast asserted on the E-step memo's BUILD plan —
         # the consumer plan is a checkpoint leaf since r14
-        from drug_target_discovery_spark.queries.similarity import _estep_plan
+        from drug_target_discovery_spark.queries.similarity import (
+            _estep_cached,
+            _estep_plan,
+        )
 
         build = _estep_plan(spark, SF)._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastNestedLoopJoin" in build, build
         plan = plan_of(spark, "semantic_dedup_prune")
         assert "FlatMapGroupsInPandas" in plan, plan
+        assert reads_memo(spark, "semantic_dedup_prune", _estep_cached(spark, SF))
 
     def test_curation_end_to_end_scan_discipline(self, spark):
         # The composed pipeline must not re-read the corpus per tier: the
