@@ -1,12 +1,14 @@
 """Iterative graph algorithms beyond centralities (SURVEY §2.7 G6 [EXT]):
 connected components and PageRank as driver-looped DataFrame programs —
 the same machinery as eigenvector centrality (join-aggregate per iteration,
-per-iteration localCheckpoint to cut lineage; see _cc_distributed)."""
+each generation a lineage cut; see caching.generations)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from drug_target_discovery_spark.caching import generations
 
 # Driver-twin admission policy (optimization r14, VERDICT r13 #4/#6 — one
 # documented constant instead of six per-function literals so a future edit
@@ -17,12 +19,12 @@ from pyspark.sql import functions as F
 # eigenvector_centrality in graph/centrality.py admits the exact driver
 # twin only below DRIVER_TWIN_THRESHOLD. The gate bounds what the driver
 # ever collect()s: at most ~1M post-aggregation edge/node rows (two ints
-# each, tens of MB as Python objects) — comfortably inside the 48 GB
-# driver of session.py and a rounding error on any production driver. On
-# the nodes=None paths the gate is DRIVER_TWIN_THRESHOLD // 2 EDGES, so
-# the implied node bound (<= 2x edges) is the same constant. Above the
-# gate the distributed plan runs unchanged; below it the driver twin is
-# integer-exact parity-tested against the distributed path
+# each, tens of MB as Python objects) — a small share of the driver heap
+# session.py sizes from the host and a rounding error on any production
+# driver. On the nodes=None paths the gate is DRIVER_TWIN_THRESHOLD // 2
+# EDGES, so the implied node bound (<= 2x edges) is the same constant.
+# Above the gate the distributed plan runs unchanged; below it the driver
+# twin is integer-exact parity-tested against the distributed path
 # (tests/test_graph_algorithms.py, tests/test_graph.py). The two
 # deliberately different constants elsewhere are NOT twin gates:
 # betweenness/closeness/harmonic centrality's 512 picks serial-Brandes vs
@@ -116,7 +118,10 @@ def _union_find(edge_rows, node_list, spark, node_type="bigint") -> DataFrame:
             parent[b] = a
     comp = {v: find(v) for v in node_list}
     pdf = pd.DataFrame({"node": node_list, "component": [comp[v] for v in node_list]})
-    return spark.createDataFrame(pdf)
+    # createDataFrame infers bigint for int ids; keep the input's type
+    return spark.createDataFrame(pdf).select(
+        *(F.col(c).cast(node_type) for c in ("node", "component"))
+    )
 
 
 def _cc_distributed(
@@ -127,43 +132,40 @@ def _cc_distributed(
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .cache()
     )
-    labels = nodes.select("node", F.col("node").alias("component")).cache()
-    labels.count()
-    for it in range(max_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         nbr_min = (
             sym.join(labels, sym["src"] == labels["node"])
             .groupBy(F.col("dst").alias("n"))
             .agg(F.min("component").alias("nbr_component"))
         )
-        new_labels = (
-            labels.join(nbr_min, labels["node"] == F.col("n"), "left")
-            .select(
-                "node",
-                F.least(
-                    "component", F.coalesce("nbr_component", F.col("component"))
-                ).alias("component"),
-            )
+        return labels.join(nbr_min, labels["node"] == F.col("n"), "left").select(
+            "node",
+            F.least(
+                "component", F.coalesce("nbr_component", F.col("component"))
+            ).alias("component"),
         )
-        # every-iteration lineage truncation — see centrality.py: the
-        # cached-plan tree doubles per iteration otherwise (x + neighbor
-        # branches), making plan-description generation exponential
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("a")
-            .join(labels.alias("b"), "node")
-            .filter(F.col("a.component") != F.col("b.component"))
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    sym.unpersist()
-    from drug_target_discovery_spark.caching import track
 
-    track(labels)  # surviving generation, released by the harness loop
+    labels, _ = generations(
+        nodes.select("node", F.col("node").alias("component")),
+        step,
+        max_iter,
+        lambda new, old: _unchanged(new, old, "component"),
+    )
+    sym.unpersist()
     return labels
+
+
+def _unchanged(new: DataFrame, old: DataFrame, col: str) -> bool:
+    """Fixpoint test of the integer-label loops: no node's ``col`` moved."""
+    return (
+        new.alias("a")
+        .join(old.alias("b"), "node")
+        .filter(F.col(f"a.{col}") != F.col(f"b.{col}"))
+        .limit(1)
+        .count()
+        == 0
+    )
 
 
 def pagerank(
@@ -214,7 +216,9 @@ def _pagerank_driver(
         if np.abs(pr - prev).sum() < n * tol:
             break
     pdf = pd.DataFrame({"node": node_list, "pagerank": pr})
-    return spark.createDataFrame(pdf)
+    # createDataFrame infers bigint for int ids; keep the input's type
+    node_type = dict(nodes.dtypes)["node"]
+    return spark.createDataFrame(pdf).withColumn("node", F.col("node").cast(node_type))
 
 
 def _pagerank_distributed(
@@ -231,9 +235,8 @@ def _pagerank_distributed(
     )
     n = nodes.count()
     outdeg = sym.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("pr")).cache()
-    ranks.count()
-    for it in range(max_iter):
+
+    def step(ranks: DataFrame) -> DataFrame:
         with_deg = ranks.join(outdeg, "node", "left")
         dangling = (
             with_deg.filter(F.col("deg").isNull()).agg(F.sum("pr").alias("d")).collect()[0]["d"]
@@ -245,7 +248,7 @@ def _pagerank_distributed(
             .agg(F.sum(F.col("pr") / F.col("deg")).alias("mass"))
         )
         base = (1.0 - damping) / n + damping * dangling / n
-        new_ranks = (
+        return (
             ranks.select("node")
             .join(contrib, "node", "left")
             .select(
@@ -253,22 +256,20 @@ def _pagerank_distributed(
                 (F.lit(base) + F.lit(damping) * F.coalesce("mass", F.lit(0.0))).alias("pr"),
             )
         )
-        # every-iteration lineage truncation — see centrality.py
-        new_ranks = new_ranks.localCheckpoint(eager=True)
+
+    def converged(new: DataFrame, old: DataFrame) -> bool:
         delta = (
-            new_ranks.alias("a")
-            .join(ranks.alias("b"), "node")
+            new.alias("a")
+            .join(old.alias("b"), "node")
             .agg(F.sum(F.abs(F.col("a.pr") - F.col("b.pr"))).alias("d"))
             .collect()[0]["d"]
         )
-        ranks.unpersist()
-        ranks = new_ranks
-        if delta < n * tol:
-            break
-    sym.unpersist()
-    from drug_target_discovery_spark.caching import track
+        return delta < n * tol
 
-    track(ranks)  # surviving generation, released by the harness loop
+    ranks, _ = generations(
+        nodes.select("node", F.lit(1.0 / n).alias("pr")), step, max_iter, converged
+    )
+    sym.unpersist()
     return ranks.select("node", F.col("pr").alias("pagerank"))
 
 
@@ -292,8 +293,7 @@ def core_numbers(
     c_v = deg(v) converges to the core number, where H is the h-index) —
     per iteration ONE join-aggregate whose shuffle is O(E), monotone
     non-increasing, O(graph-dependent, typically << diameter) rounds,
-    lineage cut by localCheckpoint(eager=True) EVERY iteration (the
-    cached-plan tree otherwise doubles per round; see _cc_distributed).
+    every generation a lineage cut (caching.generations).
 
     ``nodes=None`` declares node set == edge endpoints (candidate-pair
     graphs); isolated nodes then don't exist and every core >= 1.
@@ -390,12 +390,8 @@ def _core_distributed(
     deg = sym.groupBy(F.col("dst").alias("node")).agg(
         F.count(F.lit(1)).cast("int").alias("core")
     )
-    labels = (
-        nodes.join(deg, "node", "left")
-        .select("node", F.coalesce("core", F.lit(0)).alias("core"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         # h-index of the neighbor core values: sort desc per node, then
         # h = max over ranks r of min(r, value_r) — one window + one agg,
         # both riding the same hashpartitioning(n) exchange
@@ -408,30 +404,19 @@ def _core_distributed(
             .groupBy("n")
             .agg(F.max(F.least(F.col("r"), F.col("c"))).cast("int").alias("h"))
         )
-        new_labels = (
-            labels.join(h, labels["node"] == F.col("n"), "left")
-            .select(
-                "node",
-                F.least(
-                    "core", F.coalesce("h", F.lit(0))
-                ).alias("core"),
-            )
-            .localCheckpoint(eager=True)  # every-iteration lineage cut
+        return labels.join(h, labels["node"] == F.col("n"), "left").select(
+            "node", F.least("core", F.coalesce("h", F.lit(0))).alias("core")
         )
-        changed = (
-            new_labels.alias("a")
-            .join(labels.alias("b"), "node")
-            .filter(F.col("a.core") != F.col("b.core"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    sym.unpersist()
-    from drug_target_discovery_spark.caching import track
 
-    track(labels)
+    labels, _ = generations(
+        nodes.join(deg, "node", "left").select(
+            "node", F.coalesce("core", F.lit(0)).alias("core")
+        ),
+        step,
+        max_iter,
+        lambda new, old: _unchanged(new, old, "core"),
+    )
+    sym.unpersist()
     return labels
 
 
@@ -456,8 +441,8 @@ def label_propagation(
     the label table (keyed on the edge source) and one two-level
     aggregate — (dst, label) counts with map-side partials, then the
     argmax-with-min-tie-break as a single max(struct(cnt, -label))
-    aggregate, no window — with per-iteration localCheckpoint lineage
-    truncation like _cc_distributed. Labels stay node ids (BIGINT), so
+    aggregate, no window — each generation a lineage cut, like
+    _cc_distributed. Labels stay node ids (BIGINT), so
     the tie-break negation is exact.
 
     Edge semantics are SET semantics (ADVICE r8): the symmetric edge
@@ -478,7 +463,7 @@ def label_propagation(
     connected_components above): below ``driver_threshold // 2`` EDGES
     (nodes <= 2x edges) the ``n_iter`` synchronous rounds run driver-side
     over adjacency sets — the distributed loop costs ~8 tiny Spark jobs
-    per round (join + two-level aggregate + localCheckpoint), pure
+    per round (join + two-level aggregate + checkpoint), pure
     scheduler latency on a candidate-pair graph of a few hundred edges
     (measured 3.8s/32 jobs -> ~0.4s/3 jobs at sf0.1). Exact-parity with
     the distributed path is pinned in tests/test_graph_algorithms.py
@@ -511,9 +496,8 @@ def label_propagation(
         return out
     if nodes is None:
         nodes = sym.select(F.col("src").alias("node")).distinct()
-    labels = nodes.select("node", F.col("node").alias("community")).cache()
-    labels.count()
-    for _ in range(n_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         votes = (
             sym.join(labels, sym["src"] == labels["node"])
             .groupBy(F.col("dst").alias("n"), F.col("community").alias("lbl"))
@@ -525,22 +509,15 @@ def label_propagation(
                 "m"
             )
         )
-        new_labels = (
-            labels.join(winner, labels["node"] == F.col("n"), "left")
-            .select(
-                "node",
-                F.coalesce((-F.col("m.neg")), F.col("community")).alias(
-                    "community"
-                ),
-            )
-            .localCheckpoint(eager=True)
+        return labels.join(winner, labels["node"] == F.col("n"), "left").select(
+            "node",
+            F.coalesce((-F.col("m.neg")), F.col("community")).alias("community"),
         )
-        labels.unpersist()
-        labels = new_labels
-    sym.unpersist()
-    from drug_target_discovery_spark.caching import track
 
-    track(labels)
+    labels, _ = generations(
+        nodes.select("node", F.col("node").alias("community")), step, n_iter
+    )
+    sym.unpersist()
     return labels
 
 

@@ -27,6 +27,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from drug_target_discovery_spark.caching import generations
+from drug_target_discovery_spark.functions.stats import composite_score, minmax_scale
+
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
     """(src,dst) once per undirected edge -> both directions."""
@@ -73,9 +76,8 @@ def eigenvector_centrality(
       reference's top-K construction): collect the edge list once and run
       the iteration in numpy on the driver. A 10^6-node vector is ~8 MB;
       per-iteration Spark-job latency would dominate by orders of magnitude.
-    - **huge graph**: iterative join-aggregate over cached DataFrames with
-      per-iteration localCheckpoint to cut lineage (SURVEY §4). One shuffle per
-      iteration.
+    - **huge graph**: iterative join-aggregate, each generation a lineage
+      cut (caching.generations, SURVEY §4). One shuffle per iteration.
 
     ``driver_threshold`` defaults to the module-wide driver-twin policy
     constant (graph/algorithms.py DRIVER_TWIN_THRESHOLD); ``n_nodes`` is
@@ -97,23 +99,14 @@ def eigenvector_centrality(
     return _eigenvector_distributed(edges, nodes, max_iter, tol)
 
 
-def _eigenvector_driver(
-    edges: DataFrame, nodes: DataFrame, n: int, max_iter: int, tol: float
-) -> DataFrame:
-    """numpy power iteration mirroring networkx exactly: x' = x + A·x,
-    L2 normalize, stop when sum|x' - x| < n*tol."""
+def _power_iteration(pairs: list, n: int, max_iter: int, tol: float):
+    """numpy power iteration mirroring networkx exactly over n > 0 nodes
+    and undirected index ``pairs``: x' = x + A·x, L2 normalize, stop when
+    sum|x' - x| < n*tol; raises when ``max_iter`` runs out first."""
     import numpy as np
 
-    spark = edges.sparkSession
-    node_list = [r["node"] for r in nodes.select("node").collect()]
-    idx = {v: i for i, v in enumerate(node_list)}
-    e = [
-        (idx[r["src"]], idx[r["dst"]])
-        for r in edges.select("src", "dst").collect()
-        if r["src"] in idx and r["dst"] in idx
-    ]
-    src = np.array([p[0] for p in e], dtype=np.int64)
-    dst = np.array([p[1] for p in e], dtype=np.int64)
+    src = np.array([p[0] for p in pairs], dtype=np.int64)
+    dst = np.array([p[1] for p in pairs], dtype=np.int64)
     x = np.full(n, 1.0 / n)
     for _ in range(max_iter):
         xlast = x
@@ -124,13 +117,28 @@ def _eigenvector_driver(
         norm = float(np.sqrt((x * x).sum())) or 1.0
         x = x / norm
         if float(np.abs(x - xlast).sum()) < n * tol:
-            break
-    else:
-        raise RuntimeError(f"eigenvector centrality failed to converge in {max_iter} iterations")
+            return x
+    raise RuntimeError(f"eigenvector centrality failed to converge in {max_iter} iterations")
+
+
+def _eigenvector_driver(
+    edges: DataFrame, nodes: DataFrame, n: int, max_iter: int, tol: float
+) -> DataFrame:
+    """The power iteration on the collected edge list."""
+    node_list = [r["node"] for r in nodes.select("node").collect()]
+    idx = {v: i for i, v in enumerate(node_list)}
+    pairs = [
+        (idx[r["src"]], idx[r["dst"]])
+        for r in edges.select("src", "dst").collect()
+        if r["src"] in idx and r["dst"] in idx
+    ]
+    x = _power_iteration(pairs, n, max_iter, tol)
     pdf = pd.DataFrame({"node": node_list, "eigenvector_centrality": x})
-    out = spark.createDataFrame(pdf)
-    # preserve the node column's original type (createDataFrame may widen)
-    return out
+    # createDataFrame infers bigint for int ids; keep the input's type
+    node_type = dict(nodes.dtypes)["node"]
+    return edges.sparkSession.createDataFrame(pdf).withColumn(
+        "node", F.col("node").cast(node_type)
+    )
 
 
 def _eigenvector_distributed(
@@ -142,10 +150,8 @@ def _eigenvector_distributed(
     """Join-aggregate power iteration for graphs too large to collect."""
     sym = _symmetrize(edges).cache()
     n = nodes.count()
-    x = nodes.select("node", F.lit(1.0 / n).alias("x")).cache()
-    x.count()
 
-    for it in range(max_iter):
+    def step(x: DataFrame) -> DataFrame:
         contrib = (
             sym.join(x, sym["src"] == x["node"])
             .groupBy(F.col("dst").alias("node"))
@@ -158,33 +164,23 @@ def _eigenvector_distributed(
         )
         norm = x_new.agg(F.sqrt(F.sum(F.col("x") * F.col("x"))).alias("n")).collect()[0]["n"]
         norm = norm if norm and norm > 0 else 1.0
-        x_new = x_new.select("node", (F.col("x") / F.lit(norm)).alias("x"))
-        # Truncate lineage EVERY iteration. cache() is not enough: each
-        # generation's plan embeds the previous generation's cached plan
-        # TWICE (the x branch and the contrib branch), so the analyzed tree
-        # doubles per iteration and Spark's per-action plan-description
-        # (generateTreeString) goes exponential — measured dominating the
-        # 50K-node probe's driver CPU. localCheckpoint resets the plan to a
-        # LogicalRDD scan at the cost of one materialization we were paying
-        # via cache() anyway. (On a cluster with executor loss, swap for
-        # reliable checkpoint() with a checkpoint dir.)
-        x_new = x_new.localCheckpoint(eager=True)
+        return x_new.select("node", (F.col("x") / F.lit(norm)).alias("x"))
+
+    def converged(new: DataFrame, old: DataFrame) -> bool:
         delta = (
-            x_new.alias("a")
-            .join(x.alias("b"), "node")
+            new.alias("a")
+            .join(old.alias("b"), "node")
             .agg(F.sum(F.abs(F.col("a.x") - F.col("b.x"))).alias("d"))
             .collect()[0]["d"]
         )
-        x.unpersist()
-        x = x_new
-        if delta < n * tol:
-            break
-    else:
-        raise RuntimeError(f"eigenvector centrality failed to converge in {max_iter} iterations")
-    sym.unpersist()
-    from drug_target_discovery_spark.caching import track
+        return delta < n * tol
 
-    track(x)  # surviving generation stays cached for the consumer's action
+    x, ok = generations(
+        nodes.select("node", F.lit(1.0 / n).alias("x")), step, max_iter, converged
+    )
+    sym.unpersist()
+    if not ok:
+        raise RuntimeError(f"eigenvector centrality failed to converge in {max_iter} iterations")
     return x.select("node", F.col("x").alias("eigenvector_centrality"))
 
 
@@ -259,22 +255,7 @@ def centralities_fused_driver(
     # degree: deg / (n-1)
     deg = np.array([len(adj[v]) for v in node_list], dtype=np.float64)
     degree = deg / float(max(n - 1, 1))
-    # eigenvector: power iteration on (I + A), L2 normalized (nx parity)
-    src = np.array([p[0] for p in pairs], dtype=np.int64)
-    dst = np.array([p[1] for p in pairs], dtype=np.int64)
-    x = np.full(n, 1.0 / n) if n else np.zeros(0)
-    for _ in range(1000):
-        xlast = x
-        ax = np.zeros(n)
-        np.add.at(ax, dst, xlast[src])
-        np.add.at(ax, src, xlast[dst])
-        x = xlast + ax
-        norm = float(np.sqrt((x * x).sum())) or 1.0
-        x = x / norm
-        if float(np.abs(x - xlast).sum()) < n * 1.0e-6:
-            break
-    else:
-        raise RuntimeError("eigenvector centrality failed to converge in 1000 iterations")
+    x = _power_iteration(pairs, n, 1000, 1.0e-6)
     # betweenness: exact Brandes over every source
     bc = dict.fromkeys(node_list, 0.0)
     for s in node_list:
@@ -292,6 +273,48 @@ def centralities_fused_driver(
             "betweenness_centrality": betweenness,
             "eigenvector_centrality": x,
         }
+    )
+
+
+# target_scores takes the fused driver path up to this many nodes: the
+# fused path runs exact Brandes serially (O(V·E) in pure Python), so the
+# gate sits at a few thousand nodes, far below DRIVER_TWIN_THRESHOLD.
+FUSED_DRIVER_MAX_NODES = 2_000
+
+
+def target_scores(
+    edges: DataFrame, nodes: DataFrame, n_nodes: int | None = None
+) -> DataFrame:
+    """The reference's network scoring (pipeline2.py:722-792), unordered
+    and unrounded: all three centralities -> min-max scale -> composite =
+    their mean. Returns (node, degree_centrality, betweenness_centrality,
+    eigenvector_centrality, composite_score).
+
+    Small graphs (the reference's top-K construction bounds nodes at
+    n_top_genes<=500) take the fused driver path: one edge-list collect,
+    all three centralities and the min-max in numpy/pure-Python, one
+    createDataFrame — vs ~20 tiny Spark jobs for the distributed program.
+    Past FUSED_DRIVER_MAX_NODES, betweenness stays on the source-parallel
+    mapInPandas path. Empty graphs also take the distributed path (typed
+    empty result, no pandas schema inference).
+    ``n_nodes``: caller-known node count — skips a count() job."""
+    e = edges.select("src", "dst")
+    n = n_nodes if n_nodes is not None else nodes.count()
+    cent_cols = ["degree_centrality", "betweenness_centrality", "eigenvector_centrality"]
+    if 0 < n <= FUSED_DRIVER_MAX_NODES:
+        pdf = centralities_fused_driver(e, nodes, normalized=True)
+        # same sklearn constant-column -> 0 convention as minmax_scale
+        for c in cent_cols:
+            span = pdf[c].max() - pdf[c].min()
+            pdf[c + "_scaled"] = 0.0 if span == 0.0 else (pdf[c] - pdf[c].min()) / span
+        scaled = edges.sparkSession.createDataFrame(pdf)
+    else:
+        dc = degree_centrality(e, nodes, n_nodes=n)
+        ec = eigenvector_centrality(e, nodes, max_iter=1000, tol=1e-6, n_nodes=n)
+        bc = betweenness_centrality(e, nodes, normalized=True)
+        scaled = minmax_scale(dc.join(ec, "node").join(bc, "node"), cent_cols)
+    return scaled.select(
+        "node", *cent_cols, composite_score(scaled, [c + "_scaled" for c in cent_cols])
     )
 
 

@@ -26,15 +26,10 @@ from pyspark.sql import functions as F
 
 from drug_target_discovery_spark.functions.stats import (
     bh_fdr,
-    minmax_scale,
     student_t_two_sided_p,
     welch_t_stats,
 )
-from drug_target_discovery_spark.graph.centrality import (
-    betweenness_centrality,
-    degree_centrality,
-    eigenvector_centrality,
-)
+from drug_target_discovery_spark.graph.centrality import target_scores
 from drug_target_discovery_spark.operators.correlation import corr_edges
 
 
@@ -188,58 +183,13 @@ class DrugTargetPipeline:
         )
 
     # ---- stage 6: network analysis (pipeline2.py:722-792) ---------------
-    def score_targets(
-        self, nodes: DataFrame, edges: DataFrame, driver_threshold: int = 2_000
-    ) -> DataFrame:
-        """All three centralities -> min-max scale -> composite mean ->
-        ranked desc with deterministic tie-break (G2-G4, T4, T5, K3).
-
-        Small graphs (the reference's top-K construction bounds nodes at
-        n_top_genes<=500) take the fused driver path: one edge-list collect,
-        all three centralities in numpy/pure-Python, one createDataFrame —
-        vs ~20 tiny Spark jobs for the distributed program. The threshold is
-        a few thousand nodes because the fused path runs exact Brandes
-        serially (O(V·E) in pure Python); past it, betweenness stays on the
-        source-parallel mapInPandas path. Empty graphs also take the
-        distributed path (typed empty result, no pandas schema inference)."""
-        e = edges.select("src", "dst")
-        n_nodes = nodes.count()
-        cent_cols = ["degree_centrality", "betweenness_centrality", "eigenvector_centrality"]
-        if 0 < n_nodes <= driver_threshold:
-            from drug_target_discovery_spark.graph.centrality import (
-                centralities_fused_driver,
-            )
-
-            pdf = centralities_fused_driver(e, nodes, normalized=True)
-            # min-max + composite stay driver-side too (same sklearn
-            # constant-column->0 convention as minmax_scale)
-            for c in cent_cols:
-                rng = pdf[c].max() - pdf[c].min()
-                pdf[c + "_scaled"] = (
-                    0.0 if rng == 0.0 else (pdf[c] - pdf[c].min()) / rng
-                )
-            scaled = nodes.sparkSession.createDataFrame(pdf)
-        else:
-            dc = degree_centrality(e, nodes)
-            ec = eigenvector_centrality(e, nodes, max_iter=1000, tol=1e-6)
-            bc = betweenness_centrality(e, nodes, normalized=True)
-            joined = dc.join(ec, "node").join(bc, "node")
-            scaled = minmax_scale(joined, cent_cols)
+    def score_targets(self, nodes: DataFrame, edges: DataFrame) -> DataFrame:
+        """All three centralities -> min-max scale -> composite mean
+        (``graph.centrality.target_scores``, G2-G4, T4, T5) -> ranked desc
+        with deterministic tie-break (K3)."""
         return (
-            scaled.select(
-                F.col("node").alias("gene"),
-                "degree_centrality",
-                "betweenness_centrality",
-                "eigenvector_centrality",
-                (
-                    (
-                        F.col("degree_centrality_scaled")
-                        + F.col("betweenness_centrality_scaled")
-                        + F.col("eigenvector_centrality_scaled")
-                    )
-                    / 3.0
-                ).alias("composite_score"),
-            )
+            target_scores(edges, nodes)
+            .withColumnRenamed("node", "gene")
             .orderBy(F.desc("composite_score"), F.asc("gene"))
         )
 

@@ -14,11 +14,11 @@ from pyspark.sql import functions as F
 
 from drug_target_discovery_spark.caching import fixture_checkpoint, memo
 from drug_target_discovery_spark.functions.rounding import rnd, rnd_sql
-from drug_target_discovery_spark.functions.stats import minmax_scale
 from drug_target_discovery_spark.graph.centrality import (
     betweenness_centrality,
     degree_centrality,
     eigenvector_centrality,
+    target_scores,
 )
 from drug_target_discovery_spark.graph.algorithms import triangle_counts
 from drug_target_discovery_spark.operators.correlation import corr_edges
@@ -298,52 +298,17 @@ def core_numbers_corr_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def network_target_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's analyze_network stage (pipeline2.py:722-792): all
-    three centralities -> min-max scale -> composite = mean -> ranked desc
-    with deterministic tie-break. Oracle = networkx fixture values
+    three centralities -> min-max scale -> composite = mean
+    (``graph.centrality.target_scores``), rounded to 6 decimals, ranked
+    desc with deterministic tie-break. Oracle = networkx fixture values
     (centralities AND the min-max composite) on the sf0.01 graph."""
     nodes, edges = _corr_graph(spark, sf_dir)
     n_nodes, _ = _corr_graph_counts(spark, sf_dir)
-    e = edges.select("src", "dst")
-    cent_cols = ["degree_centrality", "betweenness_centrality", "eigenvector_centrality"]
-    if 0 < n_nodes <= 2_000:
-        # small-graph fast path: all three centralities + min-max from one
-        # edge-list collect (the top-K construction bounds the graph), vs
-        # ~20 tiny Spark jobs for the three separate DataFrame programs.
-        # Bounded at a few thousand nodes: the fused path runs exact Brandes
-        # serially in Python; larger graphs keep the source-parallel
-        # mapInPandas betweenness. Empty graphs take the distributed branch
-        # (typed empty result, no pandas schema inference).
-        from drug_target_discovery_spark.graph.centrality import (
-            centralities_fused_driver,
-        )
-
-        pdf = centralities_fused_driver(e, nodes, normalized=True)
-        for c in cent_cols:
-            span = pdf[c].max() - pdf[c].min()
-            pdf[c + "_scaled"] = 0.0 if span == 0.0 else (pdf[c] - pdf[c].min()) / span
-        scaled = spark.createDataFrame(pdf)
-    else:
-        dc = degree_centrality(e, nodes, n_nodes=n_nodes)
-        ec = eigenvector_centrality(e, nodes, max_iter=1000, tol=1e-6, n_nodes=n_nodes)
-        bc = betweenness_centrality(e, nodes, normalized=True)
-        joined = dc.join(ec, "node").join(bc, "node")
-        scaled = minmax_scale(joined, cent_cols)
+    cols = ["degree_centrality", "betweenness_centrality", "eigenvector_centrality",
+            "composite_score"]
     return (
-        scaled.select(
-            "node",
-            rnd("degree_centrality", 6).alias("degree_centrality"),
-            rnd("betweenness_centrality", 6).alias("betweenness_centrality"),
-            rnd("eigenvector_centrality", 6).alias("eigenvector_centrality"),
-            rnd(
-                (
-                    F.col("degree_centrality_scaled")
-                    + F.col("betweenness_centrality_scaled")
-                    + F.col("eigenvector_centrality_scaled")
-                )
-                / 3.0,
-                6,
-            ).alias("composite_score"),
-        )
+        target_scores(edges, nodes, n_nodes=n_nodes)
+        .select("node", *(rnd(c, 6).alias(c) for c in cols))
         .orderBy(F.desc("composite_score"), F.asc("node"))
     )
 

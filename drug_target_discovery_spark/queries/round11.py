@@ -53,6 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from drug_target_discovery_spark.caching import checkpoint
 from drug_target_discovery_spark.functions.rounding import rnd
 from drug_target_discovery_spark.sources.tables import load_table
 
@@ -283,7 +284,7 @@ def curated_epoch_manifest(
     (tests/test_round11_ops.py, tools/lane_check.py).
 
     EAGER GATE (bench caveat, VERDICT r11): calling this function
-    MATERIALIZES the curated corpus (the eager localCheckpoint below) and
+    MATERIALIZES the curated corpus (the eager checkpoint below) and
     runs the k-merge BPE trainer before returning — "building the plan"
     costs the full curation chain plus k driver-folded aggregates. That
     is the point: the checkpoint is the load-bearing lineage cut, and a
@@ -298,7 +299,7 @@ def curated_epoch_manifest(
         .select("doc_id")
     )
     # The curated corpus frame is materialized ONCE with a LINEAGE CUT
-    # (localCheckpoint — the graph family's iteration idiom, and the
+    # (caching.checkpoint — the graph family's iteration idiom, and the
     # in-session form of what a nightly pipeline does anyway: write the
     # curated corpus, read it back). The cut is LOAD-BEARING, not just
     # the usual cache: the BPE trainer stacks k merge-fold generations
@@ -306,11 +307,10 @@ def curated_epoch_manifest(
     # curation-chain lineage (LSH CTEs, digest window) sends Catalyst
     # analysis super-linear — measured as a never-finishing single-task
     # stage at sf0.001 before the cut, seconds after it.
-    docs = (
+    docs = checkpoint(
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "source", "text")
         .join(kept, "doc_id")
-        .localCheckpoint(eager=True)
     )
     merges = [
         (r["left"], r["right"])

@@ -42,6 +42,7 @@ import heapq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from drug_target_discovery_spark.caching import generations
 from drug_target_discovery_spark.functions.rounding import rnd, rnd_sql
 from drug_target_discovery_spark.sources.tables import load_table
 
@@ -173,8 +174,8 @@ def bpe_top_merges_batched(
     aggregate); each ROUND then costs one vocabulary-bounded pair-count
     aggregate collected to its top-M rows, one tiny symbol-collision
     filter job over the <= batch candidate tokens, and one chained
-    ``_bpe_merge_fold`` projection (cached, superseding generation
-    released) applying the whole batch. The provably-safe batch rule
+    ``_bpe_merge_fold`` projection (checkpointed, superseded generation
+    freed) applying the whole batch. The provably-safe batch rule
     (``_safe_batch``) keeps the result bit-identical to sequential
     training. Honest regime note (round 13, the bpezipf probe): on a
     NATURAL Zipf vocabulary batching yields only 1.4-1.8 merges/round —
@@ -204,16 +205,15 @@ def bpe_top_merges_batched(
     ~0.5s), and the scan is vocabulary-grain like everything else in
     the round — so the fold is deliberately NOT done until a probe
     makes this form hot."""
-    from drug_target_discovery_spark.caching import track
     from drug_target_discovery_spark.queries.round9 import _bpe_merge_fold
 
     words = _word_counts(spark, sf_dir, docs)
-    vocab = words.select(
-        F.expr("filter(split(w, ''), s -> s != '')").alias("syms"), "cnt"
-    ).cache()
     merges: list[tuple[int, str, str, str, int]] = []
     batch_sizes: list[int] = []
-    while len(merges) < k:
+
+    def step(vocab: DataFrame) -> DataFrame | None:
+        if len(merges) >= k:
+            return None
         rows = (
             vocab.select(
                 F.explode(
@@ -238,7 +238,7 @@ def bpe_top_merges_batched(
         # round 12) — cap the per-round chain well under it
         batch = _safe_batch(rows, m)[: min(k - len(merges), _FOLD_CHAIN_CAP)]
         if not batch:
-            break
+            return None
         # Collision cut (see _safe_batch docstring): one pushdown filter
         # over the live vocab's symbols — candidates are few, the filter
         # is an isin over <= |batch| strings.
@@ -260,27 +260,19 @@ def bpe_top_merges_batched(
             (base + i + 1, l, r, l + r, n) for i, (l, r, n) in enumerate(batch)
         )
         batch_sizes.append(len(batch))
+        # the batch's folds chain in ONE projection (flat analysis cost,
+        # measured to depth 20+); the generation boundary is the lineage cut
         col = F.col("syms")
         for l, r, _ in batch:
             col = _bpe_merge_fold(col, l, r)
-        # Per-round lineage cut (the lineage-cut rule, SCALING.md): the
-        # batch's folds chain in ONE projection (flat analysis cost,
-        # measured to depth 20+), and the generation boundary is a
-        # localCheckpoint so round t+1's analysis never re-walks round
-        # t's plan — the cache form goes super-linear (see
-        # round9.bpe_top_merges).
-        new_vocab = vocab.select(col.alias("syms"), "cnt").localCheckpoint(
-            eager=True
-        )
-        if base == 0:  # first round: the base generation is the only
-            vocab.unpersist()  # cache()d one — release it explicitly
-        # Later generations are localCheckpoint-ed, NOT in the
-        # CacheManager — unpersist() would be a silent no-op (ADVICE
-        # r12). Rebinding drops the last reference; ContextCleaner frees
-        # the superseded checkpoint blocks at GC, and MEMORY_AND_DISK
-        # eviction bounds the interim footprint.
-        vocab = new_vocab
-    track(vocab)
+        return vocab.select(col.alias("syms"), "cnt")
+
+    # every round merges at least once, so k rounds always reach k merges
+    generations(
+        words.select(F.expr("filter(split(w, ''), s -> s != '')").alias("syms"), "cnt"),
+        step,
+        k,
+    )
     if stats is not None:
         stats["rounds"] = len(batch_sizes)
         stats["batch_sizes"] = batch_sizes

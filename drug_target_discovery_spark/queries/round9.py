@@ -57,6 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from drug_target_discovery_spark.caching import generations
 from drug_target_discovery_spark.functions.rounding import rnd, rnd_sql
 from drug_target_discovery_spark.sources.tables import load_table
 
@@ -563,8 +564,6 @@ def bpe_top_merges(
     of the full documents table — the curated-corpus tokenizer path
     (``round11.curated_epoch_manifest``). Default None keeps the
     original plan byte-identical."""
-    from drug_target_discovery_spark.caching import track
-
     if docs is None:
         docs = load_table(spark, sf_dir, "documents").select("text")
     else:
@@ -575,15 +574,9 @@ def bpe_top_merges(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    # symbol arrays: one row per distinct word — the loop's working set.
-    # Per-generation cache + unpersist-the-superseded (the
-    # label_propagation loop idiom): only the live generation stays
-    # pinned, the survivor is tracked for query-scoped release.
-    vocab = words.select(
-        F.expr("filter(split(w, ''), s -> s != '')").alias("syms"), "cnt"
-    ).cache()
     merges = []
-    for rank in range(1, k + 1):
+
+    def step(vocab: DataFrame) -> DataFrame | None:
         pairs = vocab.select(
             F.explode(
                 F.expr(
@@ -602,31 +595,20 @@ def bpe_top_merges(
             .collect()
         )
         if not top or top[0]["n"] <= 0:
-            break
+            return None
         l, r, n = top[0]["l"], top[0]["r"], int(top[0]["n"])
-        merges.append((rank, l, r, l + r, n))
-        merged = _bpe_merge_fold(F.col("syms"), l, r)
-        # Per-generation LINEAGE CUT (round 12 — the lineage-cut rule,
-        # SCALING.md): localCheckpoint, not cache. With cache, generation
-        # g's pair-count query re-analyzes all g stacked fold generations
-        # and the cache-substitution sameResult walk goes super-linear —
-        # MEASURED: k=10 in 6.8s, k=15 never finishing, at sf0.001. The
-        # cut (the graph loops' per-iteration idiom) holds per-generation
-        # analysis constant; values are unchanged (pinned by the python
-        # oracle in tests/test_round9_ops.py at k=10 and
-        # tests/test_round12_ops.py at k up to 200).
-        new_vocab = vocab.select(merged.alias("syms"), "cnt").localCheckpoint(
-            eager=True
-        )
-        if rank == 1:  # the base generation is the only cache()d one
-            vocab.unpersist()
-        # Later generations are localCheckpoint-ed, NOT in the
-        # CacheManager — unpersist() would be a silent no-op (ADVICE
-        # r12). Rebinding drops the last reference; ContextCleaner frees
-        # the superseded checkpoint blocks at GC, and MEMORY_AND_DISK
-        # eviction bounds the interim footprint.
-        vocab = new_vocab
-    track(vocab)  # surviving generation, released by the harness loop
+        merges.append((len(merges) + 1, l, r, l + r, n))
+        return vocab.select(_bpe_merge_fold(F.col("syms"), l, r).alias("syms"), "cnt")
+
+    # symbol arrays: one row per distinct word — the loop's working set,
+    # one lineage-cut generation per merge (values pinned by the python
+    # oracle in tests/test_round9_ops.py at k=10 and
+    # tests/test_round12_ops.py at k up to 200)
+    generations(
+        words.select(F.expr("filter(split(w, ''), s -> s != '')").alias("syms"), "cnt"),
+        step,
+        k,
+    )
     if not merges:
         return spark.createDataFrame(
             [],

@@ -59,17 +59,20 @@ class TestCentralities:
 
     def test_eigenvector_distributed_path(self, spark):
         # force the join-aggregate variant (driver_threshold=0) on a fast-
-        # converging graph and check it matches networkx
+        # converging graph and check it matches networkx and the driver
+        # path, INT node ids kept on both
         g = nx.complete_graph(6)
         edges = spark.createDataFrame(list(g.edges()), "src INT, dst INT")
         nodes = spark.createDataFrame([(n,) for n in g.nodes()], "node INT")
-        got = _collect(
-            eigenvector_centrality(edges, nodes, max_iter=100, tol=1e-6, driver_threshold=0),
-            "eigenvector_centrality",
-        )
+        dist = eigenvector_centrality(edges, nodes, max_iter=100, tol=1e-6, driver_threshold=0)
+        drv = eigenvector_centrality(edges, nodes, max_iter=100, tol=1e-6)
+        assert drv.dtypes == dist.dtypes == [("node", "int"), ("eigenvector_centrality", "double")]
+        got = _collect(dist, "eigenvector_centrality")
+        drv_got = _collect(drv, "eigenvector_centrality")
         expected = nx.eigenvector_centrality(g, max_iter=1000)
         for n, v in expected.items():
             assert got[n] == pytest.approx(v, abs=1e-6)
+            assert got[n] == pytest.approx(drv_got[n], rel=1e-9)
 
     def test_betweenness_path_graph(self, spark):
         # P4: known closed-form betweenness (middle nodes carry all paths)

@@ -31,15 +31,16 @@ def _cc_expected(g):
 class TestCC:
     def test_driver_path(self, spark, graph_dfs):
         g, nodes, edges = graph_dfs
-        got = {r["node"]: r["component"] for r in connected_components(edges, nodes).collect()}
+        out = connected_components(edges, nodes)
+        assert out.dtypes == [("node", "int"), ("component", "int")]  # INT ids kept
+        got = {r["node"]: r["component"] for r in out.collect()}
         assert got == _cc_expected(g)
 
     def test_distributed_path(self, spark, graph_dfs):
         g, nodes, edges = graph_dfs
-        got = {
-            r["node"]: r["component"]
-            for r in connected_components(edges, nodes, driver_threshold=0).collect()
-        }
+        out = connected_components(edges, nodes, driver_threshold=0)
+        assert out.dtypes == [("node", "int"), ("component", "int")]
+        got = {r["node"]: r["component"] for r in out.collect()}
         assert got == _cc_expected(g)
 
     def test_endpoints_only_paths(self, spark, graph_dfs):
@@ -90,12 +91,12 @@ class TestPageRank:
             assert got[n] == pytest.approx(v, abs=1e-5), n
 
     def test_distributed_path_matches_driver(self, spark, graph_dfs):
-        g, nodes, edges = graph_dfs
-        a = {r["node"]: r["pagerank"] for r in pagerank(edges, nodes, max_iter=15).collect()}
-        b = {
-            r["node"]: r["pagerank"]
-            for r in pagerank(edges, nodes, max_iter=15, driver_threshold=0).collect()
-        }
+        g, nodes, edges = graph_dfs  # INT node ids
+        drv = pagerank(edges, nodes, max_iter=15)
+        dist = pagerank(edges, nodes, max_iter=15, driver_threshold=0)
+        assert drv.dtypes == dist.dtypes == [("node", "int"), ("pagerank", "double")]
+        a = {r["node"]: r["pagerank"] for r in drv.collect()}
+        b = {r["node"]: r["pagerank"] for r in dist.collect()}
         for n in a:
             assert a[n] == pytest.approx(b[n], rel=1e-9), n
 
