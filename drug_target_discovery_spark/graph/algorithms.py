@@ -10,87 +10,84 @@ from pyspark.sql import functions as F
 
 from drug_target_discovery_spark.caching import generations
 
-# Driver-twin admission policy (optimization r14, VERDICT r13 #4/#6 — one
-# documented constant instead of six per-function literals so a future edit
-# cannot silently raise one gate past driver memory):
-#
-# Every strategy-gated operator in this module (connected_components,
-# pagerank, core_numbers, label_propagation, triangle_counts) and
-# eigenvector_centrality in graph/centrality.py admits the exact driver
-# twin only below DRIVER_TWIN_THRESHOLD. The gate bounds what the driver
-# ever collect()s: at most ~1M post-aggregation edge/node rows (two ints
-# each, tens of MB as Python objects) — a small share of the driver heap
-# session.py sizes from the host and a rounding error on any production
-# driver. On the nodes=None paths the gate is DRIVER_TWIN_THRESHOLD // 2
-# EDGES, so the implied node bound (<= 2x edges) is the same constant.
-# Above the gate the distributed plan runs unchanged; below it the driver
-# twin is integer-exact parity-tested against the distributed path
-# (tests/test_graph_algorithms.py, tests/test_graph.py). The two
-# deliberately different constants elsewhere are NOT twin gates:
-# betweenness/closeness/harmonic centrality's 512 picks serial-Brandes vs
-# source-parallel mapInPandas (both driver-collected — the collect is
-# bounded by the corr graph's top-K construction, not by this policy), and
-# adamic_adar's 20_000-edge gate is additionally wedge-bound
-# (sum deg^2 / 2, see _AA_DRIVER_WEDGE_CAP in queries/graphq.py) because
-# its driver work is quadratic in hub degree, not linear in edges.
 DRIVER_TWIN_THRESHOLD = 1_000_000
+
+
+def collected_graph(
+    edges: DataFrame,
+    nodes: DataFrame | None,
+    n_edges: int | None = None,
+    n_nodes: int | None = None,
+):
+    """The one driver-twin gate of the graph tier: ``(edge_rows,
+    node_list, node_type)`` collected to the driver when the graph is
+    small, else None and the caller runs its distributed plan.
+
+    Small means fewer than ``DRIVER_TWIN_THRESHOLD // 2`` edge rows and,
+    when ``nodes`` is given, fewer than ``DRIVER_TWIN_THRESHOLD`` nodes
+    (the constant is read at call time). So the driver never collects more
+    than ~1M rows of two ids each, a small share of the heap session.py
+    sizes from the host. ``nodes=None`` declares the node set to be the
+    edge endpoints (candidate-pair graphs have no isolated nodes): the
+    node list is then the sorted endpoints and ``node_type`` the type of
+    ``src``. ``n_edges`` / ``n_nodes`` are caller-known counts; only what
+    no hint supplies is counted, so a fully hinted gate runs no job.
+
+    Every twin is parity-tested against its ``_distributed`` plan
+    (tests/test_graph_algorithms.py, tests/test_graph.py). The graph tier
+    has two other strategy constants, and neither is a twin gate:
+    ``centrality.SERIAL_BFS_MAX_NODES`` picks serial vs source-parallel
+    BFS for the per-source centralities (both collect the adjacency,
+    which the corr graph's top-K bounds), and queries/graphq.py admits
+    the Adamic-Adar driver path by ``_AA_DRIVER_MAX_EDGES`` and the wedge
+    bound ``_AA_DRIVER_WEDGE_CAP``, since its driver work is quadratic in
+    hub degree."""
+    t = DRIVER_TWIN_THRESHOLD
+    if (n_edges if n_edges is not None else edges.count()) >= t // 2:
+        return None
+    if nodes is not None and (n_nodes if n_nodes is not None else nodes.count()) >= t:
+        return None
+    rows = edges.select("src", "dst").collect()
+    if nodes is None:
+        node_list = sorted({r["src"] for r in rows} | {r["dst"] for r in rows})
+        return rows, node_list, dict(edges.dtypes)["src"]
+    return rows, [r["node"] for r in nodes.select("node").collect()], dict(nodes.dtypes)["node"]
+
+
+def _endpoints(edges: DataFrame) -> DataFrame:
+    """The node table of a ``nodes=None`` graph: its distinct endpoints."""
+    return (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
 
 
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
     max_iter: int = 50,
-    driver_threshold: int = DRIVER_TWIN_THRESHOLD,
     n_edges: int | None = None,
     n_nodes: int | None = None,
 ) -> DataFrame:
     """Min-label propagation to fixpoint: component id = min node id
     reachable. Returns (node, component).
 
-    Small graphs (< driver_threshold nodes) run union-find on the collected
-    edge list — per-iteration Spark job latency would dominate by orders of
-    magnitude. Large graphs run the distributed loop: per iteration one
+    Small graphs (``collected_graph``) run union-find on the collected
+    edge list — per-iteration Spark job latency would dominate by orders
+    of magnitude. Large graphs run the distributed loop: per iteration one
     join-aggregate label'(v) = min(label(v), min over neighbors of
     label(u)); O(diameter) rounds (HashToMin family — the
     large-star/small-star variant halves rounds at extreme scale, same plan
-    shape).
-
-    ``nodes=None`` declares the node set is exactly the edge endpoints (no
-    isolated nodes — true for candidate-pair graphs by construction): the
-    small-graph path then runs off ONE collect of the edge list plus a
-    cheap count, instead of the count/collect/collect trio a separate node
-    table needs. ``driver_threshold`` bounds NODES on the nodes-given path;
-    on the nodes=None path the gate is ``driver_threshold // 2`` EDGES, so
-    the implied node bound (<= 2x edges) is the same threshold and the
-    collected edge rows never exceed half of it.
-
-    ``n_edges`` / ``n_nodes``: caller-known cardinalities (e.g. the
-    corr-graph memo's sweep-scoped counts) — when given, the gate reads
-    them instead of launching count() jobs (optimization r14, VERDICT r13
-    #3: the gate actions are pure overhead when the caller already knows
-    the sizes)."""
-    node_type = dict(edges.dtypes)["src"]
-    if nodes is None:
-        ne = n_edges if n_edges is not None else edges.count()
-        if ne < max(driver_threshold // 2, 1):  # nodes <= 2x edges
-            rows = edges.select("src", "dst").collect()
-            node_list = sorted({r["src"] for r in rows} | {r["dst"] for r in rows})
-            return _union_find(rows, node_list, edges.sparkSession, node_type)
-        nodes = (
-            edges.select(F.col("src").alias("node"))
-            .union(edges.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        return _cc_distributed(edges, nodes, max_iter)
-    if (n_nodes if n_nodes is not None else nodes.count()) < driver_threshold:
-        node_list = [r["node"] for r in nodes.select("node").collect()]
-        return _union_find(
-            edges.select("src", "dst").collect(), node_list, edges.sparkSession, node_type
-        )
+    shape). ``nodes=None``: the node set is the edge endpoints;
+    ``n_edges`` / ``n_nodes``: caller-known counts for the gate."""
+    g = collected_graph(edges, nodes, n_edges, n_nodes)
+    if g is not None:
+        return _union_find(edges.sparkSession, *g)
     return _cc_distributed(edges, nodes, max_iter)
 
 
-def _union_find(edge_rows, node_list, spark, node_type="bigint") -> DataFrame:
+def _union_find(spark, edge_rows, node_list, node_type) -> DataFrame:
     """Union-find over collected edges (exact, O(E α(V))). An empty graph
     returns an empty (node, component) frame with an explicit schema —
     createDataFrame cannot infer one from zero rows."""
@@ -125,8 +122,10 @@ def _union_find(edge_rows, node_list, spark, node_type="bigint") -> DataFrame:
 
 
 def _cc_distributed(
-    edges: DataFrame, nodes: DataFrame, max_iter: int
+    edges: DataFrame, nodes: DataFrame | None = None, max_iter: int = 50
 ) -> DataFrame:
+    if nodes is None:
+        nodes = _endpoints(edges)
     sym = (
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -174,33 +173,36 @@ def pagerank(
     damping: float = 0.85,
     max_iter: int = 20,
     tol: float = 1.0e-6,
-    driver_threshold: int = DRIVER_TWIN_THRESHOLD,
+    n_edges: int | None = None,
     n_nodes: int | None = None,
 ) -> DataFrame:
     """PageRank on the undirected (symmetrized) graph, networkx-compatible:
     pr'(v) = (1-d)/N + d * (sum_{u->v} pr(u)/outdeg(u) + dangling mass/N);
-    converged when sum|pr' - pr| < N * tol. Returns (node, pagerank).
+    converged when sum|pr' - pr| < N * tol. Returns (node, pagerank); an
+    empty node table gives an empty result.
 
-    Small graphs run the numpy iteration on the driver (three Spark actions
-    per distributed iteration would otherwise dominate); large graphs run
-    the join-aggregate loop. ``n_nodes``: caller-known node count — skips
-    the gate's count() job when given (optimization r14)."""
-    if (n_nodes if n_nodes is not None else nodes.count()) < driver_threshold:
-        return _pagerank_driver(edges, nodes, damping, max_iter, tol)
-    return _pagerank_distributed(edges, nodes, damping, max_iter, tol)
+    Small graphs (``collected_graph``) run the numpy iteration on the
+    driver (three Spark actions per distributed iteration would otherwise
+    dominate); large graphs run the join-aggregate loop. ``n_edges`` /
+    ``n_nodes``: caller-known counts for the gate."""
+    n = n_nodes if n_nodes is not None else nodes.count()
+    if n == 0:
+        return nodes.select("node", F.lit(0.0).alias("pagerank"))
+    g = collected_graph(edges, nodes, n_edges, n)
+    if g is not None:
+        return _pagerank_driver(edges.sparkSession, *g, damping, max_iter, tol)
+    return _pagerank_distributed(edges, nodes, n, damping, max_iter, tol)
 
 
 def _pagerank_driver(
-    edges: DataFrame, nodes: DataFrame, damping: float, max_iter: int, tol: float
+    spark, edge_rows, node_list, node_type, damping: float, max_iter: int, tol: float
 ) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    spark = edges.sparkSession
-    node_list = [r["node"] for r in nodes.select("node").collect()]
     idx = {v: i for i, v in enumerate(node_list)}
     n = len(node_list)
-    e = [(idx[r["src"]], idx[r["dst"]]) for r in edges.select("src", "dst").collect()]
+    e = [(idx[r["src"]], idx[r["dst"]]) for r in edge_rows]
     src = np.array([p[0] for p in e] + [p[1] for p in e], dtype=np.int64)
     dst = np.array([p[1] for p in e] + [p[0] for p in e], dtype=np.int64)
     deg = np.zeros(n)
@@ -217,23 +219,23 @@ def _pagerank_driver(
             break
     pdf = pd.DataFrame({"node": node_list, "pagerank": pr})
     # createDataFrame infers bigint for int ids; keep the input's type
-    node_type = dict(nodes.dtypes)["node"]
     return spark.createDataFrame(pdf).withColumn("node", F.col("node").cast(node_type))
 
 
 def _pagerank_distributed(
     edges: DataFrame,
     nodes: DataFrame,
-    damping: float,
-    max_iter: int,
-    tol: float,
+    n: int,
+    damping: float = 0.85,
+    max_iter: int = 20,
+    tol: float = 1.0e-6,
 ) -> DataFrame:
+    """The join-aggregate loop over ``n`` > 0 nodes."""
     sym = (
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .cache()
     )
-    n = nodes.count()
     outdeg = sym.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
 
     def step(ranks: DataFrame) -> DataFrame:
@@ -277,7 +279,6 @@ def core_numbers(
     edges: DataFrame,
     nodes: DataFrame | None = None,
     max_iter: int = 100,
-    driver_threshold: int = DRIVER_TWIN_THRESHOLD,
     n_edges: int | None = None,
     n_nodes: int | None = None,
 ) -> DataFrame:
@@ -297,33 +298,14 @@ def core_numbers(
 
     ``nodes=None`` declares node set == edge endpoints (candidate-pair
     graphs); isolated nodes then don't exist and every core >= 1.
-    ``n_edges`` / ``n_nodes``: caller-known cardinalities — skip the
-    gate's count() jobs when given (optimization r14)."""
-    node_type = dict(edges.dtypes)["src"]
-    if nodes is None:
-        ne = n_edges if n_edges is not None else edges.count()
-        if ne < max(driver_threshold // 2, 1):
-            rows = edges.select("src", "dst").collect()
-            node_list = sorted({r["src"] for r in rows} | {r["dst"] for r in rows})
-            return _core_driver(rows, node_list, edges.sparkSession, node_type)
-        nodes = (
-            edges.select(F.col("src").alias("node"))
-            .union(edges.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        return _core_distributed(edges, nodes, max_iter)
-    if (n_nodes if n_nodes is not None else nodes.count()) < driver_threshold:
-        node_list = [r["node"] for r in nodes.select("node").collect()]
-        return _core_driver(
-            edges.select("src", "dst").collect(),
-            node_list,
-            edges.sparkSession,
-            node_type,
-        )
+    ``n_edges`` / ``n_nodes``: caller-known counts for the gate."""
+    g = collected_graph(edges, nodes, n_edges, n_nodes)
+    if g is not None:
+        return _core_driver(edges.sparkSession, *g)
     return _core_distributed(edges, nodes, max_iter)
 
 
-def _core_driver(edge_rows, node_list, spark, node_type="bigint") -> DataFrame:
+def _core_driver(spark, edge_rows, node_list, node_type) -> DataFrame:
     """Batagelj-Zaversnik bucket peeling over collected edges: repeatedly
     remove the minimum-degree vertex; its degree at removal (monotone
     max'd over the removal sequence) is its core number."""
@@ -367,10 +349,12 @@ def _core_driver(edge_rows, node_list, spark, node_type="bigint") -> DataFrame:
 
 
 def _core_distributed(
-    edges: DataFrame, nodes: DataFrame, max_iter: int
+    edges: DataFrame, nodes: DataFrame | None = None, max_iter: int = 100
 ) -> DataFrame:
     from pyspark.sql import Window as W
 
+    if nodes is None:
+        nodes = _endpoints(edges)
     # distinct AFTER symmetrizing: an input carrying both orientations of
     # an edge (or repeats) would otherwise contribute the same neighbor's
     # value twice to the h-index multiset and inflate the fixpoint — the
@@ -424,7 +408,6 @@ def label_propagation(
     edges: DataFrame,
     n_iter: int = 5,
     nodes: DataFrame | None = None,
-    driver_threshold: int = DRIVER_TWIN_THRESHOLD,
 ) -> DataFrame:
     """Synchronous label propagation communities (Raghavan, Albert &
     Kumara 2007), made DETERMINISTIC and therefore oracle-able: labels
@@ -459,43 +442,31 @@ def label_propagation(
     r10 gate over the near-dup pair graph with an unrolled fixed-K
     DuckDB oracle (see queries/registry.py).
 
-    Strategy selection (optimization r13, same pattern as
-    connected_components above): below ``driver_threshold // 2`` EDGES
-    (nodes <= 2x edges) the ``n_iter`` synchronous rounds run driver-side
-    over adjacency sets — the distributed loop costs ~8 tiny Spark jobs
-    per round (join + two-level aggregate + checkpoint), pure
-    scheduler latency on a candidate-pair graph of a few hundred edges
-    (measured 3.8s/32 jobs -> ~0.4s/3 jobs at sf0.1). Exact-parity with
-    the distributed path is pinned in tests/test_graph_algorithms.py
-    (integer votes + integer min tie-break: no float hazard). Large
-    graphs keep the per-round join-aggregate loop unchanged. On the
-    nodes-given path the gate additionally bounds the collected node
-    list by ``driver_threshold``."""
+    Strategy selection (optimization r13, ``collected_graph``): on a
+    small graph the ``n_iter`` synchronous rounds run driver-side over
+    adjacency sets — the distributed loop costs ~8 tiny Spark jobs per
+    round (join + two-level aggregate + checkpoint), pure scheduler
+    latency on a candidate-pair graph of a few hundred edges (measured
+    3.8s/32 jobs -> ~0.4s/3 jobs at sf0.1). Exact-parity with the
+    distributed path is pinned in tests/test_graph_algorithms.py (integer
+    votes + integer min tie-break: no float hazard)."""
+    g = collected_graph(edges, nodes)
+    if g is not None:
+        return _lpa_driver(edges.sparkSession, *g, n_iter)
+    return _lpa_distributed(edges, n_iter, nodes)
+
+
+def _lpa_distributed(
+    edges: DataFrame, n_iter: int = 5, nodes: DataFrame | None = None
+) -> DataFrame:
+    if nodes is None:
+        nodes = _endpoints(edges)
     sym = (
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
         .cache()
     )
-    # one count gates the strategy AND materializes the cache the
-    # distributed loop would build anyway
-    n_sym_edges = sym.count()
-    if n_sym_edges < max(driver_threshold, 2) and (
-        nodes is None or nodes.count() < driver_threshold
-    ):
-        node_rows = (
-            None
-            if nodes is None
-            else [r["node"] for r in nodes.select("node").collect()]
-        )
-        out = _lpa_driver(
-            sym.collect(), node_rows, n_iter, edges.sparkSession,
-            dict(edges.dtypes)["src"],
-        )
-        sym.unpersist()
-        return out
-    if nodes is None:
-        nodes = sym.select(F.col("src").alias("node")).distinct()
 
     def step(labels: DataFrame) -> DataFrame:
         votes = (
@@ -521,23 +492,21 @@ def label_propagation(
     return labels
 
 
-def _lpa_driver(
-    sym_rows, node_list, n_iter: int, spark, node_type="bigint"
-) -> DataFrame:
+def _lpa_driver(spark, edge_rows, node_list, node_type, n_iter: int) -> DataFrame:
     """Driver twin of the distributed LPA loop: identical semantics
     (synchronous update, most-frequent neighbor label, ties -> minimum
     label, isolated nodes keep their label), integer-only arithmetic so
-    the two strategies are exactly equal. ``sym_rows`` is the DISTINCT
-    symmetric edge list (both orientations)."""
+    the two strategies are exactly equal. Adjacency SETS give the
+    distributed loop's distinct symmetric edge list."""
     from collections import Counter, defaultdict
 
-    adj: dict = defaultdict(list)
-    for r in sym_rows:
-        adj[r["src"]].append(r["dst"])
-    if node_list is None:
-        node_list = list(adj.keys())
+    adj: dict = defaultdict(set)
+    for r in edge_rows:
+        adj[r["src"]].add(r["dst"])
+        adj[r["dst"]].add(r["src"])
+    schema = f"node {node_type}, community {node_type}"
     if not node_list:
-        return spark.createDataFrame([], f"node {node_type}, community {node_type}")
+        return spark.createDataFrame([], schema)
     labels = {v: v for v in node_list}
     for _ in range(n_iter):
         new = {}
@@ -555,15 +524,12 @@ def _lpa_driver(
             best = max(cnt.values())
             new[v] = min(l for l, c in cnt.items() if c == best)
         labels = new
-    return spark.createDataFrame(
-        [(v, labels[v]) for v in node_list], f"node {node_type}, community {node_type}"
-    )
+    return spark.createDataFrame([(v, labels[v]) for v in node_list], schema)
 
 
 def triangle_counts(
     edges: DataFrame,
     nodes: DataFrame,
-    driver_threshold: int = DRIVER_TWIN_THRESHOLD,
     n_edges: int | None = None,
     n_nodes: int | None = None,
 ) -> DataFrame:
@@ -571,16 +537,15 @@ def triangle_counts(
     ORIENTED edge list (src < dst): returns (node, n_triangles, degree) for
     every node in ``nodes`` (0/0 for nodes without edges).
 
-    Strategy selection (optimization r13, same pattern as
-    connected_components / label_propagation above): below
-    ``driver_threshold // 2`` EDGES the enumeration runs driver-side over
-    successor maps — the distributed two-equi-join form costs ~12 small
-    Spark jobs (three joins + two union-aggregates under AQE), pure
-    scheduler latency on a thresholded corr graph of a few hundred edges
-    (measured 3.1s/12 jobs warm at sf0.1). Large graphs keep the
-    two-equi-join plan: each triangle a<b<c matches exactly one path
-    e(a,b)->e(b,c) closed by e(a,c), so no symmetrized blow-up (the
-    degree-ordered orientation trick bounds the join fan-out at scale).
+    Strategy selection (optimization r13, ``collected_graph``): on a small
+    graph the enumeration runs driver-side over successor maps — the
+    distributed two-equi-join form costs ~12 small Spark jobs (three
+    joins + two union-aggregates under AQE), pure scheduler latency on a
+    thresholded corr graph of a few hundred edges (measured 3.1s/12 jobs
+    warm at sf0.1). Large graphs keep the two-equi-join plan: each
+    triangle a<b<c matches exactly one path e(a,b)->e(b,c) closed by
+    e(a,c), so no symmetrized blow-up (the degree-ordered orientation
+    trick bounds the join fan-out at scale).
 
     Both strategies are multiplicity-faithful (a duplicate edge row
     multiplies matched paths exactly as the joins would), so they are
@@ -588,19 +553,17 @@ def triangle_counts(
     Only integer counts are produced here; ratio columns belong to the
     caller so both strategies flow through identical float expressions.
 
-    ``n_edges`` / ``n_nodes``: caller-known cardinalities — when given the
-    gate launches NO count() jobs, so the large-graph path costs exactly
-    the join plan (optimization r14, VERDICT r13 #3: the two eager counts
-    ran even when the join plan was taken, and ``edges`` is not guaranteed
-    cached for arbitrary callers)."""
-    node_type = dict(nodes.dtypes)["node"]
-    ne = n_edges if n_edges is not None else edges.count()
-    if ne < max(driver_threshold // 2, 1) and (
-        n_nodes if n_nodes is not None else nodes.count()
-    ) < driver_threshold:
-        rows = edges.select("src", "dst").collect()
-        node_list = [r["node"] for r in nodes.select("node").collect()]
-        return _triangle_driver(rows, node_list, edges.sparkSession, node_type)
+    ``n_edges`` / ``n_nodes``: caller-known counts — when given the gate
+    launches NO count() jobs, so the large-graph path costs exactly the
+    join plan (optimization r14: ``edges`` is not guaranteed cached for
+    arbitrary callers)."""
+    g = collected_graph(edges, nodes, n_edges, n_nodes)
+    if g is not None:
+        return _triangle_driver(edges.sparkSession, *g)
+    return _triangles_distributed(edges, nodes)
+
+
+def _triangles_distributed(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
@@ -630,7 +593,7 @@ def triangle_counts(
     )
 
 
-def _triangle_driver(edge_rows, node_list, spark, node_type="bigint") -> DataFrame:
+def _triangle_driver(spark, edge_rows, node_list, node_type) -> DataFrame:
     """Driver twin of the two-equi-join triangle enumeration: successor
     maps keyed src -> {dst: multiplicity}; a triangle x<y<z contributes
     m(x,y)*m(y,z)*m(x,z) to each corner — exactly the distributed join's

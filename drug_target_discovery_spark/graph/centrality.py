@@ -29,6 +29,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 
 from drug_target_discovery_spark.caching import generations
 from drug_target_discovery_spark.functions.stats import composite_score, minmax_scale
+from drug_target_discovery_spark.graph.algorithms import collected_graph
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -65,38 +66,30 @@ def eigenvector_centrality(
     nodes: DataFrame,
     max_iter: int = 1000,
     tol: float = 1.0e-6,
-    driver_threshold: int | None = None,
+    n_edges: int | None = None,
     n_nodes: int | None = None,
 ) -> DataFrame:
     """nx.eigenvector_centrality parity (pipeline2.py:749): power iteration
     on (I + A) with L2 normalization; converged when sum|x - x_last| < n*tol.
 
     Two physical strategies, same semantics:
-    - **small graph** (< driver_threshold nodes — always true for the
-      reference's top-K construction): collect the edge list once and run
-      the iteration in numpy on the driver. A 10^6-node vector is ~8 MB;
-      per-iteration Spark-job latency would dominate by orders of magnitude.
+    - **small graph** (``algorithms.collected_graph`` — always true for
+      the reference's top-K construction): collect the edge list once and
+      run the iteration in numpy on the driver. A 10^6-node vector is
+      ~8 MB; per-iteration Spark-job latency would dominate by orders of
+      magnitude.
     - **huge graph**: iterative join-aggregate, each generation a lineage
       cut (caching.generations, SURVEY §4). One shuffle per iteration.
 
-    ``driver_threshold`` defaults to the module-wide driver-twin policy
-    constant (graph/algorithms.py DRIVER_TWIN_THRESHOLD); ``n_nodes`` is
-    the caller-known node count — skips the gate's count() job when given
-    (optimization r14).
+    ``n_edges`` / ``n_nodes``: caller-known counts for the gate.
     """
-    if driver_threshold is None:
-        from drug_target_discovery_spark.graph.algorithms import (
-            DRIVER_TWIN_THRESHOLD,
-        )
-
-        driver_threshold = DRIVER_TWIN_THRESHOLD
-    if n_nodes is None:
-        n_nodes = nodes.count()
-    if n_nodes == 0:
+    n = n_nodes if n_nodes is not None else nodes.count()
+    if n == 0:
         return nodes.select("node", F.lit(0.0).alias("eigenvector_centrality"))
-    if n_nodes < driver_threshold:
-        return _eigenvector_driver(edges, nodes, n_nodes, max_iter, tol)
-    return _eigenvector_distributed(edges, nodes, max_iter, tol)
+    g = collected_graph(edges, nodes, n_edges, n)
+    if g is not None:
+        return _eigenvector_driver(edges.sparkSession, *g, max_iter, tol)
+    return _eigenvector_distributed(edges, nodes, n, max_iter, tol)
 
 
 def _power_iteration(pairs: list, n: int, max_iter: int, tol: float):
@@ -122,34 +115,31 @@ def _power_iteration(pairs: list, n: int, max_iter: int, tol: float):
 
 
 def _eigenvector_driver(
-    edges: DataFrame, nodes: DataFrame, n: int, max_iter: int, tol: float
+    spark, edge_rows, node_list, node_type, max_iter: int, tol: float
 ) -> DataFrame:
     """The power iteration on the collected edge list."""
-    node_list = [r["node"] for r in nodes.select("node").collect()]
     idx = {v: i for i, v in enumerate(node_list)}
     pairs = [
         (idx[r["src"]], idx[r["dst"]])
-        for r in edges.select("src", "dst").collect()
+        for r in edge_rows
         if r["src"] in idx and r["dst"] in idx
     ]
-    x = _power_iteration(pairs, n, max_iter, tol)
+    x = _power_iteration(pairs, len(node_list), max_iter, tol)
     pdf = pd.DataFrame({"node": node_list, "eigenvector_centrality": x})
     # createDataFrame infers bigint for int ids; keep the input's type
-    node_type = dict(nodes.dtypes)["node"]
-    return edges.sparkSession.createDataFrame(pdf).withColumn(
-        "node", F.col("node").cast(node_type)
-    )
+    return spark.createDataFrame(pdf).withColumn("node", F.col("node").cast(node_type))
 
 
 def _eigenvector_distributed(
     edges: DataFrame,
     nodes: DataFrame,
-    max_iter: int,
-    tol: float,
+    n: int,
+    max_iter: int = 1000,
+    tol: float = 1.0e-6,
 ) -> DataFrame:
-    """Join-aggregate power iteration for graphs too large to collect."""
+    """Join-aggregate power iteration over ``n`` > 0 nodes, for graphs too
+    large to collect."""
     sym = _symmetrize(edges).cache()
-    n = nodes.count()
 
     def step(x: DataFrame) -> DataFrame:
         contrib = (
@@ -213,6 +203,79 @@ def _brandes_single_source(adj: dict, s) -> dict:
     return delta
 
 
+# Up to this many nodes the per-source centralities (betweenness,
+# closeness, harmonic) run their BFS serially on the driver, and
+# target_scores takes its fused driver path: exact Brandes is O(V·E) in
+# pure Python, and below this size the source-parallel mapInPandas fan-out
+# costs more in worker start-up and shuffle than it saves. Every workload
+# graph fits under it (registry top-50, gse46602 top-100, paper top-500).
+SERIAL_BFS_MAX_NODES = 512
+
+
+def _adjacency(edges: DataFrame, nodes: DataFrame):
+    """``(node_list, adj, kept)`` from one collect each of ``nodes`` and
+    ``edges``: ``adj`` maps every node to its neighbor list and ``kept``
+    lists, in edge order, the (src, dst) edges with both ends in ``nodes``.
+    The per-source paths broadcast ``adj``; the top-K construction bounds
+    it, not ``algorithms.collected_graph``."""
+    node_list = [r["node"] for r in nodes.select("node").collect()]
+    adj: dict = {v: [] for v in node_list}
+    kept = []
+    for r in edges.select("src", "dst").collect():
+        s, d = r["src"], r["dst"]
+        if s in adj and d in adj:
+            adj[s].append(d)
+            adj[d].append(s)
+            kept.append((s, d))
+    return node_list, adj, kept
+
+
+def _score_schema(nodes: DataFrame, col: str) -> StructType:
+    """(node, ``col`` double) with the node column's own type."""
+    return StructType(
+        [nodes.select("node").schema.fields[0], StructField(col, DoubleType(), False)]
+    )
+
+
+def _betweenness_scale(n: int, normalized: bool) -> float:
+    """Undirected pair dependencies halve (each pair is counted from both
+    endpoints); normalized scale 2/((n-1)(n-2)) — networkx conventions."""
+    scale = 0.5
+    if normalized and n > 2:
+        scale *= 2.0 / ((n - 1) * (n - 2))
+    return scale
+
+
+def _brandes_totals(adj: dict, node_list: list, normalized: bool) -> list:
+    """Serial exact Brandes over every source: the betweenness of each
+    node of ``node_list``, in order."""
+    bc = dict.fromkeys(node_list, 0.0)
+    for s in node_list:
+        for v, dep in _brandes_single_source(adj, s).items():
+            if dep:
+                bc[v] += dep
+    scale = _betweenness_scale(len(node_list), normalized)
+    return [bc[v] * scale for v in node_list]
+
+
+def _per_source(nodes: DataFrame, adj: dict, schema: StructType, batch) -> DataFrame:
+    """The source-parallel plan: the node list spread over
+    min(max(n//8, 1), 64) partitions as BFS sources, the adjacency
+    broadcast to every task, and ``batch(adj, sources)`` returning each
+    partition's pandas rows of ``schema`` (empty batches are dropped)."""
+    badj = nodes.sparkSession.sparkContext.broadcast(adj)
+
+    def run(pdf_iter):
+        adj_local = badj.value
+        for pdf in pdf_iter:
+            out = batch(adj_local, list(pdf["node"]))
+            if len(out):
+                yield out
+
+    sources = nodes.select("node").repartition(min(max(len(adj) // 8, 1), 64))
+    return sources.mapInPandas(run, schema=schema)
+
+
 def centralities_fused_driver(
     edges: DataFrame, nodes: DataFrame, normalized: bool = True
 ) -> pd.DataFrame:
@@ -227,59 +290,23 @@ def centralities_fused_driver(
 
     Returns a pandas DataFrame (node, degree_centrality,
     betweenness_centrality, eigenvector_centrality) with the exact networkx
-    conventions of the individual functions."""
+    conventions of the individual functions, over a non-empty node set."""
     import numpy as np
 
-    node_list = [r["node"] for r in nodes.select("node").collect()]
+    node_list, adj, kept = _adjacency(edges, nodes)
     n = len(node_list)
-    if n == 0:
-        # empty graph: the power iteration below would never satisfy
-        # sum|dx| < n*tol (0 < 0) — return the empty typed frame directly
-        return pd.DataFrame(
-            {
-                "node": pd.Series([], dtype=object),
-                "degree_centrality": pd.Series([], dtype="float64"),
-                "betweenness_centrality": pd.Series([], dtype="float64"),
-                "eigenvector_centrality": pd.Series([], dtype="float64"),
-            }
-        )
     idx = {v: i for i, v in enumerate(node_list)}
-    adj: dict = {v: [] for v in node_list}
-    pairs = []
-    for r in edges.select("src", "dst").collect():
-        s, d = r["src"], r["dst"]
-        if s in idx and d in idx:
-            adj[s].append(d)
-            adj[d].append(s)
-            pairs.append((idx[s], idx[d]))
-    # degree: deg / (n-1)
     deg = np.array([len(adj[v]) for v in node_list], dtype=np.float64)
-    degree = deg / float(max(n - 1, 1))
-    x = _power_iteration(pairs, n, 1000, 1.0e-6)
-    # betweenness: exact Brandes over every source
-    bc = dict.fromkeys(node_list, 0.0)
-    for s in node_list:
-        for v, dep in _brandes_single_source(adj, s).items():
-            if dep:
-                bc[v] += dep
-    scale = 0.5
-    if normalized and n > 2:
-        scale *= 2.0 / ((n - 1) * (n - 2))
-    betweenness = np.array([bc[v] * scale for v in node_list])
     return pd.DataFrame(
         {
             "node": node_list,
-            "degree_centrality": degree,
-            "betweenness_centrality": betweenness,
-            "eigenvector_centrality": x,
+            "degree_centrality": deg / float(max(n - 1, 1)),
+            "betweenness_centrality": np.array(_brandes_totals(adj, node_list, normalized)),
+            "eigenvector_centrality": _power_iteration(
+                [(idx[s], idx[d]) for s, d in kept], n, 1000, 1.0e-6
+            ),
         }
     )
-
-
-# target_scores takes the fused driver path up to this many nodes: the
-# fused path runs exact Brandes serially (O(V·E) in pure Python), so the
-# gate sits at a few thousand nodes, far below DRIVER_TWIN_THRESHOLD.
-FUSED_DRIVER_MAX_NODES = 2_000
 
 
 def target_scores(
@@ -290,18 +317,18 @@ def target_scores(
     their mean. Returns (node, degree_centrality, betweenness_centrality,
     eigenvector_centrality, composite_score).
 
-    Small graphs (the reference's top-K construction bounds nodes at
-    n_top_genes<=500) take the fused driver path: one edge-list collect,
-    all three centralities and the min-max in numpy/pure-Python, one
-    createDataFrame — vs ~20 tiny Spark jobs for the distributed program.
-    Past FUSED_DRIVER_MAX_NODES, betweenness stays on the source-parallel
-    mapInPandas path. Empty graphs also take the distributed path (typed
-    empty result, no pandas schema inference).
+    Graphs of up to SERIAL_BFS_MAX_NODES nodes (the reference's top-K
+    construction bounds nodes at n_top_genes<=500) take the fused driver
+    path: one edge-list collect, all three centralities and the min-max in
+    numpy/pure-Python, one createDataFrame — vs ~20 tiny Spark jobs for
+    the distributed program, where betweenness runs source-parallel.
+    Empty graphs also take the distributed path (typed empty result, no
+    pandas schema inference).
     ``n_nodes``: caller-known node count — skips a count() job."""
     e = edges.select("src", "dst")
     n = n_nodes if n_nodes is not None else nodes.count()
     cent_cols = ["degree_centrality", "betweenness_centrality", "eigenvector_centrality"]
-    if 0 < n <= FUSED_DRIVER_MAX_NODES:
+    if 0 < n <= SERIAL_BFS_MAX_NODES:
         pdf = centralities_fused_driver(e, nodes, normalized=True)
         # same sklearn constant-column -> 0 convention as minmax_scale
         for c in cent_cols:
@@ -318,89 +345,78 @@ def target_scores(
     )
 
 
+def _dependency_batch(adj: dict, sources: list) -> pd.DataFrame:
+    """Brandes dependencies of one partition's sources, summed per node."""
+    acc: dict = {}
+    for s in sources:
+        for v, d in _brandes_single_source(adj, s).items():
+            if d:
+                acc[v] = acc.get(v, 0.0) + d
+    return pd.DataFrame({"node": list(acc.keys()), "dep": list(acc.values())})
+
+
 def betweenness_centrality(
     edges: DataFrame,
     nodes: DataFrame,
     normalized: bool = True,
-    driver_threshold: int = 512,
 ) -> DataFrame:
     """Exact betweenness (pipeline2.py:748), parallel across sources.
 
     The adjacency (node -> neighbor list) is broadcast to every task; sources
     are distributed via the nodes DataFrame, each task accumulates Brandes
-    dependencies for its sources (applyInPandas), and a final groupBy sums
+    dependencies for its sources (mapInPandas), and a final groupBy sums
     per node. Undirected: pair dependencies halve; normalized scale
     2/((n-1)(n-2)) — networkx conventions.
 
-    Scale envelope: V must fit per-executor (broadcast adjacency); source
-    fan-out is embarrassingly parallel. For the reference's top-K<=500 graph
-    this is overkill; it holds to ~10^6 nodes / arbitrary source counts.
+    Up to SERIAL_BFS_MAX_NODES nodes serial Brandes on the driver beats
+    the fan-out's worker start-up and shuffle by seconds, on the adjacency
+    that is collected either way (the broadcast payload); equivalence is
+    pinned in tests/test_graph.py. Scale envelope of the source-parallel
+    plan: V must fit per-executor (broadcast adjacency); source fan-out is
+    embarrassingly parallel, to ~10^6 nodes / arbitrary source counts.
     """
-    spark = edges.sparkSession
-    node_rows = [r["node"] for r in nodes.select("node").collect()]
-    adj: dict = {v: [] for v in node_rows}
-    for r in edges.select("src", "dst").collect():
-        if r["src"] in adj and r["dst"] in adj:
-            adj[r["src"]].append(r["dst"])
-            adj[r["dst"]].append(r["src"])
-    n = len(node_rows)
-
-    node_field = nodes.select("node").schema.fields[0]
-    result_schema = StructType(
-        [node_field, StructField("betweenness_centrality", DoubleType(), False)]
-    )
-    if n <= driver_threshold:
-        # Small-graph driver path: the adjacency is already collected (it is
-        # the broadcast payload either way), and at <=512 sources serial
-        # Brandes in Python beats the mapInPandas fan-out's worker-startup +
-        # shuffle overhead by seconds. Same numbers as the distributed path
-        # (equivalence pinned in tests/test_graph.py); larger graphs keep
-        # the source-parallel plan.
-        bc_acc = dict.fromkeys(node_rows, 0.0)
-        for s in node_rows:
-            for v, dep in _brandes_single_source(adj, s).items():
-                if dep:
-                    bc_acc[v] += dep
-        scale = 0.5
-        if normalized and n > 2:
-            scale *= 2.0 / ((n - 1) * (n - 2))
-        return spark.createDataFrame(
-            [(v, bc_acc[v] * scale) for v in node_rows], schema=result_schema
+    node_list, adj, _ = _adjacency(edges, nodes)
+    n = len(node_list)
+    if n <= SERIAL_BFS_MAX_NODES:
+        return edges.sparkSession.createDataFrame(
+            list(zip(node_list, _brandes_totals(adj, node_list, normalized))),
+            schema=_score_schema(nodes, "betweenness_centrality"),
         )
-    badj = spark.sparkContext.broadcast(adj)
-    out_schema = StructType([node_field, StructField("dep", DoubleType(), False)])
-
-    def per_source_batch(pdf_iter):
-        adj_local = badj.value
-        for pdf in pdf_iter:
-            acc: dict = {}
-            for s in pdf["node"]:
-                for v, d in _brandes_single_source(adj_local, s).items():
-                    if d:
-                        acc[v] = acc.get(v, 0.0) + d
-            if acc:
-                yield pd.DataFrame({"node": list(acc.keys()), "dep": list(acc.values())})
-
-    sources = nodes.select("node").repartition(min(max(n // 8, 1), 64))
-    deps = sources.mapInPandas(per_source_batch, schema=out_schema)
+    deps = _per_source(nodes, adj, _score_schema(nodes, "dep"), _dependency_batch)
     summed = deps.groupBy("node").agg(F.sum("dep").alias("bc"))
-    scale = 1.0 / 2.0  # undirected: each pair counted from both endpoints
-    if normalized and n > 2:
-        scale *= 2.0 / ((n - 1) * (n - 2))
-    result = (
-        nodes.join(summed, "node", "left")
-        .select(
-            "node",
-            (F.coalesce("bc", F.lit(0.0)) * F.lit(scale)).alias("betweenness_centrality"),
-        )
+    scale = _betweenness_scale(n, normalized)
+    return nodes.join(summed, "node", "left").select(
+        "node",
+        (F.coalesce("bc", F.lit(0.0)) * F.lit(scale)).alias("betweenness_centrality"),
     )
-    return result
 
 
-def _closeness_single_source(adj: dict, s, n: int) -> float:
+def _source_scores(edges: DataFrame, nodes: DataFrame, col: str, score) -> DataFrame:
+    """(node, ``col``) = ``score(adj, node)`` for every node: serially on
+    the driver up to SERIAL_BFS_MAX_NODES nodes (worker start-up dominates
+    tiny graphs), else one source-parallel mapInPandas with NO final
+    shuffle, since each source's BFS yields its own score."""
+    node_list, adj, _ = _adjacency(edges, nodes)
+    schema = _score_schema(nodes, col)
+    if len(node_list) <= SERIAL_BFS_MAX_NODES:
+        return edges.sparkSession.createDataFrame(
+            [(v, score(adj, v)) for v in node_list], schema=schema
+        )
+    return _per_source(
+        nodes,
+        adj,
+        schema,
+        lambda adj_local, src: pd.DataFrame(
+            {"node": src, col: [score(adj_local, s) for s in src]}
+        ),
+    )
+
+
+def _closeness_single_source(adj: dict, s) -> float:
     """Single-source BFS closeness, networkx wf_improved semantics:
-    (r-1)/totsp * (r-1)/(n-1) with r = nodes reached incl. s; 0.0 for
-    isolated sources. Pure-Python; runs inside one task."""
+    (r-1)/totsp * (r-1)/(n-1) with r = nodes reached incl. s and n =
+    len(adj); 0.0 for isolated sources. Pure-Python; runs inside one
+    task."""
     dist = {s: 0}
     Q = deque([s])
     tot = 0
@@ -412,16 +428,13 @@ def _closeness_single_source(adj: dict, s, n: int) -> float:
                 tot += dist[w]
                 Q.append(w)
     r = len(dist)
+    n = len(adj)
     if r <= 1 or tot == 0 or n <= 1:
         return 0.0
     return ((r - 1) / tot) * ((r - 1) / (n - 1))
 
 
-def closeness_centrality(
-    edges: DataFrame,
-    nodes: DataFrame,
-    driver_threshold: int = 512,
-) -> DataFrame:
+def closeness_centrality(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """Exact closeness centrality [EXT] — networkx conventions
     (wf_improved: the per-component closeness scaled by the reachable
     fraction, so multi-component graphs don't inflate small components).
@@ -429,44 +442,9 @@ def closeness_centrality(
     Unlike Brandes, each source's BFS yields ITS OWN closeness — no
     cross-source accumulation at all, so the source-parallel plan is one
     mapInPandas over the node list (broadcast adjacency, same scale
-    envelope as betweenness: V fits per executor, sources embarrassingly
-    parallel) with NO final shuffle. Driver path below the threshold for
-    the same reason as Brandes (worker startup dominates tiny graphs);
-    equivalence pinned in tests/test_graph.py."""
-    spark = edges.sparkSession
-    node_rows = [r["node"] for r in nodes.select("node").collect()]
-    adj: dict = {v: [] for v in node_rows}
-    for r in edges.select("src", "dst").collect():
-        if r["src"] in adj and r["dst"] in adj:
-            adj[r["src"]].append(r["dst"])
-            adj[r["dst"]].append(r["src"])
-    n = len(node_rows)
-    node_field = nodes.select("node").schema.fields[0]
-    result_schema = StructType(
-        [node_field, StructField("closeness_centrality", DoubleType(), False)]
-    )
-    if n <= driver_threshold:
-        return spark.createDataFrame(
-            [(v, _closeness_single_source(adj, v, n)) for v in node_rows],
-            schema=result_schema,
-        )
-    badj = spark.sparkContext.broadcast(adj)
-
-    def per_source_batch(pdf_iter):
-        adj_local = badj.value
-        for pdf in pdf_iter:
-            src = list(pdf["node"])
-            yield pd.DataFrame(
-                {
-                    "node": src,
-                    "closeness_centrality": [
-                        _closeness_single_source(adj_local, s, n) for s in src
-                    ],
-                }
-            )
-
-    sources = nodes.select("node").repartition(min(max(n // 8, 1), 64))
-    return sources.mapInPandas(per_source_batch, schema=result_schema)
+    envelope as betweenness) with NO final shuffle (``_source_scores``);
+    equivalence of the two paths is pinned in tests/test_graph.py."""
+    return _source_scores(edges, nodes, "closeness_centrality", _closeness_single_source)
 
 
 def _harmonic_single_source(adj: dict, s) -> float:
@@ -492,51 +470,11 @@ def _harmonic_single_source(adj: dict, s) -> float:
     return h
 
 
-def harmonic_centrality(
-    edges: DataFrame,
-    nodes: DataFrame,
-    driver_threshold: int = 512,
-) -> DataFrame:
+def harmonic_centrality(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """Exact harmonic centrality [EXT] — networkx conventions (sum of
     reciprocal distances; well-defined on disconnected graphs, the
     reason Boldi & Vigna 2014 prefer it over closeness). Same execution
-    envelope as ``closeness_centrality``: each source's BFS yields its
-    own score, so the distributed path is one mapInPandas over the node
-    list with a broadcast adjacency and NO final shuffle; driver path
-    below the threshold where worker startup dominates. Per-distance
-    integer level counts make each score order-deterministic (see
-    ``_harmonic_single_source``)."""
-    spark = edges.sparkSession
-    node_rows = [r["node"] for r in nodes.select("node").collect()]
-    adj: dict = {v: [] for v in node_rows}
-    for r in edges.select("src", "dst").collect():
-        if r["src"] in adj and r["dst"] in adj:
-            adj[r["src"]].append(r["dst"])
-            adj[r["dst"]].append(r["src"])
-    n = len(node_rows)
-    node_field = nodes.select("node").schema.fields[0]
-    result_schema = StructType(
-        [node_field, StructField("harmonic_centrality", DoubleType(), False)]
-    )
-    if n <= driver_threshold:
-        return spark.createDataFrame(
-            [(v, _harmonic_single_source(adj, v)) for v in node_rows],
-            schema=result_schema,
-        )
-    badj = spark.sparkContext.broadcast(adj)
-
-    def per_source_batch(pdf_iter):
-        adj_local = badj.value
-        for pdf in pdf_iter:
-            src = list(pdf["node"])
-            yield pd.DataFrame(
-                {
-                    "node": src,
-                    "harmonic_centrality": [
-                        _harmonic_single_source(adj_local, s) for s in src
-                    ],
-                }
-            )
-
-    sources = nodes.select("node").repartition(min(max(n // 8, 1), 64))
-    return sources.mapInPandas(per_source_batch, schema=result_schema)
+    envelope as ``closeness_centrality`` (``_source_scores``).
+    Per-distance integer level counts make each score order-deterministic
+    (see ``_harmonic_single_source``)."""
+    return _source_scores(edges, nodes, "harmonic_centrality", _harmonic_single_source)

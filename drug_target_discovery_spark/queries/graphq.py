@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from drug_target_discovery_spark.caching import fixture_checkpoint, memo
+from drug_target_discovery_spark.caching import fixture_checkpoint, memo, scoped_cache
 from drug_target_discovery_spark.functions.rounding import rnd, rnd_sql
 from drug_target_discovery_spark.graph.centrality import (
     betweenness_centrality,
@@ -237,9 +237,10 @@ def eigenvector_centrality_corr_graph(spark: SparkSession, sf_dir: str) -> DataF
     networkx-computed fixture (tools/gen_graph_oracles.py) on the sf0.01
     graph; parity also unit-tested in tests/test_graph.py."""
     nodes, edges = _corr_graph(spark, sf_dir)
-    n_nodes, _ = _corr_graph_counts(spark, sf_dir)
+    n_nodes, n_edges = _corr_graph_counts(spark, sf_dir)
     ec = eigenvector_centrality(
-        edges.select("src", "dst"), nodes, max_iter=1000, tol=1e-6, n_nodes=n_nodes
+        edges.select("src", "dst"), nodes, max_iter=1000, tol=1e-6,
+        n_edges=n_edges, n_nodes=n_nodes,
     )
     return ec.select("node", rnd("eigenvector_centrality", 6).alias("eigenvector_centrality"))
 
@@ -360,8 +361,9 @@ def clustering_coefficient_corr_graph(spark: SparkSession, sf_dir: str) -> DataF
     Strategy selection lives in graph.algorithms.triangle_counts
     (optimization r13): the thresholded corr graph is a few hundred edges,
     so the two-equi-join plan's ~12 AQE jobs were pure scheduler latency —
-    below the edge threshold the integer counts come from the driver twin
-    (exact-parity pinned), above it the join plan runs unchanged. The
+    below the gate (graph.algorithms.collected_graph) the integer counts
+    come from the driver twin (exact-parity pinned), above it the join
+    plan runs unchanged. The
     coefficient ratio is computed HERE, through one Spark expression
     shared by both strategies, so the float path is identical."""
     nodes, edges = _corr_graph(spark, sf_dir)
@@ -520,17 +522,31 @@ def degree_assortativity_corr_graph(spark: SparkSession, sf_dir: str) -> DataFra
 # Adamic-Adar link prediction (G-family [EXT])
 # --------------------------------------------------------------------------
 _AA_TOP_K = 100
-# Driver fast-path admission also requires the wedge-PAIR bound
-# sum_z deg(z)^2 / 2 below this cap — ~1e7 dict entries is comfortably
-# inside driver memory and sub-second-to-few-seconds of pure-Python
-# enumeration; anything larger goes distributed regardless of edge count.
+# The Adamic-Adar driver path is admitted at or below this many edges AND
+# at or below the wedge-pair bound sum_z deg(z)^2 / 2 <= the cap: ~1e7 dict
+# entries is comfortably inside driver memory and sub-second-to-few-seconds
+# of pure-Python enumeration; anything larger goes distributed regardless
+# of edge count.
+_AA_DRIVER_MAX_EDGES = 20_000
 _AA_DRIVER_WEDGE_CAP = 10_000_000
+
+
+def _aa_symmetric(e: DataFrame) -> DataFrame:
+    """Both orientations of the canonical (a, b) edge list."""
+    return e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+
+
+def _aa_degrees(e: DataFrame) -> DataFrame:
+    """(node, d) over the symmetric edge list, cached: node-count-bounded,
+    and read by the gate, the middle-degree cap and the scoring join."""
+    return scoped_cache(
+        _aa_symmetric(e).groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("d"))
+    )
 
 
 def adamic_adar_pairs(
     e: DataFrame,
     max_middle_degree: int | None = None,
-    driver_threshold: int = 20_000,
 ) -> DataFrame:
     """Core Adamic-Adar scorer over a canonical (a < b) DISTINCT edge
     list: returns (u, w, n_common, s_q) for every NON-adjacent pair with
@@ -539,20 +555,17 @@ def adamic_adar_pairs(
     networkx.adamic_adar_index is pinned in tests/test_graph.py (up to
     the documented per-term quantization).
 
-    Strategy selection mirrors graph/centrality.py: at or below
-    ``driver_threshold`` EDGES — AND below the skew-aware wedge-pair cap
-    ``_AA_DRIVER_WEDGE_CAP`` on sum deg(z)^2/2, so a hub-heavy graph
-    within the edge gate still goes distributed — the wedge enumeration
-    runs driver-side
-    over adjacency sets (the corr graph is top-K-bounded BY CONSTRUCTION
-    — hundreds of edges — where the distributed plan's 6 exchanges are
-    pure stage overhead: measured 2.1s distributed vs 0.8s driver at
-    sf0.1; the query's remaining wall is the shared corr-graph memo
+    Strategy selection: at or below ``_AA_DRIVER_MAX_EDGES`` edges — AND
+    below the skew-aware wedge-pair cap ``_AA_DRIVER_WEDGE_CAP`` on
+    sum deg(z)^2/2, so a hub-heavy graph within the edge gate still goes
+    distributed — the wedge enumeration runs driver-side over adjacency
+    sets (the corr graph is top-K-bounded BY CONSTRUCTION — hundreds of
+    edges — where the distributed plan's 6 exchanges are pure stage
+    overhead: measured 2.1s distributed vs 0.8s driver at sf0.1; the
+    query's remaining wall is the shared corr-graph memo
     materialization, paid once per sweep by whichever family member runs
     first), identical integer quantization, exact-parity-tested against
-    the distributed path. Above it, the distributed wedge join below.
-    Pass driver_threshold=0 to force the distributed strategy (the
-    hub-skew probe does).
+    ``_adamic_adar_distributed``.
 
     ``max_middle_degree`` is the production skew valve: the wedge join
     fans out deg(z)^2 rows per middle, so ONE hub node dominates the
@@ -562,41 +575,41 @@ def adamic_adar_pairs(
     link prediction at scale. None (default, used by the registered
     query) is exact. The capped variant's wall-time effect is recorded
     in SCALING.md's hub-skew table."""
-    from drug_target_discovery_spark.caching import scoped_cache
+    # Skew-aware gate (ADVICE r6): edge count alone admits graphs whose
+    # wedge-pair work is quadratic in a hub's degree — one ~20K-degree hub
+    # inside a 20K-edge graph is ~2e8 Python dict entries, the exact cliff
+    # the distributed path's max_middle_degree valve exists to avoid. The
+    # driver cost is sum_z C(deg z, 2) <= sum deg^2 / 2, an O(E) statistic
+    # read off the degree table in the SAME single action as the edge
+    # count; that action also materializes the cached degree table the
+    # distributed path then reuses.
+    deg = _aa_degrees(e)
+    stats = deg.agg(
+        F.sum("d").alias("sd"),
+        F.sum(F.col("d") * F.col("d")).alias("sdd"),
+    ).first()
+    n_edges = (stats["sd"] or 0) // 2
+    wedge_pair_bound = (stats["sdd"] or 0) // 2
+    if n_edges <= _AA_DRIVER_MAX_EDGES and wedge_pair_bound <= _AA_DRIVER_WEDGE_CAP:
+        return _adamic_adar_driver(e, max_middle_degree)
+    return _adamic_adar_distributed(e, max_middle_degree, deg)
 
-    sym = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    deg = sym.groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("d"))
-    if driver_threshold:
-        # Skew-aware gate (ADVICE r6): edge count alone admits graphs
-        # whose wedge-pair work is quadratic in a hub's degree — one
-        # ~20K-degree hub inside a 20K-edge graph is ~2e8 Python dict
-        # entries, the exact cliff the distributed path's
-        # max_middle_degree valve exists to avoid. The driver cost is
-        # sum_z C(deg z, 2) <= sum deg^2 / 2, an O(E) statistic read off
-        # the degree table in the SAME single action as the edge count,
-        # so the gate costs one small aggregate either way. Cache the
-        # node-count-bounded degree table first: the gate action
-        # materializes it, and the distributed path's scoring join (and
-        # the optional middle-degree cap) then reuse it instead of
-        # re-aggregating sym.
-        deg = scoped_cache(deg)
-        stats = deg.agg(
-            F.sum("d").alias("sd"),
-            F.sum(F.col("d") * F.col("d")).alias("sdd"),
-        ).first()
-        n_edges = (stats["sd"] or 0) // 2
-        wedge_pair_bound = (stats["sdd"] or 0) // 2
-        if n_edges <= driver_threshold and wedge_pair_bound <= _AA_DRIVER_WEDGE_CAP:
-            return _adamic_adar_driver(e, max_middle_degree)
+
+def _adamic_adar_distributed(
+    e: DataFrame,
+    max_middle_degree: int | None = None,
+    deg: DataFrame | None = None,
+) -> DataFrame:
+    """The distributed wedge join; ``deg`` is the gate's cached degree
+    table when it ran."""
+    if deg is None:
+        deg = _aa_degrees(e)
+    sym = _aa_symmetric(e)
     s1 = sym.select(F.col("a").alias("u"), F.col("b").alias("z"))
     s2 = sym.select(F.col("a").alias("z"), F.col("b").alias("w"))
     if max_middle_degree is not None:
-        # node-count-bounded degree table: cache it (it also feeds the
-        # final scoring join; already cached when the gate above ran) and
         # cap ONE side only — the equi-join on z propagates the middle
-        # filter to the other side for free.
-        if not driver_threshold:
-            deg = scoped_cache(deg)
+        # filter to the other side for free
         ok = deg.filter(F.col("d") <= max_middle_degree).select(
             F.col("node").alias("z")
         )
@@ -746,7 +759,7 @@ def closeness_centrality_corr_graph(spark: SparkSession, sf_dir: str) -> DataFra
     reachable fraction). Completes the centrality family next to
     degree / eigenvector / betweenness / PageRank / k-core; a rider on
     the sweep-scoped graph memo. Source-parallel BFS with NO final
-    shuffle above the driver threshold (each source yields its own
+    shuffle above SERIAL_BFS_MAX_NODES (each source yields its own
     score — see graph/centrality.py closeness_centrality); fixture
     VALUES oracle generated against networkx by
     tools/gen_graph_oracles.py."""

@@ -86,9 +86,10 @@ def pagerank_corr_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     values (tools/gen_graph_oracles.py) on the sf0.01 graph, parity vs a
     reference implementation in tests."""
     nodes, edges = _corr_graph(spark, sf_dir)
-    n_nodes, _ = _corr_graph_counts(spark, sf_dir)
+    n_nodes, n_edges = _corr_graph_counts(spark, sf_dir)
     pr = pagerank(
-        edges.select("src", "dst"), nodes, damping=0.85, max_iter=30, n_nodes=n_nodes
+        edges.select("src", "dst"), nodes, damping=0.85, max_iter=30,
+        n_edges=n_edges, n_nodes=n_nodes,
     )
     return pr.select("node", rnd("pagerank", 6).alias("pagerank"))
 

@@ -16,12 +16,12 @@ from drug_target_discovery_spark.caching import (
     scoped_cache,
 )
 from drug_target_discovery_spark.graph.algorithms import (
-    connected_components,
-    core_numbers,
-    label_propagation,
-    pagerank,
+    _cc_distributed,
+    _core_distributed,
+    _lpa_distributed,
+    _pagerank_distributed,
 )
-from drug_target_discovery_spark.graph.centrality import eigenvector_centrality
+from drug_target_discovery_spark.graph.centrality import _eigenvector_distributed
 from drug_target_discovery_spark.queries.registry import all_queries
 from drug_target_discovery_spark.queries.round9 import bpe_top_merges
 from drug_target_discovery_spark.queries.round12 import bpe_top_merges_batched
@@ -97,15 +97,13 @@ def _graph(spark):
     return edges, nodes
 
 
-# the seven driver-looped fixpoints, graph loops forced distributed
+# the seven driver-looped fixpoints, graph loops on their distributed plans
 LOOPS = {
-    "cc": lambda s: connected_components(*_graph(s), driver_threshold=0),
-    "pagerank": lambda s: pagerank(*_graph(s), driver_threshold=0),
-    "core": lambda s: core_numbers(*_graph(s), driver_threshold=0),
-    "lpa": lambda s: label_propagation(
-        _graph(s)[0], n_iter=3, nodes=_graph(s)[1], driver_threshold=0
-    ),
-    "eigenvector": lambda s: eigenvector_centrality(*_graph(s), driver_threshold=0),
+    "cc": lambda s: _cc_distributed(*_graph(s)),
+    "pagerank": lambda s: _pagerank_distributed(*_graph(s), 5),
+    "core": lambda s: _core_distributed(*_graph(s)),
+    "lpa": lambda s: _lpa_distributed(_graph(s)[0], 3, _graph(s)[1]),
+    "eigenvector": lambda s: _eigenvector_distributed(*_graph(s), 5),
     "bpe": lambda s: bpe_top_merges(s, SF, k=8),
     "bpe_batched": lambda s: bpe_top_merges_batched(s, SF, k=8),
 }

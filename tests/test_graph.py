@@ -6,7 +6,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from drug_target_discovery_spark.graph import centrality
 from drug_target_discovery_spark.graph.centrality import (
+    _eigenvector_distributed,
     betweenness_centrality,
     degree_centrality,
     eigenvector_centrality,
@@ -58,13 +60,12 @@ class TestCentralities:
             assert got[n] == pytest.approx(v, abs=1e-12), n
 
     def test_eigenvector_distributed_path(self, spark):
-        # force the join-aggregate variant (driver_threshold=0) on a fast-
-        # converging graph and check it matches networkx and the driver
-        # path, INT node ids kept on both
+        # the join-aggregate variant on a fast-converging graph must match
+        # networkx and the driver path, INT node ids kept on both
         g = nx.complete_graph(6)
         edges = spark.createDataFrame(list(g.edges()), "src INT, dst INT")
         nodes = spark.createDataFrame([(n,) for n in g.nodes()], "node INT")
-        dist = eigenvector_centrality(edges, nodes, max_iter=100, tol=1e-6, driver_threshold=0)
+        dist = _eigenvector_distributed(edges, nodes, 6, max_iter=100, tol=1e-6)
         drv = eigenvector_centrality(edges, nodes, max_iter=100, tol=1e-6)
         assert drv.dtypes == dist.dtypes == [("node", "int"), ("eigenvector_centrality", "double")]
         got = _collect(dist, "eigenvector_centrality")
@@ -83,12 +84,13 @@ class TestCentralities:
         for n, v in expected.items():
             assert got[n] == pytest.approx(v, abs=1e-12)
 
-    def test_betweenness_distributed_path(self, spark, graph_dfs):
-        # force the source-parallel mapInPandas variant (driver_threshold=0)
-        # and check it matches both networkx and the driver fast path
+    def test_betweenness_distributed_path(self, spark, graph_dfs, monkeypatch):
+        # force the source-parallel mapInPandas variant and check it
+        # matches networkx
         g, nodes, edges = graph_dfs
+        monkeypatch.setattr(centrality, "SERIAL_BFS_MAX_NODES", 0)
         got = _collect(
-            betweenness_centrality(edges, nodes, driver_threshold=0),
+            betweenness_centrality(edges, nodes),
             "betweenness_centrality",
         )
         expected = nx.betweenness_centrality(g, normalized=True)
@@ -205,7 +207,10 @@ class TestAdamicAdar:
         # the r6 driver fast path must be EXACTLY the distributed wedge
         # join's answer — same integer quantization, same pair set —
         # with and without the middle-degree cap
-        from drug_target_discovery_spark.queries.graphq import adamic_adar_pairs
+        from drug_target_discovery_spark.queries.graphq import (
+            _adamic_adar_distributed,
+            adamic_adar_pairs,
+        )
 
         g, nodes, edges = graph_dfs
         can = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
@@ -216,9 +221,7 @@ class TestAdamicAdar:
             }
             dist = {
                 (r["u"], r["w"]): (r["n_common"], r["s_q"])
-                for r in adamic_adar_pairs(
-                    can, driver_threshold=0, **kw
-                ).collect()
+                for r in _adamic_adar_distributed(can, **kw).collect()
             }
             assert drv == dist, kw
 
@@ -236,17 +239,15 @@ class TestCloseness:
         for n_, v in expected.items():
             assert got[n_] == pytest.approx(v, rel=1e-12), n_
 
-    def test_distributed_path_matches_driver(self, spark, graph_dfs):
+    def test_distributed_path_matches_driver(self, spark, graph_dfs, monkeypatch):
         from drug_target_discovery_spark.graph.centrality import (
             closeness_centrality,
         )
 
         g, nodes, edges = graph_dfs
         drv = _collect(closeness_centrality(edges, nodes), "closeness_centrality")
-        dist = _collect(
-            closeness_centrality(edges, nodes, driver_threshold=1),
-            "closeness_centrality",
-        )
+        monkeypatch.setattr(centrality, "SERIAL_BFS_MAX_NODES", 0)
+        dist = _collect(closeness_centrality(edges, nodes), "closeness_centrality")
         assert drv == dist
 
 
@@ -265,17 +266,15 @@ class TestHarmonic:
         # the fixture's isolated nodes score exactly 0 (no reachable peers)
         assert got[100] == 0.0 and got[101] == 0.0
 
-    def test_distributed_path_matches_driver(self, spark, graph_dfs):
+    def test_distributed_path_matches_driver(self, spark, graph_dfs, monkeypatch):
         from drug_target_discovery_spark.graph.centrality import (
             harmonic_centrality,
         )
 
         g, nodes, edges = graph_dfs
         drv = _collect(harmonic_centrality(edges, nodes), "harmonic_centrality")
-        dist = _collect(
-            harmonic_centrality(edges, nodes, driver_threshold=1),
-            "harmonic_centrality",
-        )
+        monkeypatch.setattr(centrality, "SERIAL_BFS_MAX_NODES", 0)
+        dist = _collect(harmonic_centrality(edges, nodes), "harmonic_centrality")
         # per-distance integer accumulation makes both paths run literally
         # the same float ops: bit-identical, not approx
         assert drv == dist

@@ -4,7 +4,16 @@ and distributed execution paths."""
 import networkx as nx
 import pytest
 
-from drug_target_discovery_spark.graph.algorithms import connected_components, pagerank
+from drug_target_discovery_spark.graph import algorithms as ga
+from drug_target_discovery_spark.graph.algorithms import (
+    _cc_distributed,
+    _core_distributed,
+    _lpa_distributed,
+    _pagerank_distributed,
+    _triangles_distributed,
+    connected_components,
+    pagerank,
+)
 
 
 @pytest.fixture(scope="module")
@@ -38,25 +47,24 @@ class TestCC:
 
     def test_distributed_path(self, spark, graph_dfs):
         g, nodes, edges = graph_dfs
-        out = connected_components(edges, nodes, driver_threshold=0)
+        out = _cc_distributed(edges, nodes)
         assert out.dtypes == [("node", "int"), ("component", "int")]
         got = {r["node"]: r["component"] for r in out.collect()}
         assert got == _cc_expected(g)
 
-    def test_endpoints_only_paths(self, spark, graph_dfs):
+    def test_endpoints_only_paths(self, spark, graph_dfs, monkeypatch):
         # nodes=None declares node set == edge endpoints: isolated nodes
         # (90, 91) are excluded, everything else matches, on BOTH paths
         g, _, edges = graph_dfs
         exp = _cc_expected(g)
         exp = {v: c for v, c in exp.items() if g.degree(v) > 0}
-        for thr in (1_000_000, 0):
+        for thr in (ga.DRIVER_TWIN_THRESHOLD, 0):
+            monkeypatch.setattr(ga, "DRIVER_TWIN_THRESHOLD", thr)
             got = {
                 r["node"]: r["component"]
-                for r in connected_components(
-                    edges, nodes=None, driver_threshold=thr
-                ).collect()
+                for r in connected_components(edges, nodes=None).collect()
             }
-            assert got == exp, f"driver_threshold={thr}"
+            assert got == exp, f"DRIVER_TWIN_THRESHOLD={thr}"
 
 
 def _pagerank_reference(g, alpha=0.85, max_iter=200, tol=1e-10):
@@ -93,12 +101,23 @@ class TestPageRank:
     def test_distributed_path_matches_driver(self, spark, graph_dfs):
         g, nodes, edges = graph_dfs  # INT node ids
         drv = pagerank(edges, nodes, max_iter=15)
-        dist = pagerank(edges, nodes, max_iter=15, driver_threshold=0)
+        dist = _pagerank_distributed(edges, nodes, len(g), max_iter=15)
         assert drv.dtypes == dist.dtypes == [("node", "int"), ("pagerank", "double")]
         a = {r["node"]: r["pagerank"] for r in drv.collect()}
         b = {r["node"]: r["pagerank"] for r in dist.collect()}
         for n in a:
             assert a[n] == pytest.approx(b[n], rel=1e-9), n
+
+    def test_empty_node_table(self, spark, monkeypatch):
+        # an empty top-K gives an empty node table: both strategies return
+        # an empty typed frame instead of dividing by n = 0
+        nodes = spark.createDataFrame([], "node int")
+        edges = spark.createDataFrame([], "src int, dst int")
+        for thr in (ga.DRIVER_TWIN_THRESHOLD, 0):
+            monkeypatch.setattr(ga, "DRIVER_TWIN_THRESHOLD", thr)
+            out = pagerank(edges, nodes)
+            assert out.dtypes == [("node", "int"), ("pagerank", "double")], thr
+            assert out.count() == 0, thr
 
 
 class TestCCEmptyGraph:
@@ -131,13 +150,10 @@ class TestCoreNumbers:
         from drug_target_discovery_spark.graph.algorithms import core_numbers
 
         g, nodes, edges = graph_dfs
-        got = {
-            r["node"]: r["core"]
-            for r in core_numbers(edges, nodes, driver_threshold=0).collect()
-        }
+        got = {r["node"]: r["core"] for r in _core_distributed(edges, nodes).collect()}
         assert got == nx.core_number(g)
 
-    def test_both_orientations_do_not_inflate(self, spark):
+    def test_both_orientations_do_not_inflate(self, spark, monkeypatch):
         # regression (50K parity run): an edge list carrying BOTH (a,b) and
         # (b,a) must not double-count the neighbor in the h-index multiset —
         # the driver path's adjacency sets dedupe implicitly, the
@@ -147,14 +163,15 @@ class TestCoreNumbers:
         g = nx.complete_graph(4)
         both = [(a, b) for a, b in g.edges()] + [(b, a) for a, b in g.edges()]
         edges = spark.createDataFrame(both, "src INT, dst INT")
-        for kw in ({}, {"driver_threshold": 0}):
+        for thr in (ga.DRIVER_TWIN_THRESHOLD, 0):
+            monkeypatch.setattr(ga, "DRIVER_TWIN_THRESHOLD", thr)
             got = {
                 r["node"]: r["core"]
-                for r in core_numbers(edges, None, **kw).collect()
+                for r in core_numbers(edges, None).collect()
             }
-            assert got == nx.core_number(g), kw
+            assert got == nx.core_number(g), thr
 
-    def test_dense_clique_plus_tail(self, spark):
+    def test_dense_clique_plus_tail(self, spark, monkeypatch):
         # a 6-clique (core 5) with a pendant path (core 1): the shape where
         # naive degree-propagation over-estimates and h-index must decrease
         from drug_target_discovery_spark.graph.algorithms import core_numbers
@@ -162,12 +179,13 @@ class TestCoreNumbers:
         g = nx.complete_graph(6)
         g.add_edges_from([(5, 10), (10, 11), (11, 12)])
         edges = spark.createDataFrame(list(g.edges()), "src INT, dst INT")
-        for kw in ({}, {"driver_threshold": 0}):
+        for thr in (ga.DRIVER_TWIN_THRESHOLD, 0):
+            monkeypatch.setattr(ga, "DRIVER_TWIN_THRESHOLD", thr)
             got = {
                 r["node"]: r["core"]
-                for r in core_numbers(edges, None, **kw).collect()
+                for r in core_numbers(edges, None).collect()
             }
-            assert got == nx.core_number(g), kw
+            assert got == nx.core_number(g), thr
 
 
 class TestLabelPropagation:
@@ -276,9 +294,7 @@ class TestLabelPropagation:
             }
             slow = {
                 r["node"]: r["community"]
-                for r in label_propagation(
-                    edges, n_iter=k, driver_threshold=0
-                ).collect()
+                for r in _lpa_distributed(edges, k).collect()
             }
             assert fast == slow, f"strategy divergence at n_iter={k}"
         # nodes-given path: isolated node 99 keeps its label; endpoint 0
@@ -292,9 +308,7 @@ class TestLabelPropagation:
         }
         slow = {
             r["node"]: r["community"]
-            for r in label_propagation(
-                edges, n_iter=3, nodes=node_df, driver_threshold=0
-            ).collect()
+            for r in _lpa_distributed(edges, 3, node_df).collect()
         }
         assert fast == slow
         assert fast[99] == 99 and 0 not in fast
@@ -306,14 +320,15 @@ class TestTriangleCounts:
     exactly equal (integer counts) on any input, including multi-edges."""
 
     @staticmethod
-    def _run(spark, edge_list, node_list, thr):
+    def _run(spark, edge_list, node_list, distributed):
         from drug_target_discovery_spark.graph.algorithms import triangle_counts
 
         edges = spark.createDataFrame(edge_list, "src long, dst long")
         nodes = spark.createDataFrame([(v,) for v in node_list], "node long")
+        fn = _triangles_distributed if distributed else triangle_counts
         return {
             r["node"]: (r["n_triangles"], r["degree"])
-            for r in triangle_counts(edges, nodes, driver_threshold=thr).collect()
+            for r in fn(edges, nodes).collect()
         }
 
     def test_matches_networkx_on_random_graph(self, spark, graph_dfs):
@@ -324,48 +339,44 @@ class TestTriangleCounts:
         exp = {
             v: (nx.triangles(g, v), g.degree(v)) for v in node_list
         }
-        for thr in (1_000_000, 0):
-            got = self._run(spark, edge_list, node_list, thr)
-            assert got == exp, f"driver_threshold={thr}"
+        for distributed in (False, True):
+            got = self._run(spark, edge_list, node_list, distributed)
+            assert got == exp, f"distributed={distributed}"
 
     def test_multi_edge_multiplicity_parity(self, spark):
         # a duplicated edge must multiply matched triangle paths the same
         # way on BOTH strategies (multiplicity-faithful, not set semantics)
         edge_list = [(0, 1), (1, 2), (0, 2), (0, 2), (2, 3)]
         node_list = [0, 1, 2, 3, 9]
-        fast = self._run(spark, edge_list, node_list, 1_000_000)
-        slow = self._run(spark, edge_list, node_list, 0)
+        fast = self._run(spark, edge_list, node_list, False)
+        slow = self._run(spark, edge_list, node_list, True)
         assert fast == slow
         # triangle 0-1-2 matched twice via the duplicated (0,2) closure
         assert fast[0] == (2, 3) and fast[1] == (2, 2)
         assert fast[3] == (0, 1) and fast[9] == (0, 0)
 
     def test_empty_edges_with_nodes(self, spark):
-        edges = spark.createDataFrame([], "src long, dst long")
-        nodes = spark.createDataFrame([(5,)], "node long")
-        for thr in (1_000_000, 0):
-            got = {
-                r["node"]: (r["n_triangles"], r["degree"])
-                for r in __import__(
-                    "drug_target_discovery_spark.graph.algorithms",
-                    fromlist=["triangle_counts"],
-                ).triangle_counts(edges, nodes, driver_threshold=thr).collect()
-            }
-            assert got == {5: (0, 0)}, f"driver_threshold={thr}"
+        for distributed in (False, True):
+            got = self._run(spark, [], [5], distributed)
+            assert got == {5: (0, 0)}, f"distributed={distributed}"
+
+
+def _next_job_id(spark):
+    v = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    return int(v) if isinstance(v, int) else int(v.get())
 
 
 class TestDriverTwinPolicy:
-    """Optimization r14 (VERDICT r13 #4/#6): one policy constant gates
-    every driver twin, and caller-known count hints must neither change
-    results nor change the selected strategy."""
+    """One gate (``collected_graph``) picks every driver twin from one
+    constant, and caller-known count hints must neither change results
+    nor change the selected strategy."""
 
-    def test_one_policy_constant_is_every_gate_default(self):
+    def test_no_graph_operator_takes_driver_threshold(self):
         import inspect
+        from pathlib import Path
 
-        from drug_target_discovery_spark.graph import algorithms as ga
-        from drug_target_discovery_spark.graph.centrality import (
-            eigenvector_centrality,
-        )
+        from drug_target_discovery_spark.graph import centrality
+        from drug_target_discovery_spark.queries import graphq
 
         for fn in (
             ga.connected_components,
@@ -373,13 +384,42 @@ class TestDriverTwinPolicy:
             ga.core_numbers,
             ga.label_propagation,
             ga.triangle_counts,
+            centrality.eigenvector_centrality,
+            centrality.betweenness_centrality,
+            centrality.closeness_centrality,
+            centrality.harmonic_centrality,
+            centrality.target_scores,
+            graphq.adamic_adar_pairs,
         ):
-            default = inspect.signature(fn).parameters["driver_threshold"].default
-            assert default == ga.DRIVER_TWIN_THRESHOLD, fn.__name__
-        # eigenvector resolves None -> the same constant at call time
-        # (module split avoids an import cycle)
-        sig = inspect.signature(eigenvector_centrality)
-        assert sig.parameters["driver_threshold"].default is None
+            assert "driver_threshold" not in inspect.signature(fn).parameters, fn.__name__
+        pkg = Path(ga.__file__).parents[1]
+        named = [
+            str(p.relative_to(pkg))
+            for p in sorted(pkg.rglob("*.py"))
+            if "driver_threshold" in p.read_text()
+        ]
+        assert named == []
+        # one serial-BFS constant: target_scores and the three per-source
+        # centralities read it, no literal copy of it is left
+        assert not hasattr(centrality, "FUSED_DRIVER_MAX_NODES")
+        src = inspect.getsource(centrality)
+        assert src.count("512") == 1 and "SERIAL_BFS_MAX_NODES = 512" in src
+
+    def test_gate_bounds_edges_and_nodes(self, spark, graph_dfs):
+        g, nodes, edges = graph_dfs
+        t = ga.DRIVER_TWIN_THRESHOLD
+        j0 = _next_job_id(spark)
+        # the edge bound holds on the nodes-given paths too
+        assert ga.collected_graph(edges, nodes, n_edges=t // 2, n_nodes=1) is None
+        assert ga.collected_graph(edges, nodes, n_edges=1, n_nodes=t) is None
+        assert ga.collected_graph(edges, None, n_edges=t // 2) is None
+        assert _next_job_id(spark) == j0, "a hinted gate must not launch jobs"
+        rows, node_list, node_type = ga.collected_graph(edges, None)
+        assert len(rows) == len(g.edges())
+        assert node_list == sorted(v for v in g if g.degree(v))
+        assert node_type == "int"
+        _, node_list, _ = ga.collected_graph(edges, nodes)
+        assert sorted(node_list) == sorted(g.nodes())
 
     def test_count_hints_do_not_change_results(self, spark, graph_dfs):
         from drug_target_discovery_spark.graph.algorithms import (
@@ -404,7 +444,7 @@ class TestDriverTwinPolicy:
         assert rows(triangle_counts(edges, nodes, n_edges=ne, n_nodes=nn)) == rows(
             triangle_counts(edges, nodes)
         )
-        assert rows(pagerank(edges, nodes, n_nodes=nn)) == rows(
+        assert rows(pagerank(edges, nodes, n_edges=ne, n_nodes=nn)) == rows(
             pagerank(edges, nodes)
         )
 
@@ -417,16 +457,34 @@ class TestDriverTwinPolicy:
         exp = {
             v: (nx.triangles(g, v), g.degree(v)) for v in sorted(g.nodes())
         }
-        def job_counter(sc):
-            v = sc._jsc.sc().dagScheduler().nextJobId()
-            return int(v) if isinstance(v, int) else int(v.get())
-
-        sc = spark.sparkContext
-        j0 = job_counter(sc)
-        df = triangle_counts(
-            edges, nodes, driver_threshold=10, n_edges=10**9, n_nodes=10**9
-        )
-        j1 = job_counter(sc)
-        assert j1 == j0, "gating with hints must not launch Spark jobs"
+        j0 = _next_job_id(spark)
+        df = triangle_counts(edges, nodes, n_edges=10**9, n_nodes=10**9)
+        assert _next_job_id(spark) == j0, "gating with hints must not launch Spark jobs"
         got = {r["node"]: (r["n_triangles"], r["degree"]) for r in df.collect()}
         assert got == exp
+
+
+class TestTargetScores:
+    def test_distributed_branch_matches_fused(self, spark, graph_dfs, monkeypatch):
+        # degree + eigenvector + source-parallel betweenness + minmax_scale
+        # must give the fused driver path's scores
+        from drug_target_discovery_spark.graph import centrality
+
+        g, nodes, edges = graph_dfs
+        cols = [
+            "degree_centrality",
+            "betweenness_centrality",
+            "eigenvector_centrality",
+            "composite_score",
+        ]
+
+        def scores():
+            return {r["node"]: r for r in centrality.target_scores(edges, nodes).collect()}
+
+        fused = scores()
+        monkeypatch.setattr(centrality, "SERIAL_BFS_MAX_NODES", 0)
+        dist = scores()
+        assert set(dist) == set(fused) == set(g.nodes())
+        for v, r in fused.items():
+            for c in cols:
+                assert dist[v][c] == pytest.approx(r[c], rel=1e-9), (v, c)

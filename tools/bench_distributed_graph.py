@@ -21,6 +21,7 @@ import json
 import os
 import sys
 import time
+from contextlib import contextmanager
 
 import numpy as np
 
@@ -29,10 +30,21 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from drug_target_discovery_spark.caching import release_caches
-from drug_target_discovery_spark.graph.algorithms import connected_components, pagerank
+from drug_target_discovery_spark.graph import centrality
+from drug_target_discovery_spark.graph.algorithms import (
+    _cc_distributed,
+    _core_distributed,
+    _pagerank_distributed,
+    connected_components,
+    core_numbers,
+    pagerank,
+)
 from drug_target_discovery_spark.graph.centrality import (
+    _eigenvector_distributed,
     betweenness_centrality,
+    closeness_centrality,
     eigenvector_centrality,
+    harmonic_centrality,
 )
 from drug_target_discovery_spark.session import get_spark
 
@@ -64,6 +76,17 @@ def build_graph(spark, n: int, extra_per_node: int = 4, n_classes: int = N_CLASS
     ).dropDuplicates(["src", "dst"])
     nodes = spark.createDataFrame(pd.DataFrame({"node": ids}))
     return nodes.cache(), edges.cache()
+
+
+@contextmanager
+def serial_bfs():
+    """Run the per-source centralities' serial driver path at any size."""
+    saved = centrality.SERIAL_BFS_MAX_NODES
+    centrality.SERIAL_BFS_MAX_NODES = 10**9
+    try:
+        yield
+    finally:
+        centrality.SERIAL_BFS_MAX_NODES = saved
 
 
 def timed(fn):
@@ -111,9 +134,7 @@ def main() -> None:
     # --- connected components: driver union-find vs min-label propagation
     cc_drv, t_drv = timed(lambda: connected_components(edges, nodes).cache())
     cc_drv.count()
-    cc_dist, t_dist = timed(
-        lambda: connected_components(edges, nodes, driver_threshold=1).cache()
-    )
+    cc_dist, t_dist = timed(lambda: _cc_distributed(edges, nodes).cache())
     cc_dist.count()
     compare(cc_drv, cc_dist, "component", 0)
     # independent ground truth: component of v == residue class min (0..9)
@@ -133,9 +154,7 @@ def main() -> None:
     ev_drv, t_drv = timed(lambda: eigenvector_centrality(cedges, cnodes, **ev_kw).cache())
     ev_drv.count()
     ev_dist, t_dist = timed(
-        lambda: eigenvector_centrality(
-            cedges, cnodes, driver_threshold=1, **ev_kw
-        ).cache()
+        lambda: _eigenvector_distributed(cedges, cnodes, n, **ev_kw).cache()
     )
     ev_dist.count()
     d = compare(ev_drv, ev_dist, "eigenvector_centrality", 1e-4)
@@ -149,7 +168,7 @@ def main() -> None:
     pr_drv, t_drv = timed(lambda: pagerank(cedges, cnodes, **pr_kw).cache())
     pr_drv.count()
     pr_dist, t_dist = timed(
-        lambda: pagerank(cedges, cnodes, driver_threshold=1, **pr_kw).cache()
+        lambda: _pagerank_distributed(cedges, cnodes, n, **pr_kw).cache()
     )
     pr_dist.count()
     d = compare(pr_drv, pr_dist, "pagerank", 1e-6)
@@ -160,13 +179,9 @@ def main() -> None:
 
     # --- k-core: BZ driver peeling vs distributed h-index fixpoint, on the
     # full multi-component graph (core structure is per-component)
-    from drug_target_discovery_spark.graph.algorithms import core_numbers
-
     core_drv, t_drv = timed(lambda: core_numbers(edges, nodes).cache())
     core_drv.count()
-    core_dist, t_dist = timed(
-        lambda: core_numbers(edges, nodes, driver_threshold=1).cache()
-    )
+    core_dist, t_dist = timed(lambda: _core_distributed(edges, nodes).cache())
     core_dist.count()
     d = compare(core_drv, core_dist, "core", 0)
     report["checks"]["core_numbers"] = {
@@ -176,19 +191,19 @@ def main() -> None:
     release_caches()
 
     # --- betweenness: serial driver Brandes vs source-parallel mapInPandas.
-    # Exact Brandes is O(V·E) — run the parity pair on a subgraph above the
-    # 512-node driver threshold instead of the full 50K graph.
+    # Exact Brandes is O(V·E) — run the parity pair on a subgraph above
+    # SERIAL_BFS_MAX_NODES instead of the full 50K graph.
     bn = 2_000
     sub_nodes, sub_edges = build_graph(spark, bn, extra_per_node=3)
+    assert bn > centrality.SERIAL_BFS_MAX_NODES  # -> source-parallel path
     bc_dist, t_dist = timed(
         lambda: betweenness_centrality(sub_edges, sub_nodes, normalized=True).cache()
-    )  # 2000 > 512 -> source-parallel path
-    bc_dist.count()
-    bc_drv, t_drv = timed(
-        lambda: betweenness_centrality(
-            sub_edges, sub_nodes, normalized=True, driver_threshold=10_000
-        ).cache()
     )
+    bc_dist.count()
+    with serial_bfs():
+        bc_drv, t_drv = timed(
+            lambda: betweenness_centrality(sub_edges, sub_nodes, normalized=True).cache()
+        )
     bc_drv.count()
     d = compare(bc_drv, bc_dist, "betweenness_centrality", 1e-9)
     report["checks"]["betweenness_centrality"] = {
@@ -199,17 +214,10 @@ def main() -> None:
 
     # --- closeness: driver BFS loop vs source-parallel mapInPandas, on the
     # same above-threshold subgraph (all-sources BFS is O(V·E) like Brandes)
-    from drug_target_discovery_spark.graph.centrality import closeness_centrality
-
-    cl_dist, t_dist = timed(
-        lambda: closeness_centrality(sub_edges, sub_nodes).cache()
-    )  # 2000 > 512 -> source-parallel path
+    cl_dist, t_dist = timed(lambda: closeness_centrality(sub_edges, sub_nodes).cache())
     cl_dist.count()
-    cl_drv, t_drv = timed(
-        lambda: closeness_centrality(
-            sub_edges, sub_nodes, driver_threshold=10_000
-        ).cache()
-    )
+    with serial_bfs():
+        cl_drv, t_drv = timed(lambda: closeness_centrality(sub_edges, sub_nodes).cache())
     cl_drv.count()
     d = compare(cl_drv, cl_dist, "closeness_centrality", 0)
     report["checks"]["closeness_centrality"] = {
@@ -222,17 +230,10 @@ def main() -> None:
     # --- harmonic: same envelope as closeness (per-source BFS, no final
     # shuffle); per-distance integer level counts make both paths run the
     # same float ops, so the parity bar is exact zero
-    from drug_target_discovery_spark.graph.centrality import harmonic_centrality
-
-    hc_dist, t_dist = timed(
-        lambda: harmonic_centrality(sub_edges, sub_nodes).cache()
-    )  # 2000 > 512 -> source-parallel path
+    hc_dist, t_dist = timed(lambda: harmonic_centrality(sub_edges, sub_nodes).cache())
     hc_dist.count()
-    hc_drv, t_drv = timed(
-        lambda: harmonic_centrality(
-            sub_edges, sub_nodes, driver_threshold=10_000
-        ).cache()
-    )
+    with serial_bfs():
+        hc_drv, t_drv = timed(lambda: harmonic_centrality(sub_edges, sub_nodes).cache())
     hc_drv.count()
     d = compare(hc_drv, hc_dist, "harmonic_centrality", 0)
     report["checks"]["harmonic_centrality"] = {
@@ -249,7 +250,7 @@ def main() -> None:
     # Spark join carries; the Spark side is the registered query's plan.
     from collections import defaultdict
 
-    from drug_target_discovery_spark.queries.graphq import adamic_adar_pairs
+    from drug_target_discovery_spark.queries.graphq import _adamic_adar_distributed
 
     can = (
         edges.select(
@@ -260,10 +261,10 @@ def main() -> None:
         .cache()
     )
     can.count()
-    # driver_threshold=0 forces the distributed wedge join — this bench
-    # claims to measure the distributed plan, so the small-graph driver
-    # fast path must not silently take over (ADVICE r6).
-    aa, t_aa = timed(lambda: adamic_adar_pairs(can, driver_threshold=0).cache())
+    # the distributed wedge join itself — this bench claims to measure the
+    # distributed plan, so the small-graph driver fast path must not
+    # silently take over (ADVICE r6).
+    aa, t_aa = timed(lambda: _adamic_adar_distributed(can).cache())
     n_pairs = aa.count()
 
     pdf = can.toPandas()

@@ -63,9 +63,10 @@ def numpy_lloyd(V_int: np.ndarray, ids: np.ndarray, k: int, iters: int):
     D2[idx, lab2] = np.inf
     b = np.sqrt(D2.min(axis=1))
     mx = np.maximum(a, b)
-    sil_q = np.floor(np.where(mx > 0.0, (b - a) / mx, 0.0) * 1e6 + 0.5).astype(
-        np.int64
-    )
+    # divide only where mx > 0: a zero mx scores 0.0 without a NaN
+    ratio = np.zeros_like(mx)
+    np.divide(b - a, mx, out=ratio, where=mx > 0.0)
+    sil_q = np.floor(ratio * 1e6 + 0.5).astype(np.int64)
     sil = []
     for j in range(k):
         m = lab2 == j
