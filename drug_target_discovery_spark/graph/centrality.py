@@ -334,7 +334,10 @@ def target_scores(
         for c in cent_cols:
             span = pdf[c].max() - pdf[c].min()
             pdf[c + "_scaled"] = 0.0 if span == 0.0 else (pdf[c] - pdf[c].min()) / span
-        scaled = edges.sparkSession.createDataFrame(pdf)
+        # createDataFrame infers bigint for int ids; keep the input's type
+        scaled = edges.sparkSession.createDataFrame(pdf).withColumn(
+            "node", F.col("node").cast(nodes.schema["node"].dataType)
+        )
     else:
         dc = degree_centrality(e, nodes, n_nodes=n)
         ec = eigenvector_centrality(e, nodes, max_iter=1000, tol=1e-6, n_nodes=n)

@@ -28,6 +28,7 @@ from drug_target_discovery_spark.functions.stats import (
     bh_fdr,
     student_t_two_sided_p,
     welch_t_stats,
+    zscore,
 )
 from drug_target_discovery_spark.graph.centrality import target_scores
 from drug_target_discovery_spark.operators.correlation import corr_edges
@@ -88,11 +89,7 @@ class DrugTargetPipeline:
             .drop("_gmax")
         )
         # T1: z-score per gene, population stddev (sklearn ddof=0)
-        mu = F.avg("value").over(wg)
-        sd = F.stddev_pop("value").over(wg)
-        return df.withColumn(
-            "value", F.when(sd == 0.0, F.lit(0.0)).otherwise((F.col("value") - mu) / sd)
-        )
+        return zscore(df, "probe_id", "value", out="value")
 
     # ---- stage 3: probe -> gene (pipeline2.py:500-538) ------------------
     def map_probes_to_genes(self, expr_long: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -192,8 +192,8 @@ def bpe_top_merges_batched(
 
     ``stats`` (probe instrumentation): when a dict is passed, it is
     filled with ``rounds`` (driver rounds used) and ``batch_sizes`` (the
-    per-round merge counts) — how tools/round9_probe.py's bpek probe
-    reads the batching efficiency without touching the result plan.
+    per-round merge counts) — how the bpek probe (SCALING.md, round 12)
+    read the batching efficiency without touching the result plan.
 
     ACCEPTED COST (2026-08-16, VERDICT r12 #7): the per-round
     symbol-collision scan is a SECOND full-vocab job (explode + isin +

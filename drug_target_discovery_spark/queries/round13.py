@@ -339,9 +339,9 @@ def bpe_top_merges_capped(
     independent python recompute in tools/lane_check.py and
     tests/test_round13_ops.py). APPROXIMATE w.r.t. the uncapped corpus
     — dropped tail words contribute nothing to pair counts — with the
-    approximation MEASURED, not assumed: tools/round9_probe.py bpecap
-    reports first-k merge agreement vs the uncapped trainer at caps
-    V/2, V/4, V/8 on the Zipf vocabulary (on a Zipf spectrum the tail
+    approximation MEASURED, not assumed: the bpecap probe (SCALING.md,
+    round 13) reported first-k merge agreement vs the uncapped trainer
+    at caps V/2, V/4, V/8 on the Zipf vocabulary (on a Zipf spectrum the tail
     carries a vanishing share of token mass, so agreement is high; the
     committed row is the evidence).
 

@@ -2,10 +2,23 @@ import os
 import sys
 
 import pytest
+from hypothesis import settings
+from hypothesis.database import DirectoryBasedExampleDatabase, ReadOnlyDatabase
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from drug_target_discovery_spark.session import get_spark
+
+# replay the committed examples, but never add to or prune them: a test run
+# leaves the checkout as it found it
+settings.register_profile(
+    "repo",
+    database=ReadOnlyDatabase(
+        DirectoryBasedExampleDatabase(os.path.join(ROOT, ".hypothesis", "examples"))
+    ),
+)
+settings.load_profile("repo")
 
 
 @pytest.fixture(scope="session")

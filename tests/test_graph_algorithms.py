@@ -479,7 +479,10 @@ class TestTargetScores:
         ]
 
         def scores():
-            return {r["node"]: r for r in centrality.target_scores(edges, nodes).collect()}
+            out = centrality.target_scores(edges, nodes)
+            # INT ids stay INT on both branches
+            assert out.dtypes == [("node", "int")] + [(c, "double") for c in cols]
+            return {r["node"]: r for r in out.collect()}
 
         fused = scores()
         monkeypatch.setattr(centrality, "SERIAL_BFS_MAX_NODES", 0)

@@ -90,8 +90,11 @@ def serial_bfs():
 
 
 def timed(fn):
+    """``fn()``'s frame, cached and counted, and the seconds that took:
+    cache() is lazy, so the work runs in the count and must be timed."""
     t0 = time.perf_counter()
-    out = fn()
+    out = fn().cache()
+    out.count()
     return out, round(time.perf_counter() - t0, 2)
 
 
@@ -132,10 +135,8 @@ def main() -> None:
     report: dict = {"n_nodes": n, "n_edges": n_edges, "checks": {}}
 
     # --- connected components: driver union-find vs min-label propagation
-    cc_drv, t_drv = timed(lambda: connected_components(edges, nodes).cache())
-    cc_drv.count()
-    cc_dist, t_dist = timed(lambda: _cc_distributed(edges, nodes).cache())
-    cc_dist.count()
+    cc_drv, t_drv = timed(lambda: connected_components(edges, nodes))
+    cc_dist, t_dist = timed(lambda: _cc_distributed(edges, nodes))
     compare(cc_drv, cc_dist, "component", 0)
     # independent ground truth: component of v == residue class min (0..9)
     wrong = cc_dist.filter(F.col("component") != F.col("node") % N_CLASSES).count()
@@ -151,12 +152,8 @@ def main() -> None:
     cnodes, cedges = build_graph(spark, n, n_classes=1)
     cedges.count()
     ev_kw = dict(max_iter=300, tol=1e-6)
-    ev_drv, t_drv = timed(lambda: eigenvector_centrality(cedges, cnodes, **ev_kw).cache())
-    ev_drv.count()
-    ev_dist, t_dist = timed(
-        lambda: _eigenvector_distributed(cedges, cnodes, n, **ev_kw).cache()
-    )
-    ev_dist.count()
+    ev_drv, t_drv = timed(lambda: eigenvector_centrality(cedges, cnodes, **ev_kw))
+    ev_dist, t_dist = timed(lambda: _eigenvector_distributed(cedges, cnodes, n, **ev_kw))
     d = compare(ev_drv, ev_dist, "eigenvector_centrality", 1e-4)
     report["checks"]["eigenvector_centrality"] = {
         "driver_sec": t_drv, "distributed_sec": t_dist, "max_diff": d,
@@ -165,12 +162,8 @@ def main() -> None:
 
     # --- pagerank: numpy vs join-aggregate loop
     pr_kw = dict(max_iter=60, tol=1e-8)
-    pr_drv, t_drv = timed(lambda: pagerank(cedges, cnodes, **pr_kw).cache())
-    pr_drv.count()
-    pr_dist, t_dist = timed(
-        lambda: _pagerank_distributed(cedges, cnodes, n, **pr_kw).cache()
-    )
-    pr_dist.count()
+    pr_drv, t_drv = timed(lambda: pagerank(cedges, cnodes, **pr_kw))
+    pr_dist, t_dist = timed(lambda: _pagerank_distributed(cedges, cnodes, n, **pr_kw))
     d = compare(pr_drv, pr_dist, "pagerank", 1e-6)
     report["checks"]["pagerank"] = {
         "driver_sec": t_drv, "distributed_sec": t_dist, "max_diff": d,
@@ -179,10 +172,8 @@ def main() -> None:
 
     # --- k-core: BZ driver peeling vs distributed h-index fixpoint, on the
     # full multi-component graph (core structure is per-component)
-    core_drv, t_drv = timed(lambda: core_numbers(edges, nodes).cache())
-    core_drv.count()
-    core_dist, t_dist = timed(lambda: _core_distributed(edges, nodes).cache())
-    core_dist.count()
+    core_drv, t_drv = timed(lambda: core_numbers(edges, nodes))
+    core_dist, t_dist = timed(lambda: _core_distributed(edges, nodes))
     d = compare(core_drv, core_dist, "core", 0)
     report["checks"]["core_numbers"] = {
         "driver_sec": t_drv, "distributed_sec": t_dist, "max_diff": d,
@@ -196,15 +187,11 @@ def main() -> None:
     bn = 2_000
     sub_nodes, sub_edges = build_graph(spark, bn, extra_per_node=3)
     assert bn > centrality.SERIAL_BFS_MAX_NODES  # -> source-parallel path
-    bc_dist, t_dist = timed(
-        lambda: betweenness_centrality(sub_edges, sub_nodes, normalized=True).cache()
-    )
-    bc_dist.count()
+    bc_dist, t_dist = timed(lambda: betweenness_centrality(sub_edges, sub_nodes, normalized=True))
     with serial_bfs():
         bc_drv, t_drv = timed(
-            lambda: betweenness_centrality(sub_edges, sub_nodes, normalized=True).cache()
+            lambda: betweenness_centrality(sub_edges, sub_nodes, normalized=True)
         )
-    bc_drv.count()
     d = compare(bc_drv, bc_dist, "betweenness_centrality", 1e-9)
     report["checks"]["betweenness_centrality"] = {
         "n_nodes": bn, "n_edges": sub_edges.count(),
@@ -214,11 +201,9 @@ def main() -> None:
 
     # --- closeness: driver BFS loop vs source-parallel mapInPandas, on the
     # same above-threshold subgraph (all-sources BFS is O(V·E) like Brandes)
-    cl_dist, t_dist = timed(lambda: closeness_centrality(sub_edges, sub_nodes).cache())
-    cl_dist.count()
+    cl_dist, t_dist = timed(lambda: closeness_centrality(sub_edges, sub_nodes))
     with serial_bfs():
-        cl_drv, t_drv = timed(lambda: closeness_centrality(sub_edges, sub_nodes).cache())
-    cl_drv.count()
+        cl_drv, t_drv = timed(lambda: closeness_centrality(sub_edges, sub_nodes))
     d = compare(cl_drv, cl_dist, "closeness_centrality", 0)
     report["checks"]["closeness_centrality"] = {
         "n_nodes": bn,
@@ -230,11 +215,9 @@ def main() -> None:
     # --- harmonic: same envelope as closeness (per-source BFS, no final
     # shuffle); per-distance integer level counts make both paths run the
     # same float ops, so the parity bar is exact zero
-    hc_dist, t_dist = timed(lambda: harmonic_centrality(sub_edges, sub_nodes).cache())
-    hc_dist.count()
+    hc_dist, t_dist = timed(lambda: harmonic_centrality(sub_edges, sub_nodes))
     with serial_bfs():
-        hc_drv, t_drv = timed(lambda: harmonic_centrality(sub_edges, sub_nodes).cache())
-    hc_drv.count()
+        hc_drv, t_drv = timed(lambda: harmonic_centrality(sub_edges, sub_nodes))
     d = compare(hc_drv, hc_dist, "harmonic_centrality", 0)
     report["checks"]["harmonic_centrality"] = {
         "n_nodes": bn,
@@ -264,7 +247,7 @@ def main() -> None:
     # the distributed wedge join itself — this bench claims to measure the
     # distributed plan, so the small-graph driver fast path must not
     # silently take over (ADVICE r6).
-    aa, t_aa = timed(lambda: _adamic_adar_distributed(can).cache())
+    aa, t_aa = timed(lambda: _adamic_adar_distributed(can))
     n_pairs = aa.count()
 
     pdf = can.toPandas()
