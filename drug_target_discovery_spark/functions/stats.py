@@ -7,7 +7,8 @@ reference with a declarative Spark program:
   table, ``stddev_pop`` (sklearn StandardScaler ddof=0 semantics).
 - Welch t sufficient statistics (T2, pipeline2.py:598-603): one aggregate
   pass computes (n, mean, var) per group per key — all keys in one shuffle,
-  replacing the reference's per-gene Python loop.
+  replacing the reference's per-gene Python loop; ``welch_t`` is the t/df
+  formula over those statistics, wherever they come from.
 - Student-t two-sided p-value: vectorized numpy incomplete-beta inside an
   Arrow-batched pandas_udf (scipy is deliberately not a dependency).
 - Benjamini-Hochberg FDR (T3, pipeline2.py:619-627): rank + reverse running
@@ -106,18 +107,9 @@ def welch_t_stats(
         F.var_samp(F.when(is_case, v)).alias("var_case"),
         F.var_samp(F.when(is_control, v)).alias("var_control"),
     )
-    se2 = F.col("var_case") / F.col("n_case") + F.col("var_control") / F.col("n_control")
-    valid = (
-        (F.col("n_case") >= 2)
-        & (F.col("n_control") >= 2)
-        & (se2 > 0)
-        & F.col("var_case").isNotNull()
-        & F.col("var_control").isNotNull()
-    )
-    t_stat = (F.col("mean_case") - F.col("mean_control")) / F.sqrt(se2)
-    t_df = (se2 * se2) / (
-        (F.col("var_case") / F.col("n_case")) ** 2 / (F.col("n_case") - 1)
-        + (F.col("var_control") / F.col("n_control")) ** 2 / (F.col("n_control") - 1)
+    t_stat, t_df = welch_t(
+        *(F.col(c) for c in ("n_case", "n_control", "mean_case", "mean_control",
+                             "var_case", "var_control"))
     )
     return agg.select(
         key,
@@ -126,9 +118,24 @@ def welch_t_stats(
         "mean_case",
         "mean_control",
         (F.col("mean_case") - F.col("mean_control")).alias("log2fc"),
-        F.when(valid, t_stat).alias("t_stat"),
-        F.when(valid, t_df).alias("t_df"),
+        t_stat.alias("t_stat"),
+        t_df.alias("t_df"),
     )
+
+
+def welch_t(
+    n1: Column, n2: Column, mean1: Column, mean2: Column, var1: Column, var2: Column
+) -> tuple[Column, Column]:
+    """Welch t statistic and Satterthwaite df from two groups' sufficient
+    statistics (count, mean, sample variance); both NULL where either group
+    has <2 values or both variances are zero."""
+    se2 = var1 / n1 + var2 / n2
+    valid = (n1 >= 2) & (n2 >= 2) & (se2 > 0) & var1.isNotNull() & var2.isNotNull()
+    t_stat = (mean1 - mean2) / F.sqrt(se2)
+    t_df = (se2 * se2) / (
+        (var1 / n1) ** 2 / (n1 - 1) + (var2 / n2) ** 2 / (n2 - 1)
+    )
+    return F.when(valid, t_stat), F.when(valid, t_df)
 
 
 # ---------------------------------------------------------------------------

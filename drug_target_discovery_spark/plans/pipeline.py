@@ -9,11 +9,15 @@ trigger 100 (:488-491), corr threshold 0.7 (:708), top 500 genes (:663),
 top 20 validated (:963), drugability weights 0.6/0.4 (:988-991),
 significance adj-p<0.05 & |log2FC|>1 (:639-643).
 
-Scale notes: the expression table is repartitioned by gene once, so the
-NA-filter, imputation, z-score and Welch stages share a single shuffle
-(SURVEY §4); the probe->gene mapping joins broadcast; the correlation
-network is built only after the top-K cut (cardinality reduction before the
-O(K^2) pair space).
+Scale notes: the expression matrix is one row per probe, (probe_id,
+values ARRAY<DOUBLE>), as the reference's own DataFrame is wide
+(pipeline2.py:471). NA filter, imputation, log2 and z-score are row-local
+array expressions, so preprocessing has no shuffle; the one global max is a
+1-row broadcast. The probe->gene collapse is one broadcast join plus one
+group-by; the condition split and the Welch statistics are row-local under a
+literal sample mask. The correlation network is built only after the top-K
+cut, on the driver from <= n_top_genes collected vectors (the driver-twin
+policy of ``graph.algorithms.collected_graph``).
 """
 
 from __future__ import annotations
@@ -21,17 +25,61 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window as W
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from drug_target_discovery_spark.functions.stats import (
     bh_fdr,
     student_t_two_sided_p,
-    welch_t_stats,
-    zscore,
+    welch_t,
 )
 from drug_target_discovery_spark.graph.centrality import target_scores
-from drug_target_discovery_spark.operators.correlation import corr_edges
+
+
+# Array-row helpers. A lambda that reads a column computed in the
+# projection below gets that projection inlined into it, and so re-evaluated
+# per element; ``_let`` binds a per-row value to a lambda variable instead.
+
+
+def _let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def _sum(arr, f: Callable[[Column], Column] = lambda x: x) -> Column:
+    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + f(x))
+
+
+def _mean_var(arr) -> tuple[Column, Column]:
+    """Mean and two-pass sample variance of an array column: NULL below one
+    and two elements, as ``avg`` and ``var_samp`` give."""
+    n = F.size(arr)
+    mean = F.when(n > 0, _sum(arr) / n)
+    var = _let(mean, lambda m: _sum(arr, lambda x: (x - m) ** 2))
+    return mean, F.when(n > 1, var / (n - 1))
+
+
+def _median(arr) -> Column:
+    """Interpolated median of the non-NULL elements of ``arr``, NULL when
+    there are none: the mean of the two middle values for an even count,
+    as numpy and ``F.median`` take it."""
+
+    def mid(s: Column) -> Column:
+        n = F.size(s)
+        lo = F.element_at(s, F.floor((n + 1) / 2).cast("int"))
+        hi = F.element_at(s, F.floor(n / 2).cast("int") + 1)
+        return F.when(n > 0, (lo + hi) / 2)
+
+    return _let(F.array_sort(F.filter(arr, lambda x: x.isNotNull())), mid)
+
+
+def _local(like: DataFrame, rows: list, schema: str) -> DataFrame:
+    """``rows`` as a local relation (Arrow-built ``LocalRelation``), which
+    a ``collect()`` reads without a Spark job unless it is cached."""
+    names = [f.split()[0] for f in schema.split(",")]
+    return like.sparkSession.createDataFrame(pd.DataFrame(rows, columns=names), schema)
 
 
 @dataclass
@@ -57,76 +105,117 @@ class DrugTargetPipeline:
         self.params = params or PipelineParams()
 
     # ---- stage 2: preprocess (pipeline2.py:476-498) ---------------------
-    def preprocess(self, expr_long: DataFrame) -> DataFrame:
-        """NA-threshold filter (P2) -> per-gene median imputation (A2) ->
-        conditional log2 (P3) -> per-gene z-score (T1, stddev_pop).
+    def preprocess(self, expr: DataFrame) -> DataFrame:
+        """NA-threshold filter (P2) -> row-median imputation (A2) ->
+        conditional log2 (P3) -> per-probe z-score (T1, population sd).
 
-        One repartition by gene serves the filter, imputation and z-score
-        windows; the global max is a 1-row broadcast."""
+        Row-local array expressions, no shuffle; the global max is a 1-row
+        broadcast."""
         p = self.params
-        df = expr_long.repartition("probe_id")
-        wg = W.partitionBy("probe_id")
+        v = F.col("values")
+        # P2: keep probes with >= na_threshold present cells
+        df = expr.filter(
+            F.size(F.filter(v, lambda x: x.isNotNull())) >= p.na_threshold * F.size(v)
+        )
+        # P3's trigger: imputing with the row median never raises a row's
+        # max, so the max is taken before imputation
+        gmax = df.agg(F.max(F.array_max(v)).alias("_gmax"))
+        # A2: median-impute missing cells within the probe
+        df = df.withColumn(
+            "values", _let(_median(v), lambda m: F.transform(v, lambda x: F.coalesce(x, m)))
+        )
+        # P3: conditional log2(x+1) on the broadcast global max
+        df = df.crossJoin(F.broadcast(gmax)).withColumn(
+            "values",
+            F.when(
+                F.col("_gmax") > p.log2_trigger, F.transform(v, lambda x: F.log2(x + 1))
+            ).otherwise(v),
+        )
+        # T1: z-score, population sd (sklearn ddof=0); sd 0 -> 0
+        n = F.size(v)
 
-        # P2: keep genes with >= na_threshold present cells
-        df = (
-            df.withColumn("_n_present", F.count("value").over(wg))
-            .withColumn("_n_total", F.count(F.lit(1)).over(wg))
-            .filter(F.col("_n_present") >= p.na_threshold * F.col("_n_total"))
-            .drop("_n_present", "_n_total")
-        )
-        # A2: median-impute missing cells within gene
-        df = df.withColumn("value", F.coalesce("value", F.median("value").over(wg)))
-        # P3: conditional log2(x+1) on a broadcast global max
-        gmax = df.agg(F.max("value").alias("_gmax"))
-        df = (
-            df.crossJoin(F.broadcast(gmax))
-            .withColumn(
-                "value",
-                F.when(F.col("_gmax") > p.log2_trigger, F.log2(F.col("value") + 1)).otherwise(
-                    F.col("value")
-                ),
-            )
-            .drop("_gmax")
-        )
-        # T1: z-score per gene, population stddev (sklearn ddof=0)
-        return zscore(df, "probe_id", "value", out="value")
+        def zscore(mu: Column) -> Column:
+            sd = F.sqrt(_sum(v, lambda x: (x - mu) ** 2) / n)
+            return _let(sd, lambda s: F.transform(
+                v, lambda x: F.when(s == 0.0, F.lit(0.0)).otherwise((x - mu) / s)
+            ))
+
+        return df.select("probe_id", _let(_sum(v) / n, zscore).alias("values"))
 
     # ---- stage 3: probe -> gene (pipeline2.py:500-538) ------------------
-    def map_probes_to_genes(self, expr_long: DataFrame, mapping: DataFrame) -> DataFrame:
-        """Broadcast left join (J1) + unmapped filter (P4: the reference's
-        UNKNOWN_ sentinel is just a NULL marker) + per-gene-sample exact
-        median collapse of multi-probe genes (A1)."""
-        joined = expr_long.join(F.broadcast(mapping), "probe_id", "left")
-        mapped = joined.filter(F.col("gene_symbol").isNotNull())
-        return (
-            mapped.groupBy(F.col("gene_symbol").alias("gene"), "sample_id")
-            .agg(F.median("value").alias("value"))
+    def map_probes_to_genes(self, expr: DataFrame, mapping: DataFrame) -> DataFrame:
+        """Broadcast join (J1) + unmapped filter (P4: the reference's
+        UNKNOWN_ sentinel is just a NULL marker) + element-wise exact median
+        collapse of multi-probe genes (A1)."""
+        mapped = expr.join(F.broadcast(mapping), "probe_id").filter(
+            F.col("gene_symbol").isNotNull()
+        )
+        genes = mapped.groupBy(F.col("gene_symbol").alias("gene")).agg(
+            F.collect_list("values").alias("_vs")
+        )
+        return genes.select(
+            "gene",
+            F.transform(
+                F.sequence(F.lit(1), F.size(F.element_at("_vs", 1))),
+                lambda i: _median(F.transform("_vs", lambda a: F.element_at(a, i))),
+            ).alias("values"),
         )
 
     # ---- sample reconciliation (J2, pipeline2.py:361-389) ---------------
-    def attach_condition(self, gene_long: DataFrame, meta: DataFrame) -> DataFrame:
-        """Inner join on normalized sample_id: only samples present in both
-        tables and carrying a condition survive (the reference's
-        set-intersection)."""
-        cond = meta.select(
-            F.trim(F.regexp_replace("sample_id", r'^["\']|["\']$', "")).alias("sample_id"),
-            "condition",
-        ).filter(F.col("condition").isNotNull())
-        return gene_long.join(F.broadcast(cond), "sample_id", "inner")
+    def attach_condition(self, genes: DataFrame, meta: DataFrame) -> DataFrame:
+        """Keep the samples present in both the data and the metadata and
+        carrying a condition (the reference's set-intersection): ``values``
+        holds them, ``case_v`` / ``ctrl_v`` the case and control ones, each
+        in sample order. ``meta`` has one row per sample, so it is
+        collected and the split is a literal mask."""
+        cond = {
+            r["pos"]: r["condition"]
+            for r in meta.filter(F.col("pos").isNotNull() & F.col("condition").isNotNull())
+            .select("pos", "condition")
+            .collect()
+        }
+
+        def keep(*labels: str) -> Column:
+            mask = F.array(
+                *[F.lit(cond.get(i) in labels) for i in range(max(cond, default=-1) + 1)]
+            ).cast("array<boolean>")
+            # past the mask's end: NULL, so not kept
+            return F.filter("values", lambda x, i: F.try_element_at(mask, i + 1))
+
+        return genes.select(
+            "gene",
+            keep("case", "control").alias("values"),
+            keep("case").alias("case_v"),
+            keep("control").alias("ctrl_v"),
+        )
 
     # ---- stage 4: differential expression (pipeline2.py:540-661) --------
     def differential_expression(self, gene_cond: DataFrame) -> DataFrame:
-        """Welch t per gene from sufficient statistics (T2) -> two-sided p
-        (Arrow-batched t CDF) -> BH-FDR (T3) -> (gene, log2FC, pvalue,
-        adjusted_pvalue). One aggregation shuffle for every gene."""
-        t = welch_t_stats(gene_cond, "gene", "value", "condition", "case", "control")
-        withp = t.withColumn("pvalue", student_t_two_sided_p("t_stat", "t_df"))
-        adj = bh_fdr(withp, "pvalue", "adjusted_pvalue")
-        return adj.select(
+        """Welch t per gene from its row's case/control statistics (T2) ->
+        two-sided p (Arrow-batched t CDF) -> BH-FDR (T3) -> (gene, log2FC,
+        pvalue, adjusted_pvalue). Row-local up to BH's global rank."""
+        mean_case, var_case = _mean_var("case_v")
+        mean_control, var_control = _mean_var("ctrl_v")
+        df = gene_cond.select(
             "gene",
-            F.col("log2fc").alias("log2FC"),
-            "pvalue",
-            "adjusted_pvalue",
+            F.size("case_v").alias("n_case"),
+            F.size("ctrl_v").alias("n_control"),
+            mean_case.alias("mean_case"),
+            mean_control.alias("mean_control"),
+            var_case.alias("var_case"),
+            var_control.alias("var_control"),
+        )
+        t_stat, t_df = welch_t(
+            *(F.col(c) for c in ("n_case", "n_control", "mean_case", "mean_control",
+                                 "var_case", "var_control"))
+        )
+        withp = df.select(
+            "gene",
+            (F.col("mean_case") - F.col("mean_control")).alias("log2FC"),
+            student_t_two_sided_p(t_stat, t_df).alias("pvalue"),
+        )
+        return bh_fdr(withp, "pvalue", "adjusted_pvalue").select(
+            "gene", "log2FC", "pvalue", "adjusted_pvalue"
         )
 
     def significant_genes(self, diff: DataFrame) -> DataFrame:
@@ -147,45 +236,59 @@ class DrugTargetPipeline:
     def select_network_genes(
         self, gene_cond: DataFrame, significant: DataFrame
     ) -> DataFrame:
-        """Top-K gene selection: significant genes first (K2); if none,
-        fall back to top-K by variance (A6/K1) — the reference's fallback
-        at pipeline2.py:683-686."""
-        p = self.params
-        sig = significant.select("gene").orderBy("gene").limit(p.n_top_genes)
-        if sig.take(1):
-            return sig
-        return (
-            gene_cond.groupBy("gene")
-            .agg(F.var_samp("value").alias("_v"), F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") >= 2)
-            .orderBy(F.desc("_v"), F.asc("gene"))
-            .limit(p.n_top_genes)
-            .select("gene")
-        )
+        """Top-K gene selection, collected into a local relation:
+        significant genes first (K2); if none, top-K by variance (A6/K1) —
+        the reference's fallback at pipeline2.py:683-686."""
+        k = self.params.n_top_genes
+        genes = significant.select("gene").orderBy("gene").limit(k).collect()
+        if not genes:
+            genes = (
+                gene_cond.filter(F.size("values") >= 2)
+                .orderBy(F.desc(_mean_var("values")[1]), F.asc("gene"))
+                .select("gene")
+                .limit(k)
+                .collect()
+            )
+        return _local(gene_cond, genes, "gene STRING")
 
     def build_network(
         self, gene_cond: DataFrame, top_genes: DataFrame
     ) -> tuple[DataFrame, DataFrame]:
-        """(nodes, edges): restrict to top genes (broadcast semi-join),
-        pairwise Pearson over samples, |r| > threshold (A7+P7+G1)."""
+        """(nodes, edges): the top genes' vectors collected (broadcast
+        semi-join; <= n_top_genes rows), Pearson r by ``np.corrcoef`` on the
+        driver, the upper triangle's |r| > threshold (A7+P7+G1). A constant
+        gene's NaN r is never an edge, nor is any pair over fewer than
+        ``corr_min_periods`` samples."""
         p = self.params
-        sub = gene_cond.join(F.broadcast(top_genes), "gene", "left_semi")
-        edges = corr_edges(
-            sub, "gene", "sample_id", "value",
-            threshold=p.corr_threshold, min_periods=p.corr_min_periods,
+        rows = sorted(
+            gene_cond.join(F.broadcast(top_genes), "gene", "left_semi")
+            .select("gene", "values")
+            .collect(),
+            key=lambda r: r["gene"],
         )
-        nodes = top_genes.select(F.col("gene").alias("node"))
-        return nodes, edges.select(
-            F.col("g1").alias("src"), F.col("g2").alias("dst"), "r", "weight"
-        )
+        edges = []
+        if len(rows) > 1 and len(rows[0]["values"]) >= p.corr_min_periods:
+            with np.errstate(divide="ignore", invalid="ignore"):
+                r = np.corrcoef(np.array([r["values"] for r in rows], dtype=np.float64))
+            i, j = np.triu_indices(len(rows), 1)
+            keep = np.abs(r[i, j]) > p.corr_threshold  # NaN compares False
+            edges = [
+                (rows[a]["gene"], rows[b]["gene"], float(r[a, b]), float(abs(r[a, b])))
+                for a, b in zip(i[keep], j[keep])
+            ]
+        nodes = _local(gene_cond, [(r["gene"],) for r in rows], "node STRING")
+        return nodes, _local(gene_cond, edges, "src STRING, dst STRING, r DOUBLE, weight DOUBLE")
 
     # ---- stage 6: network analysis (pipeline2.py:722-792) ---------------
     def score_targets(self, nodes: DataFrame, edges: DataFrame) -> DataFrame:
         """All three centralities -> min-max scale -> composite mean
         (``graph.centrality.target_scores``, G2-G4, T4, T5) -> ranked desc
-        with deterministic tie-break (K3)."""
+        with deterministic tie-break (K3). ``nodes`` is <= n_top_genes
+        rows, so the node count comes from collecting it: no job for
+        :meth:`build_network`'s local relation, one if it is cached, where
+        ``count()`` is an aggregate of two."""
         return (
-            target_scores(edges, nodes)
+            target_scores(edges, nodes, n_nodes=len(nodes.collect()))
             .withColumnRenamed("node", "gene")
             .orderBy(F.desc("composite_score"), F.asc("gene"))
         )
@@ -203,8 +306,6 @@ class DrugTargetPipeline:
         enrichment runs on a <=K-row slice — scale never matters here, the
         limit comes FIRST (SURVEY §4 'limit before expensive external
         calls')."""
-        import pandas as pd
-
         from drug_target_discovery_spark.sources.geo import valid_gene_symbol
 
         p = self.params
@@ -244,36 +345,30 @@ class DrugTargetPipeline:
     # ---- full chain ------------------------------------------------------
     def run(
         self,
-        expr_long: DataFrame,
+        expr: DataFrame,
         meta: DataFrame,
         mapping: DataFrame,
         client: Callable[[str], tuple[int, float]] | None = None,
     ) -> dict[str, DataFrame]:
         """Stages 2-7 composed; returns every intermediate (the reference
         writes each to CSV — S5 — callers can sink whichever they need)."""
-        normalized = self.preprocess(expr_long)
-        gene_long = self.map_probes_to_genes(normalized, mapping)
+        normalized = self.preprocess(expr)
+        genes = self.map_probes_to_genes(normalized, mapping)
         from drug_target_discovery_spark.caching import fixture_cache
 
         # the four caches below back every returned DataFrame (and the
         # registry's memoized pipeline outputs) — sweep-scoped: released by
         # caching.release_caches(fixtures=True)
-        gene_cond = fixture_cache(self.attach_condition(gene_long, meta))
-        # cache the differential table: it is one row per gene (bounded far
-        # below the input long table) and every downstream stage re-derives
-        # from it — the significance probe (take(1)), the top-K cut, and each
-        # centrality's node actions would otherwise re-execute the Welch +
-        # BH + t-CDF chain once per action
+        gene_cond = fixture_cache(self.attach_condition(genes, meta))
+        # one row per gene, re-read by the top-K cut, the sinks and every
+        # consumer of the returned dict: cached so the Welch + BH + t-CDF
+        # chain runs once
         diff = fixture_cache(self.differential_expression(gene_cond))
         sig = self.significant_genes(diff)
-        # top is <= n_top_genes rows by construction: cache so the three
-        # centralities and the corr self-join all reuse one materialization
+        # <= n_top_genes rows, read by the network build and the centralities
         top = fixture_cache(self.select_network_genes(gene_cond, sig))
         nodes, edges = self.build_network(gene_cond, top)
-        # the edge list is small by construction (<= n_top_genes^2 thresholded
-        # pairs) and every downstream consumer — three centralities, the
-        # composite join, the sink — re-reads it: cache once here so the
-        # corr self-join never re-executes
+        # re-read by the centralities and the sinks
         edges = fixture_cache(edges)
         scores = self.score_targets(nodes, edges)
         out = {

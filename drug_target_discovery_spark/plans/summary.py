@@ -32,7 +32,7 @@ def render_pipeline_summary(spark: SparkSession) -> str:
     gene_cond = out["gene_cond"]
     diff = out["differential"]
 
-    n_samples = gene_cond.select("sample_id").distinct().count()
+    n_samples = gene_cond.agg(F.max(F.size("values"))).first()[0] or 0
     n_genes = diff.count()
     sig = _sig_counts(diff)
     n_nodes = out["network_nodes"].count()

@@ -49,9 +49,9 @@ def _fixture_dir() -> str:
 @contextlib.contextmanager
 def _narrow_shuffle(spark: SparkSession):
     """Right-size shuffle width to the fixture volume for the duration of
-    the chain's internal actions (significance probe, centrality collects):
-    the fixture long table is ~1K rows, so 32-partition shuffle stages are
-    pure scheduling overhead. Restored afterwards — at real GEO scale the
+    the chain's internal actions (top-K and centrality collects): the
+    fixture is a few dozen probes, so 32-partition shuffle stages are pure
+    scheduling overhead. Restored afterwards — at real GEO scale the
     session default / AQE coalescing governs. (Shuffle width binds at
     EXECUTION time, which is why the chain materializes inside this
     window.)"""
@@ -78,8 +78,8 @@ def _diff_chain(spark: SparkSession) -> dict[str, DataFrame]:
             mapping = read_probe_mapping_csv(spark, os.path.join(d, "mapping.csv"))
             pipe = DrugTargetPipeline(PipelineParams())
             normalized = pipe.preprocess(expr)
-            gene_long = pipe.map_probes_to_genes(normalized, mapping)
-            gene_cond = fixture_checkpoint(pipe.attach_condition(gene_long, meta))
+            genes = pipe.map_probes_to_genes(normalized, mapping)
+            gene_cond = fixture_checkpoint(pipe.attach_condition(genes, meta))
             diff = fixture_checkpoint(pipe.differential_expression(gene_cond))
             diff.count()
         return {"pipe": pipe, "gene_cond": gene_cond, "differential": diff}

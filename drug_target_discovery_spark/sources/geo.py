@@ -10,13 +10,15 @@ Format (one file, three zones):
 Distributed-safety (SURVEY §7.4 hard part #4): row interpretation depends on
 the header discovered mid-file, so parsing is two-pass —
 pass 1 collects ONLY the ``!``-metadata + header lines (O(#samples), tiny);
-pass 2 streams the data rows through split + posexplode with the sample-id
-header broadcast as a literal array. gzip is decoded transparently by
+pass 2 maps each data row to its probe id and one array of cell values, a
+row-local split + cast with no shuffle. gzip is decoded transparently by
 extension (``spark.read.text``), fixing the reference's gzip-unaware second
 read (pipeline2.py:222).
 
-Output is engine-native LONG format (probe_id, sample_id, value) — wide
-per-sample columns do not scale (SURVEY §1.1).
+Output is one row per probe, (probe_id, values ARRAY<DOUBLE>), the
+reference's own wide matrix (pipeline2.py:471): every per-probe stage
+downstream is a function of that row's vector. Sample ids stay on the
+driver; ``sample_metadata.pos`` is each sample's index into ``values``.
 """
 
 from __future__ import annotations
@@ -37,17 +39,19 @@ def _strip_quotes(c):
 def parse_geo_series_matrix(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Parse a GEO Series Matrix file -> (expression_long, sample_metadata).
+    """Parse a GEO Series Matrix file -> (expression, sample_metadata).
 
-    expression_long: (probe_id STRING, sample_id STRING, value DOUBLE) —
-      NULL value for empty/NA cells; rows with any unparseable non-empty
-      cell are dropped whole (the reference's skip-on-ValueError,
+    expression: (probe_id STRING, values ARRAY<DOUBLE>), one row per probe
+      with one cell per data-header sample (short rows padded with NULL) —
+      NULL for empty/NA cells; rows with any unparseable non-empty cell are
+      dropped whole (the reference's skip-on-ValueError,
       pipeline2.py:464-468). Probe decorations are stripped: surrounding
       quotes, then a numeric ``NNN:`` prefix (pipeline2.py:450-456).
     sample_metadata: (sample_id, title, characteristics MAP<STRING,STRING>,
-      condition) with condition in ('case','control', NULL) via the tiered
-      keyword cascade (tissue characteristic -> title -> all
-      characteristics)."""
+      pos INT, condition): ``pos`` is the sample's 0-based index into
+      ``values``, NULL when the data header has no such sample; condition
+      in ('case','control', NULL) via the tiered keyword cascade (tissue
+      characteristic -> title -> all characteristics)."""
     lines = spark.read.text(path).select(F.col("value").alias("line"))
 
     # ---- pass 1: metadata + header (tiny, collected) -------------------
@@ -79,6 +83,19 @@ def parse_geo_series_matrix(
     if not sample_ids:
         raise ValueError(f"no !Sample_geo_accession line in {path}")
 
+    # the data header (first row of the data zone, captured in pass 1)
+    # names the value columns; when its width disagrees with the metadata
+    # (J3) its own ids are trusted and samples are matched by id, else by
+    # position
+    header_cols = sample_ids
+    if header_like:
+        header_cols = [c.strip().strip('"') for c in header_like[0]["line"].split("\t")][1:]
+        if len(header_cols) == len(sample_ids):
+            header_cols = sample_ids
+    pos_of: dict[str, int] = {}
+    for i, h in enumerate(header_cols):
+        pos_of.setdefault(h, i)
+
     meta_pdf = []
     for i, sid in enumerate(sample_ids):
         chars = {}
@@ -91,41 +108,32 @@ def parse_geo_series_matrix(
                 else:
                     chars[v.strip().lower()] = ""
         meta_pdf.append(
-            (
-                sid,
-                titles[i] if i < len(titles) else None,
-                chars,
-            )
+            (sid, titles[i] if i < len(titles) else None, chars, pos_of.get(sid))
         )
     meta = spark.createDataFrame(
-        meta_pdf, "sample_id STRING, title STRING, characteristics MAP<STRING,STRING>"
+        meta_pdf,
+        "sample_id STRING, title STRING, characteristics MAP<STRING,STRING>, pos INT",
     )
     meta = classify_condition(meta)
 
     # ---- pass 2: distributed data rows ---------------------------------
-    # header row (first row of the data zone) was captured in pass 1: it is
-    # the single line starting with "ID_REF (quoted or not)
-    data = lines.filter(
+    n_cols = len(header_cols)
+    rows = lines.filter(
         ~F.col("line").startswith("!")
         & ~F.col("line").rlike(r'^\s*$')
         & ~F.col("line").startswith("#")
+        & (_strip_quotes(F.split("line", "\t").getItem(0)) != "ID_REF")
     )
-    if header_like:
-        header_cols = [c.strip().strip('"') for c in header_like[0]["line"].split("\t")][1:]
-    else:
-        header_cols = sample_ids
-    if len(header_cols) != len(sample_ids):
-        # positional fallback (J3): trust the header's own ids
-        sample_ids = header_cols
-
-    rows = data.filter(_strip_quotes(F.split("line", "\t").getItem(0)) != "ID_REF")
     parts = F.split("line", "\t")
     probe = _strip_quotes(parts.getItem(0))
     # strip "NNN:" / "NNN-" decoration prefixes (pipeline2.py:450-453)
     probe = F.regexp_replace(probe, r"^\d+[:-]", "")
     probe = _strip_quotes(probe)
 
-    vals = F.slice(parts, 2, len(sample_ids))
+    vals = F.slice(parts, 2, n_cols)
+    # a short row's missing trailing cells are empty, so NA, as in the
+    # reference's DataFrame of ragged rows
+    vals = F.concat(vals, F.array_repeat(F.lit(""), F.lit(n_cols) - F.size(vals)))
     cleaned = F.transform(vals, lambda v: _strip_quotes(F.trim(v)))
     # try_cast, not cast: ANSI mode (Spark 4 default) would otherwise throw
     # inside fused filter predicates before row pruning applies — and NULL-on-
@@ -147,18 +155,8 @@ def parse_geo_series_matrix(
         ),
         lambda x: x,
     )
-    sample_arr = F.array(*[F.lit(s) for s in sample_ids])
-    long_df = (
-        rows.select(probe.alias("probe_id"), casted.alias("_vals"))
-        .filter(~bad)
-        .select("probe_id", F.posexplode("_vals").alias("_pos", "value"))
-        .select(
-            "probe_id",
-            F.element_at(sample_arr, F.col("_pos") + 1).alias("sample_id"),
-            "value",
-        )
-    )
-    return long_df, meta
+    expr = rows.select(probe.alias("probe_id"), casted.alias("values")).filter(~bad)
+    return expr, meta
 
 
 def classify_condition(meta: DataFrame) -> DataFrame:

@@ -8,6 +8,7 @@ BH, |r| threshold graph, centralities, min-max composite)."""
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from tools._geo_reference import reference_compute as _reference_compute
 from drug_target_discovery_spark.plans.pipeline import (
@@ -49,14 +50,16 @@ class TestGeoPipeline:
     def test_parse(self, spark, fixture_paths):
         matrix_path, map_path, vals, info = fixture_paths
         expr, meta = parse_geo_series_matrix(spark, matrix_path)
-        n_cells = expr.count()
+        row = expr.agg(
+            F.sum(F.size("values")).alias("n_cells"),
+            F.sum(F.size(F.filter("values", lambda v: v.isNull()))).alias("n_null"),
+        ).first()
         # every (probe, sample) cell lands exactly once
-        assert n_cells == N_PROBES * N_SAMPLES
+        assert row["n_cells"] == N_PROBES * N_SAMPLES
         m = {r["sample_id"]: r["condition"] for r in meta.collect()}
         assert m == info["condition"]
         # NULL cells arrive as NULLs
-        n_null = expr.filter("value IS NULL").count()
-        assert n_null == 3 + (N_SAMPLES - 2)
+        assert row["n_null"] == 3 + (N_SAMPLES - 2)
 
     def test_full_pipeline_matches_reference(self, spark, fixture_paths):
         matrix_path, map_path, vals, info = fixture_paths
@@ -112,6 +115,36 @@ class TestGeoPipeline:
         }
         assert "1040_at" not in probes  # >80% missing
         assert "1025_at" in probes  # scattered NAs, imputed
+
+
+class TestJobBudget:
+    # Spark jobs of one DrugTargetPipeline.run plus the three sinks of a
+    # benchmark pass (differential CSV, validated CSV, GEXF) on the unit
+    # fixture; counted per job group as perfbench/trace.py counts a stage
+    JOBS = 30
+
+    def test_run_and_sinks_job_count(self, spark, tmp_path):
+        from drug_target_discovery_spark.caching import release_caches
+        from drug_target_discovery_spark.sources.sinks import write_csv, write_gexf
+
+        # an earlier run's cached top-K or edge relation, equal to this
+        # run's, would be read from its cache with fewer jobs
+        release_caches(fixtures=True)
+        matrix_path, map_path = write_fixture(str(tmp_path / "in"))
+        sc = spark.sparkContext
+        group = f"job-budget-{tmp_path.name}"
+        sc.setJobGroup(group, "pipeline job budget")
+        try:
+            expr, meta = parse_geo_series_matrix(spark, matrix_path)
+            mapping = read_probe_mapping_csv(spark, map_path)
+            out = DrugTargetPipeline().run(expr, meta, mapping, client=deterministic_fake_client)
+            write_csv(out["differential"], str(tmp_path / "differential"))
+            write_csv(out["validated_targets"], str(tmp_path / "validated"))
+            write_gexf(out["network_nodes"], out["network_edges"], str(tmp_path / "net.gexf"))
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == self.JOBS
 
 
 class TestEndToEndSummaryGolden:
