@@ -126,7 +126,12 @@ def generations(
 
 
 def fixture_cache(df: DataFrame) -> DataFrame:
-    """Cache a sweep-scoped shared intermediate (memoized across queries)."""
+    """Cache a sweep-scoped shared intermediate (memoized across queries).
+    A local relation (``session.local_frame``) is returned as it is: its
+    rows are already on the driver and read without a job, while each
+    read of a cached one runs a job."""
+    if df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation":
+        return df
     df = df.cache()
     _FIXTURE.append(df)
     return df

@@ -235,48 +235,36 @@ def student_t_two_sided_p(t_stat: pd.Series, t_df: pd.Series) -> pd.Series:
 
 
 def bh_fdr(df: DataFrame, p: str = "pvalue", out: str = "adjusted_pvalue") -> DataFrame:
-    """BH-adjusted p-values as a window program (pipeline2.py:619-627).
+    """BH-adjusted p-values as one window program (pipeline2.py:619-627).
 
-    adj_i = min(1, min_{j >= i} p_(j) * m / j) over non-NULL p ascending.
-    NULL p-values pass through as NULL and are excluded from m (matching
+    adj_i = min(1, min_{j >= i} p_(j) * m / j) over the m valid p ascending.
+    A NULL or NaN p gives NULL and is excluded from m (matching
     statsmodels' behavior on the reference's NaN mask).
 
-    The two global windows are single-partition — correct and fine for
-    post-aggregation key tables (<=10^7 rows). For larger, see
-    ``bh_fdr_scalable``.
+    Every window is global, so the table passes through one
+    single-partition exchange: correct and fine for post-aggregation key
+    tables (<=10^7 rows). For larger, see ``bh_fdr_scalable``.
     """
-    # The input is a post-aggregation p-value table (small by contract) while
-    # its lineage is typically the expensive part of the whole job (Welch agg
-    # + t-CDF). It is consumed three times below (non-null branch, null
-    # branch, count) — cache it so the upstream runs once (query-scoped).
-    from drug_target_discovery_spark.caching import scoped_cache
-
-    df = scoped_cache(df)
-    nn = df.filter(F.col(p).isNotNull() & ~F.isnan(p))
-    nulls = df.filter(F.col(p).isNull() | F.isnan(p)).withColumn(
-        out, F.lit(None).cast("double")
-    )
-    # unpartitioned window bounded: input = the per-gene p-value table
+    valid = F.col(p).isNotNull() & ~F.isnan(p)
+    # unpartitioned windows bounded: input = the per-gene p-value table
     # (feature-dimension-sized, never the fact); the 2-pass
-    # bh_fdr_scalable_adjust is the unbounded-dimension path
-    w_rank = W.orderBy(F.col(p).asc())
+    # bh_fdr_scalable_adjust is the unbounded-dimension path. NaN sorts
+    # above every double and NULLs go last, so the valid p take ranks 1..m.
+    w_rank = W.orderBy(F.col(p).asc_nulls_last())
+    w_all = w_rank.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     # The textbook suffix-min frame (CURRENT ROW .. UNBOUNDED FOLLOWING) is
     # O(n^2) in Spark's WindowExec (per-row frame rescan). A running min over
     # the unique rank DESCENDING is the O(n) incremental formulation of the
     # exact same quantity (rank is duplicate-free, so tie order cannot change
     # the result).
     w_rev = W.orderBy(F.col("_r").desc()).rowsBetween(W.unboundedPreceding, W.currentRow)
-    # m via a 1-row broadcast aggregate (a `count(*) over ()` window would
-    # haul the table into a single partition once more than necessary)
-    m = nn.agg(F.count(F.lit(1)).alias("_m"))
-    adjusted = (
-        nn.crossJoin(F.broadcast(m))
+    return (
+        df.withColumn("_m", F.count(F.when(valid, 1)).over(w_all))
         .withColumn("_r", F.row_number().over(w_rank))
-        .withColumn("_raw", F.col(p) * F.col("_m") / F.col("_r"))
-        .withColumn(out, F.least(F.min("_raw").over(w_rev), F.lit(1.0)))
+        .withColumn("_raw", F.when(valid, F.col(p) * F.col("_m") / F.col("_r")))
+        .withColumn(out, F.when(valid, F.least(F.min("_raw").over(w_rev), F.lit(1.0))))
         .drop("_m", "_r", "_raw")
     )
-    return adjusted.unionByName(nulls)
 
 
 def bh_fdr_scalable(

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from drug_target_discovery_spark.caching import generations
+from drug_target_discovery_spark.session import local_frame
 
 DRIVER_TWIN_THRESHOLD = 1_000_000
 
@@ -94,9 +95,7 @@ def _union_find(spark, edge_rows, node_list, node_type) -> DataFrame:
     import pandas as pd
 
     if not node_list:
-        return spark.createDataFrame(
-            [], f"node {node_type}, component {node_type}"
-        )
+        return local_frame(spark, [], f"node {node_type}, component {node_type}")
     parent = {v: v for v in node_list}
 
     def find(x):
@@ -311,7 +310,7 @@ def _core_driver(spark, edge_rows, node_list, node_type) -> DataFrame:
     max'd over the removal sequence) is its core number."""
     schema = f"node {node_type}, core int"
     if not node_list:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     adj: dict = {v: set() for v in node_list}
     for r in edge_rows:
         s, d = r["src"], r["dst"]
@@ -343,9 +342,7 @@ def _core_driver(spark, edge_rows, node_list, node_type) -> DataFrame:
                 buckets[du].discard(u)
                 deg[u] = du - 1
                 buckets[du - 1].add(u)
-    return spark.createDataFrame(
-        [(v, int(core[v])) for v in node_list], schema
-    )
+    return local_frame(spark, [(v, int(core[v])) for v in node_list], schema)
 
 
 def _core_distributed(
@@ -505,8 +502,6 @@ def _lpa_driver(spark, edge_rows, node_list, node_type, n_iter: int) -> DataFram
         adj[r["src"]].add(r["dst"])
         adj[r["dst"]].add(r["src"])
     schema = f"node {node_type}, community {node_type}"
-    if not node_list:
-        return spark.createDataFrame([], schema)
     labels = {v: v for v in node_list}
     for _ in range(n_iter):
         new = {}
@@ -524,7 +519,7 @@ def _lpa_driver(spark, edge_rows, node_list, node_type, n_iter: int) -> DataFram
             best = max(cnt.values())
             new[v] = min(l for l, c in cnt.items() if c == best)
         labels = new
-    return spark.createDataFrame([(v, labels[v]) for v in node_list], schema)
+    return local_frame(spark, [(v, labels[v]) for v in node_list], schema)
 
 
 def triangle_counts(
@@ -622,11 +617,7 @@ def _triangle_driver(spark, edge_rows, node_list, node_type) -> DataFrame:
                     tri[b] += k
                     tri[c] += k
     schema = f"node {node_type}, n_triangles bigint, degree bigint"
-    if not node_list:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(
-        [(v, tri.get(v, 0), deg.get(v, 0)) for v in node_list], schema
-    )
+    return local_frame(spark, [(v, tri.get(v, 0), deg.get(v, 0)) for v in node_list], schema)
 
 
 def modularity_summary(edges: DataFrame, labels: DataFrame) -> DataFrame:

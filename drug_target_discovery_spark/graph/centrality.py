@@ -30,6 +30,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 from drug_target_discovery_spark.caching import generations
 from drug_target_discovery_spark.functions.stats import composite_score, minmax_scale
 from drug_target_discovery_spark.graph.algorithms import collected_graph
+from drug_target_discovery_spark.session import local_frame
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -381,9 +382,10 @@ def betweenness_centrality(
     node_list, adj, _ = _adjacency(edges, nodes)
     n = len(node_list)
     if n <= SERIAL_BFS_MAX_NODES:
-        return edges.sparkSession.createDataFrame(
+        return local_frame(
+            edges.sparkSession,
             list(zip(node_list, _brandes_totals(adj, node_list, normalized))),
-            schema=_score_schema(nodes, "betweenness_centrality"),
+            _score_schema(nodes, "betweenness_centrality"),
         )
     deps = _per_source(nodes, adj, _score_schema(nodes, "dep"), _dependency_batch)
     summed = deps.groupBy("node").agg(F.sum("dep").alias("bc"))
@@ -402,9 +404,7 @@ def _source_scores(edges: DataFrame, nodes: DataFrame, col: str, score) -> DataF
     node_list, adj, _ = _adjacency(edges, nodes)
     schema = _score_schema(nodes, col)
     if len(node_list) <= SERIAL_BFS_MAX_NODES:
-        return edges.sparkSession.createDataFrame(
-            [(v, score(adj, v)) for v in node_list], schema=schema
-        )
+        return local_frame(edges.sparkSession, [(v, score(adj, v)) for v in node_list], schema)
     return _per_source(
         nodes,
         adj,

@@ -19,7 +19,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _default_driver_memory() -> str:
@@ -101,3 +102,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str | StructType) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s column order) as a local relation.
+
+    Built on the driver as one Arrow table, so the frame is a
+    ``LocalRelation``, empty or not, and reading it runs no Spark job. A
+    Python list handed to ``createDataFrame`` becomes an RDD-backed
+    ``LogicalRDD`` instead, whose every read is a Python-worker job (so
+    does an empty pandas frame)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from drug_target_discovery_spark.session import local_frame
+
 # Keyword tiers of the reference's case/control classifier
 # (pipeline2.py:266-293).
 CANCER_KEYWORDS = ["cancer", "tumor", "tumour", "malignant", "carcinoma", "adenocarcinoma"]
@@ -110,7 +112,8 @@ def parse_geo_series_matrix(
         meta_pdf.append(
             (sid, titles[i] if i < len(titles) else None, chars, pos_of.get(sid))
         )
-    meta = spark.createDataFrame(
+    meta = local_frame(
+        spark,
         meta_pdf,
         "sample_id STRING, title STRING, characteristics MAP<STRING,STRING>, pos INT",
     )
@@ -135,27 +138,38 @@ def parse_geo_series_matrix(
     # reference's DataFrame of ragged rows
     vals = F.concat(vals, F.array_repeat(F.lit(""), F.lit(n_cols) - F.size(vals)))
     cleaned = F.transform(vals, lambda v: _strip_quotes(F.trim(v)))
+
+    def missing(v):
+        return (v == "") | F.upper(v).isin("NA", "NAN", "NULL")
+
     # try_cast, not cast: ANSI mode (Spark 4 default) would otherwise throw
-    # inside fused filter predicates before row pruning applies — and NULL-on-
-    # malformed is exactly the reference's skip-row detection signal anyway
-    casted = F.transform(
-        cleaned,
-        lambda v: F.when(
-            (v == "") | (F.upper(v).isin("NA", "NAN", "NULL")), F.lit(None).cast("double")
-        ).otherwise(v.try_cast("double")),
+    # on a malformed cell — and NULL-on-malformed is exactly the reference's
+    # skip-row detection signal anyway
+    def cast(cells):
+        return F.transform(
+            cells,
+            lambda v: F.when(missing(v), F.lit(None).cast("double")).otherwise(
+                v.try_cast("double")
+            ),
+        )
+
+    # reference semantics: any non-missing cell failing float() drops the
+    # row. Each row becomes 0 or 1 (raw, values) pairs and is exploded: a
+    # generator's input is evaluated once per row, where a filter on the
+    # cast cells is pushed below the projection and casts every cell twice.
+    pairs = F.transform(
+        F.array(cleaned), lambda c: F.struct(c.alias("raw"), cast(c).alias("values"))
     )
-    # reference semantics: any non-missing cell failing float() drops the row
-    bad = F.exists(
-        F.zip_with(
-            cleaned,
-            casted,
-            lambda raw, c: (raw != "")
-            & ~F.upper(raw).isin("NA", "NAN", "NULL")
-            & c.isNull(),
+    kept = F.filter(
+        pairs,
+        lambda r: ~F.exists(
+            F.zip_with(r["raw"], r["values"], lambda raw, x: ~missing(raw) & x.isNull()),
+            lambda bad: bad,
         ),
-        lambda x: x,
     )
-    expr = rows.select(probe.alias("probe_id"), casted.alias("values")).filter(~bad)
+    expr = rows.select(probe.alias("probe_id"), F.explode(kept).alias("_row")).select(
+        "probe_id", "_row.values"
+    )
     return expr, meta
 
 

@@ -35,7 +35,7 @@ CACHE_HEAVY = [
     "lsh_candidate_pairs",
     "near_dup_groups",              # scoped candidate cache
     "connected_components_near_dups",  # union-find / label propagation
-    "bh_fdr_adjust",                # bh_fdr input cache
+    "bh_fdr_adjust",                # one single-partition window program
     "corr_edges_top_parts",         # shared graph fixture
     "eigenvector_centrality_corr_graph",
     "mllib_minhash_neardups",       # MLlib staged cache

@@ -117,34 +117,78 @@ class TestGeoPipeline:
         assert "1025_at" in probes  # scattered NAs, imputed
 
 
+def _jobs(spark, group: str, fn) -> int:
+    """Spark jobs that ``fn()`` runs, counted per job group as
+    perfbench/trace.py counts a stage."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _text_scans(plan, seen: set) -> int:
+    """Text-file scans in a physical plan, each cache's plan counted once:
+    the leaves that run when every cache the plan reads is built."""
+    name = plan.getClass().getSimpleName()
+    if name == "InMemoryTableScanExec":
+        builder = plan.relation().cacheBuilder()
+        key = builder.hashCode()
+        if key in seen:
+            return 0
+        seen.add(key)
+        return _text_scans(builder.cachedPlan(), seen)
+    if name == "AdaptiveSparkPlanExec":
+        return _text_scans(plan.executedPlan(), seen)
+    if name.endswith("QueryStageExec"):
+        return _text_scans(plan.plan(), seen)
+    kids = plan.children()
+    return int(plan.nodeName().startswith("Scan text")) + sum(
+        _text_scans(kids.apply(i), seen) for i in range(kids.size())
+    )
+
+
 class TestJobBudget:
     # Spark jobs of one DrugTargetPipeline.run plus the three sinks of a
     # benchmark pass (differential CSV, validated CSV, GEXF) on the unit
-    # fixture; counted per job group as perfbench/trace.py counts a stage
-    JOBS = 30
+    # fixture
+    JOBS = 20
 
     def test_run_and_sinks_job_count(self, spark, tmp_path):
         from drug_target_discovery_spark.caching import release_caches
         from drug_target_discovery_spark.sources.sinks import write_csv, write_gexf
 
-        # an earlier run's cached top-K or edge relation, equal to this
-        # run's, would be read from its cache with fewer jobs
         release_caches(fixtures=True)
         matrix_path, map_path = write_fixture(str(tmp_path / "in"))
-        sc = spark.sparkContext
-        group = f"job-budget-{tmp_path.name}"
-        sc.setJobGroup(group, "pipeline job budget")
-        try:
+
+        def one_pass():
             expr, meta = parse_geo_series_matrix(spark, matrix_path)
             mapping = read_probe_mapping_csv(spark, map_path)
             out = DrugTargetPipeline().run(expr, meta, mapping, client=deterministic_fake_client)
             write_csv(out["differential"], str(tmp_path / "differential"))
             write_csv(out["validated_targets"], str(tmp_path / "validated"))
             write_gexf(out["network_nodes"], out["network_edges"], str(tmp_path / "net.gexf"))
-        finally:
-            sc._jsc.clearJobGroup()
-        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == self.JOBS
+
+        assert _jobs(spark, f"job-budget-{tmp_path.name}", one_pass) == self.JOBS
+
+    def test_sample_metadata_reads_without_a_job(self, spark, tmp_path):
+        matrix_path, _ = write_fixture(str(tmp_path / "in"))
+        _, meta = parse_geo_series_matrix(spark, matrix_path)
+        assert _jobs(spark, f"meta-{tmp_path.name}", meta.collect) == 0
+
+    def test_run_parses_the_matrix_once(self, spark, tmp_path):
+        """The global max of preprocess and its rows read one cache of
+        the parsed matrix, so the plan behind every output scans the text
+        file once."""
+        matrix_path, map_path = write_fixture(str(tmp_path / "in"))
+        expr, meta = parse_geo_series_matrix(spark, matrix_path)
+        mapping = read_probe_mapping_csv(spark, map_path)
+        out = DrugTargetPipeline().run(expr, meta, mapping)
+        plan = out["gene_expression"]._jdf.queryExecution().executedPlan()
+        assert _text_scans(plan, set()) == 1
 
 
 class TestEndToEndSummaryGolden:

@@ -2,7 +2,7 @@
 numpy/pandas: even-count medians in imputation and in the probe collapse,
 an all-NA probe kept by ``na_threshold=0``, a constant gene, fewer samples
 than ``corr_min_periods``, a data header that disagrees with the sample
-metadata, and correlations within 1e-12 of the edge threshold (the
+metadata, a row with an unparseable cell, and correlations within 1e-12 of the edge threshold (the
 pipeline's driver Gram matrix against the registry's ``F.corr`` self-join).
 """
 
@@ -195,6 +195,32 @@ def test_header_meta_mismatch_matches_the_inner_join(spark, tmp_path):
         assert got[gene]["values"] == g["value"].tolist()
         assert got[gene]["case_v"] == g.loc[g.condition == "case", "value"].tolist()
         assert got[gene]["ctrl_v"] == g.loc[g.condition == "control", "value"].tolist()
+
+
+def test_parse_drops_a_row_with_an_unparseable_cell(spark, tmp_path):
+    """A non-missing cell that float() rejects drops its whole row; empty,
+    NA, NaN and NULL cells are missing (NULL); quotes and blanks around a
+    cell are stripped (the reference's skip-on-ValueError)."""
+    rows = {
+        "ok": ["1.5", "NA", "", "null"],
+        "quoted": ['"2.5"', " 3 ", "NaN", "inf"],
+        "bad": ["1.0", "abc", "3.0", "4.0"],
+        "bad_last": ["1.0", "2.0", "3.0", "1.2.3"],
+    }
+    lines = [
+        "!Sample_geo_accession\t" + "\t".join(f'"S{i}"' for i in range(4)),
+        "!series_matrix_table_begin",
+        '"ID_REF"\t' + "\t".join(f'"S{i}"' for i in range(4)),
+        *(f'"{p}"\t' + "\t".join(v) for p, v in rows.items()),
+        "!series_matrix_table_end",
+    ]
+    path = tmp_path / "series_matrix.txt"
+    path.write_text("\n".join(lines) + "\n")
+    expr, _ = parse_geo_series_matrix(spark, str(path))
+    assert {r["probe_id"]: r["values"] for r in expr.collect()} == {
+        "ok": [1.5, None, None, None],
+        "quoted": [2.5, 3.0, None, float("inf")],
+    }
 
 
 def test_threshold_ties_agree_between_gram_and_f_corr(spark):

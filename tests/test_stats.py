@@ -170,6 +170,17 @@ class TestBH:
         )
         assert "SinglePartition" not in big_plan, big_plan
 
+    def test_window_plan_is_one_exchange_no_cache_no_union(self, spark, big_p):
+        """Plan shape: bh_fdr is one window program: the count, the rank
+        and the running minimum share one single-partition exchange, with
+        no cache of its input and no union of a NULL branch."""
+        from drug_target_discovery_spark.caching import release_caches
+
+        release_caches()  # bh_fdr_scalable's scoped cache of the same input
+        plan = bh_fdr(big_p, "pvalue", "adj")._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange SinglePartition") == 1, plan
+        assert "InMemoryRelation" not in plan and "Union" not in plan, plan
+
 
 # ---------------------------------------------------------------------------
 # z-score (ddof=0) and Welch sufficient statistics
