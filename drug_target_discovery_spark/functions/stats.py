@@ -424,12 +424,3 @@ def minmax_scale(df: DataFrame, cols: list[str], suffix: str = "_scaled") -> Dat
         )
     drop = [f"_min_{c}" for c in cols] + [f"_max_{c}" for c in cols]
     return out.drop(*drop)
-
-
-def composite_score(df: DataFrame, cols: list[str], out: str = "composite_score") -> Column:
-    """Mean of the given (already-scaled) columns (pipeline2.py:765-769)."""
-    expr = cols[0] if isinstance(cols[0], Column) else F.col(cols[0])
-    s = expr
-    for c in cols[1:]:
-        s = s + (c if isinstance(c, Column) else F.col(c))
-    return (s / float(len(cols))).alias(out)

@@ -35,14 +35,14 @@ def collected_graph(
     no hint supplies is counted, so a fully hinted gate runs no job.
 
     Every twin is parity-tested against its ``_distributed`` plan
-    (tests/test_graph_algorithms.py, tests/test_graph.py). The graph tier
-    has two other strategy constants, and neither is a twin gate:
-    ``centrality.SERIAL_BFS_MAX_NODES`` picks serial vs source-parallel
-    BFS for the per-source centralities (both collect the adjacency,
-    which the corr graph's top-K bounds), and queries/graphq.py admits
-    the Adamic-Adar driver path by ``_AA_DRIVER_MAX_EDGES`` and the wedge
-    bound ``_AA_DRIVER_WEDGE_CAP``, since its driver work is quadratic in
-    hub degree."""
+    (tests/test_graph_algorithms.py, tests/test_graph.py). The per-source
+    centralities (betweenness, closeness, harmonic) and
+    ``centrality.target_scores`` have no twin: they always run on the
+    driver over a collected adjacency, which the corr graph's top-K
+    bounds. The graph tier's other strategy constants are in
+    queries/graphq.py, which admits the Adamic-Adar driver path by
+    ``_AA_DRIVER_MAX_EDGES`` and the wedge bound ``_AA_DRIVER_WEDGE_CAP``,
+    since its driver work is quadratic in hub degree."""
     t = DRIVER_TWIN_THRESHOLD
     if (n_edges if n_edges is not None else edges.count()) >= t // 2:
         return None
@@ -89,13 +89,7 @@ def connected_components(
 
 
 def _union_find(spark, edge_rows, node_list, node_type) -> DataFrame:
-    """Union-find over collected edges (exact, O(E α(V))). An empty graph
-    returns an empty (node, component) frame with an explicit schema —
-    createDataFrame cannot infer one from zero rows."""
-    import pandas as pd
-
-    if not node_list:
-        return local_frame(spark, [], f"node {node_type}, component {node_type}")
+    """Union-find over collected edges (exact, O(E α(V)))."""
     parent = {v: v for v in node_list}
 
     def find(x):
@@ -112,11 +106,8 @@ def _union_find(spark, edge_rows, node_list, node_type) -> DataFrame:
             if b < a:
                 a, b = b, a
             parent[b] = a
-    comp = {v: find(v) for v in node_list}
-    pdf = pd.DataFrame({"node": node_list, "component": [comp[v] for v in node_list]})
-    # createDataFrame infers bigint for int ids; keep the input's type
-    return spark.createDataFrame(pdf).select(
-        *(F.col(c).cast(node_type) for c in ("node", "component"))
+    return local_frame(
+        spark, [(v, find(v)) for v in node_list], f"node {node_type}, component {node_type}"
     )
 
 
@@ -197,7 +188,6 @@ def _pagerank_driver(
     spark, edge_rows, node_list, node_type, damping: float, max_iter: int, tol: float
 ) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     idx = {v: i for i, v in enumerate(node_list)}
     n = len(node_list)
@@ -216,9 +206,9 @@ def _pagerank_driver(
         pr = (1.0 - damping) / n + damping * (mass + dangling / n)
         if np.abs(pr - prev).sum() < n * tol:
             break
-    pdf = pd.DataFrame({"node": node_list, "pagerank": pr})
-    # createDataFrame infers bigint for int ids; keep the input's type
-    return spark.createDataFrame(pdf).withColumn("node", F.col("node").cast(node_type))
+    return local_frame(
+        spark, list(zip(node_list, pr.tolist())), f"node {node_type}, pagerank double"
+    )
 
 
 def _pagerank_distributed(
@@ -655,7 +645,8 @@ def modularity_summary(edges: DataFrame, labels: DataFrame) -> DataFrame:
     spark = edges.sparkSession
     m = edges.count()
     if m == 0:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(0, 0, 0, None)],
             "n_nodes long, n_edges long, n_communities long, modularity double",
         )

@@ -10,10 +10,9 @@ idiomatic Spark representation — an undirected edge list ``(src, dst)`` with
 - eigenvector: power iteration x' = (I + A)·x as iterative join-aggregate,
   L2-normalized, matching networkx's (I+A) iteration/convergence exactly
   (unweighted adjacency — the reference passes no weight kwarg).
-- betweenness: exact Brandes, parallelized ACROSS SOURCES — each task runs
-  single-source Brandes on a broadcast adjacency (fine while V fits in one
-  executor's memory, which the reference's top-K construction guarantees:
-  K<=500). Dependencies are summed per node in one final aggregate.
+- betweenness, closeness, harmonic: one BFS per source, run serially on
+  the driver over one collect of the adjacency, which the reference's
+  top-K construction bounds at K<=500 nodes.
 
 All unweighted, matching nx defaults (hop-count shortest paths).
 """
@@ -22,13 +21,10 @@ from __future__ import annotations
 
 from collections import deque
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
 
 from drug_target_discovery_spark.caching import generations
-from drug_target_discovery_spark.functions.stats import composite_score, minmax_scale
 from drug_target_discovery_spark.graph.algorithms import collected_graph
 from drug_target_discovery_spark.session import local_frame
 
@@ -126,9 +122,9 @@ def _eigenvector_driver(
         if r["src"] in idx and r["dst"] in idx
     ]
     x = _power_iteration(pairs, len(node_list), max_iter, tol)
-    pdf = pd.DataFrame({"node": node_list, "eigenvector_centrality": x})
-    # createDataFrame infers bigint for int ids; keep the input's type
-    return spark.createDataFrame(pdf).withColumn("node", F.col("node").cast(node_type))
+    return local_frame(
+        spark, list(zip(node_list, x.tolist())), f"node {node_type}, eigenvector_centrality double"
+    )
 
 
 def _eigenvector_distributed(
@@ -177,7 +173,7 @@ def _eigenvector_distributed(
 
 def _brandes_single_source(adj: dict, s) -> dict:
     """Exact single-source dependency accumulation (Brandes 2001, unweighted).
-    Returns {node: dependency_from_s}. Pure-Python; runs inside one task."""
+    Returns {node: dependency_from_s}. Pure Python."""
     S = []
     P = {v: [] for v in adj}
     sigma = dict.fromkeys(adj, 0.0)
@@ -204,21 +200,13 @@ def _brandes_single_source(adj: dict, s) -> dict:
     return delta
 
 
-# Up to this many nodes the per-source centralities (betweenness,
-# closeness, harmonic) run their BFS serially on the driver, and
-# target_scores takes its fused driver path: exact Brandes is O(V·E) in
-# pure Python, and below this size the source-parallel mapInPandas fan-out
-# costs more in worker start-up and shuffle than it saves. Every workload
-# graph fits under it (registry top-50, gse46602 top-100, paper top-500).
-SERIAL_BFS_MAX_NODES = 512
-
-
 def _adjacency(edges: DataFrame, nodes: DataFrame):
-    """``(node_list, adj, kept)`` from one collect each of ``nodes`` and
-    ``edges``: ``adj`` maps every node to its neighbor list and ``kept``
-    lists, in edge order, the (src, dst) edges with both ends in ``nodes``.
-    The per-source paths broadcast ``adj``; the top-K construction bounds
-    it, not ``algorithms.collected_graph``."""
+    """``(node_list, adj, kept, node_type)`` from one collect each of
+    ``nodes`` and ``edges``: ``adj`` maps every node to its neighbor list,
+    ``kept`` lists, in edge order, the (src, dst) edges with both ends in
+    ``nodes``, and ``node_type`` is the node column's type. The top-K
+    construction bounds the graph (n_top_genes <= 500, pipeline2.py:663),
+    not ``algorithms.collected_graph``."""
     node_list = [r["node"] for r in nodes.select("node").collect()]
     adj: dict = {v: [] for v in node_list}
     kept = []
@@ -228,135 +216,63 @@ def _adjacency(edges: DataFrame, nodes: DataFrame):
             adj[s].append(d)
             adj[d].append(s)
             kept.append((s, d))
-    return node_list, adj, kept
-
-
-def _score_schema(nodes: DataFrame, col: str) -> StructType:
-    """(node, ``col`` double) with the node column's own type."""
-    return StructType(
-        [nodes.select("node").schema.fields[0], StructField(col, DoubleType(), False)]
-    )
-
-
-def _betweenness_scale(n: int, normalized: bool) -> float:
-    """Undirected pair dependencies halve (each pair is counted from both
-    endpoints); normalized scale 2/((n-1)(n-2)) — networkx conventions."""
-    scale = 0.5
-    if normalized and n > 2:
-        scale *= 2.0 / ((n - 1) * (n - 2))
-    return scale
+    return node_list, adj, kept, dict(nodes.dtypes)["node"]
 
 
 def _brandes_totals(adj: dict, node_list: list, normalized: bool) -> list:
     """Serial exact Brandes over every source: the betweenness of each
-    node of ``node_list``, in order."""
+    node of ``node_list``, in order. Undirected pair dependencies halve
+    (each pair is counted from both endpoints); normalized scale
+    2/((n-1)(n-2)) — networkx conventions."""
     bc = dict.fromkeys(node_list, 0.0)
     for s in node_list:
         for v, dep in _brandes_single_source(adj, s).items():
             if dep:
                 bc[v] += dep
-    scale = _betweenness_scale(len(node_list), normalized)
+    n = len(node_list)
+    scale = 0.5
+    if normalized and n > 2:
+        scale *= 2.0 / ((n - 1) * (n - 2))
     return [bc[v] * scale for v in node_list]
 
 
-def _per_source(nodes: DataFrame, adj: dict, schema: StructType, batch) -> DataFrame:
-    """The source-parallel plan: the node list spread over
-    min(max(n//8, 1), 64) partitions as BFS sources, the adjacency
-    broadcast to every task, and ``batch(adj, sources)`` returning each
-    partition's pandas rows of ``schema`` (empty batches are dropped)."""
-    badj = nodes.sparkSession.sparkContext.broadcast(adj)
-
-    def run(pdf_iter):
-        adj_local = badj.value
-        for pdf in pdf_iter:
-            out = batch(adj_local, list(pdf["node"]))
-            if len(out):
-                yield out
-
-    sources = nodes.select("node").repartition(min(max(len(adj) // 8, 1), 64))
-    return sources.mapInPandas(run, schema=schema)
-
-
-def centralities_fused_driver(
-    edges: DataFrame, nodes: DataFrame, normalized: bool = True
-) -> pd.DataFrame:
-    """All three centralities from ONE edge-list collect, computed on the
-    driver — the small-graph fast path (the reference's top-K construction
-    bounds the graph at n_top_genes<=500 nodes, pipeline2.py:663).
-
-    Running degree + eigenvector + betweenness as separate DataFrame
-    programs costs ~20 tiny Spark jobs on a bounded graph; one collect plus
-    numpy/pure-Python is the same arithmetic with two jobs. The distributed
-    functions below remain the scale path for graphs that don't fit.
-
-    Returns a pandas DataFrame (node, degree_centrality,
-    betweenness_centrality, eigenvector_centrality) with the exact networkx
-    conventions of the individual functions, over a non-empty node set."""
-    import numpy as np
-
-    node_list, adj, kept = _adjacency(edges, nodes)
-    n = len(node_list)
-    idx = {v: i for i, v in enumerate(node_list)}
-    deg = np.array([len(adj[v]) for v in node_list], dtype=np.float64)
-    return pd.DataFrame(
-        {
-            "node": node_list,
-            "degree_centrality": deg / float(max(n - 1, 1)),
-            "betweenness_centrality": np.array(_brandes_totals(adj, node_list, normalized)),
-            "eigenvector_centrality": _power_iteration(
-                [(idx[s], idx[d]) for s, d in kept], n, 1000, 1.0e-6
-            ),
-        }
-    )
-
-
-def target_scores(
-    edges: DataFrame, nodes: DataFrame, n_nodes: int | None = None
-) -> DataFrame:
+def target_scores(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """The reference's network scoring (pipeline2.py:722-792), unordered
     and unrounded: all three centralities -> min-max scale -> composite =
     their mean. Returns (node, degree_centrality, betweenness_centrality,
-    eigenvector_centrality, composite_score).
+    eigenvector_centrality, composite_score); an empty node table gives an
+    empty result of that schema.
 
-    Graphs of up to SERIAL_BFS_MAX_NODES nodes (the reference's top-K
-    construction bounds nodes at n_top_genes<=500) take the fused driver
-    path: one edge-list collect, all three centralities and the min-max in
-    numpy/pure-Python, one createDataFrame — vs ~20 tiny Spark jobs for
-    the distributed program, where betweenness runs source-parallel.
-    Empty graphs also take the distributed path (typed empty result, no
-    pandas schema inference).
-    ``n_nodes``: caller-known node count — skips a count() job."""
-    e = edges.select("src", "dst")
-    n = n_nodes if n_nodes is not None else nodes.count()
-    cent_cols = ["degree_centrality", "betweenness_centrality", "eigenvector_centrality"]
-    if 0 < n <= SERIAL_BFS_MAX_NODES:
-        pdf = centralities_fused_driver(e, nodes, normalized=True)
-        # same sklearn constant-column -> 0 convention as minmax_scale
-        for c in cent_cols:
-            span = pdf[c].max() - pdf[c].min()
-            pdf[c + "_scaled"] = 0.0 if span == 0.0 else (pdf[c] - pdf[c].min()) / span
-        # createDataFrame infers bigint for int ids; keep the input's type
-        scaled = edges.sparkSession.createDataFrame(pdf).withColumn(
-            "node", F.col("node").cast(nodes.schema["node"].dataType)
-        )
-    else:
-        dc = degree_centrality(e, nodes, n_nodes=n)
-        ec = eigenvector_centrality(e, nodes, max_iter=1000, tol=1e-6, n_nodes=n)
-        bc = betweenness_centrality(e, nodes, normalized=True)
-        scaled = minmax_scale(dc.join(ec, "node").join(bc, "node"), cent_cols)
-    return scaled.select(
-        "node", *cent_cols, composite_score(scaled, [c + "_scaled" for c in cent_cols])
+    One collect of each table, then everything on the driver: degree,
+    serial Brandes, the numpy power iteration, the min-max with sklearn's
+    constant-column -> 0 convention, and the mean, with the exact networkx
+    conventions of the individual functions — vs ~20 tiny Spark jobs for
+    the three DataFrame programs on a graph the top-K construction bounds
+    at n_top_genes <= 500 nodes."""
+    import numpy as np
+
+    node_list, adj, kept, node_type = _adjacency(edges, nodes)
+    n = len(node_list)
+    cols: list = []
+    if n:
+        idx = {v: i for i, v in enumerate(node_list)}
+        deg = np.array([len(adj[v]) for v in node_list], dtype=np.float64)
+        cols = [
+            deg / float(max(n - 1, 1)),
+            np.array(_brandes_totals(adj, node_list, normalized=True)),
+            _power_iteration([(idx[s], idx[d]) for s, d in kept], n, 1000, 1.0e-6),
+        ]
+        scaled = []
+        for c in cols:
+            span = c.max() - c.min()
+            scaled.append(np.zeros(n) if span == 0.0 else (c - c.min()) / span)
+        cols.append((scaled[0] + scaled[1] + scaled[2]) / 3.0)
+    return local_frame(
+        edges.sparkSession,
+        list(zip(node_list, *(c.tolist() for c in cols))),
+        f"node {node_type}, degree_centrality double, betweenness_centrality double, "
+        "eigenvector_centrality double, composite_score double",
     )
-
-
-def _dependency_batch(adj: dict, sources: list) -> pd.DataFrame:
-    """Brandes dependencies of one partition's sources, summed per node."""
-    acc: dict = {}
-    for s in sources:
-        for v, d in _brandes_single_source(adj, s).items():
-            if d:
-                acc[v] = acc.get(v, 0.0) + d
-    return pd.DataFrame({"node": list(acc.keys()), "dep": list(acc.values())})
 
 
 def betweenness_centrality(
@@ -364,62 +280,30 @@ def betweenness_centrality(
     nodes: DataFrame,
     normalized: bool = True,
 ) -> DataFrame:
-    """Exact betweenness (pipeline2.py:748), parallel across sources.
-
-    The adjacency (node -> neighbor list) is broadcast to every task; sources
-    are distributed via the nodes DataFrame, each task accumulates Brandes
-    dependencies for its sources (mapInPandas), and a final groupBy sums
-    per node. Undirected: pair dependencies halve; normalized scale
-    2/((n-1)(n-2)) — networkx conventions.
-
-    Up to SERIAL_BFS_MAX_NODES nodes serial Brandes on the driver beats
-    the fan-out's worker start-up and shuffle by seconds, on the adjacency
-    that is collected either way (the broadcast payload); equivalence is
-    pinned in tests/test_graph.py. Scale envelope of the source-parallel
-    plan: V must fit per-executor (broadcast adjacency); source fan-out is
-    embarrassingly parallel, to ~10^6 nodes / arbitrary source counts.
-    """
-    node_list, adj, _ = _adjacency(edges, nodes)
-    n = len(node_list)
-    if n <= SERIAL_BFS_MAX_NODES:
-        return local_frame(
-            edges.sparkSession,
-            list(zip(node_list, _brandes_totals(adj, node_list, normalized))),
-            _score_schema(nodes, "betweenness_centrality"),
-        )
-    deps = _per_source(nodes, adj, _score_schema(nodes, "dep"), _dependency_batch)
-    summed = deps.groupBy("node").agg(F.sum("dep").alias("bc"))
-    scale = _betweenness_scale(n, normalized)
-    return nodes.join(summed, "node", "left").select(
-        "node",
-        (F.coalesce("bc", F.lit(0.0)) * F.lit(scale)).alias("betweenness_centrality"),
+    """Exact betweenness (pipeline2.py:748): serial Brandes on the driver
+    (``_brandes_totals``)."""
+    return _driver_scores(
+        edges, nodes, "betweenness_centrality",
+        lambda adj, node_list: _brandes_totals(adj, node_list, normalized),
     )
 
 
-def _source_scores(edges: DataFrame, nodes: DataFrame, col: str, score) -> DataFrame:
-    """(node, ``col``) = ``score(adj, node)`` for every node: serially on
-    the driver up to SERIAL_BFS_MAX_NODES nodes (worker start-up dominates
-    tiny graphs), else one source-parallel mapInPandas with NO final
-    shuffle, since each source's BFS yields its own score."""
-    node_list, adj, _ = _adjacency(edges, nodes)
-    schema = _score_schema(nodes, col)
-    if len(node_list) <= SERIAL_BFS_MAX_NODES:
-        return local_frame(edges.sparkSession, [(v, score(adj, v)) for v in node_list], schema)
-    return _per_source(
-        nodes,
-        adj,
-        schema,
-        lambda adj_local, src: pd.DataFrame(
-            {"node": src, col: [score(adj_local, s) for s in src]}
-        ),
+def _driver_scores(edges: DataFrame, nodes: DataFrame, col: str, scores) -> DataFrame:
+    """(node, ``col``) with ``scores(adj, node_list)`` giving each node's
+    score in order, computed on the driver over one collect of the
+    adjacency."""
+    node_list, adj, _, node_type = _adjacency(edges, nodes)
+    return local_frame(
+        edges.sparkSession,
+        list(zip(node_list, scores(adj, node_list))),
+        f"node {node_type}, {col} double",
     )
 
 
 def _closeness_single_source(adj: dict, s) -> float:
     """Single-source BFS closeness, networkx wf_improved semantics:
     (r-1)/totsp * (r-1)/(n-1) with r = nodes reached incl. s and n =
-    len(adj); 0.0 for isolated sources. Pure-Python; runs inside one
-    task."""
+    len(adj); 0.0 for isolated sources. Pure Python."""
     dist = {s: 0}
     Q = deque([s])
     tot = 0
@@ -441,13 +325,11 @@ def closeness_centrality(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """Exact closeness centrality [EXT] — networkx conventions
     (wf_improved: the per-component closeness scaled by the reachable
     fraction, so multi-component graphs don't inflate small components).
-
-    Unlike Brandes, each source's BFS yields ITS OWN closeness — no
-    cross-source accumulation at all, so the source-parallel plan is one
-    mapInPandas over the node list (broadcast adjacency, same scale
-    envelope as betweenness) with NO final shuffle (``_source_scores``);
-    equivalence of the two paths is pinned in tests/test_graph.py."""
-    return _source_scores(edges, nodes, "closeness_centrality", _closeness_single_source)
+    One BFS per source on the driver (``_driver_scores``)."""
+    return _driver_scores(
+        edges, nodes, "closeness_centrality",
+        lambda adj, node_list: [_closeness_single_source(adj, v) for v in node_list],
+    )
 
 
 def _harmonic_single_source(adj: dict, s) -> float:
@@ -477,7 +359,9 @@ def harmonic_centrality(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """Exact harmonic centrality [EXT] — networkx conventions (sum of
     reciprocal distances; well-defined on disconnected graphs, the
     reason Boldi & Vigna 2014 prefer it over closeness). Same execution
-    envelope as ``closeness_centrality`` (``_source_scores``).
-    Per-distance integer level counts make each score order-deterministic
-    (see ``_harmonic_single_source``)."""
-    return _source_scores(edges, nodes, "harmonic_centrality", _harmonic_single_source)
+    as ``closeness_centrality``. Per-distance integer level counts make
+    each score order-deterministic (see ``_harmonic_single_source``)."""
+    return _driver_scores(
+        edges, nodes, "harmonic_centrality",
+        lambda adj, node_list: [_harmonic_single_source(adj, v) for v in node_list],
+    )

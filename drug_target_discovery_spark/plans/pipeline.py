@@ -281,12 +281,9 @@ class DrugTargetPipeline:
     def score_targets(self, nodes: DataFrame, edges: DataFrame) -> DataFrame:
         """All three centralities -> min-max scale -> composite mean
         (``graph.centrality.target_scores``, G2-G4, T4, T5) -> ranked desc
-        with deterministic tie-break (K3). ``nodes`` is <= n_top_genes
-        rows, so the node count comes from collecting it: no job for
-        :meth:`build_network`'s local relation, where ``count()`` runs
-        two."""
+        with deterministic tie-break (K3)."""
         return (
-            target_scores(edges, nodes, n_nodes=len(nodes.collect()))
+            target_scores(edges, nodes)
             .withColumnRenamed("node", "gene")
             .orderBy(F.desc("composite_score"), F.asc("gene"))
         )

@@ -23,6 +23,7 @@ from drug_target_discovery_spark.graph.centrality import (
 from drug_target_discovery_spark.graph.algorithms import triangle_counts
 from drug_target_discovery_spark.operators.correlation import corr_edges
 from drug_target_discovery_spark.queries.registry import register
+from drug_target_discovery_spark.session import local_frame
 from drug_target_discovery_spark.sources.tables import load_table
 
 try:  # fixture VALUES oracles (networkx on the sf0.01 graph) — generated
@@ -137,7 +138,7 @@ def _corr_graph_memo(
         # ONE job: ranks the genes and materializes the cell memo en route
         top_vals = [r["g"] for r in _top_genes(cell).collect()]
         g_type = dict(cell.dtypes)["g"]
-        nodes = spark.createDataFrame([(v,) for v in top_vals], f"node {g_type}")
+        nodes = local_frame(spark, [(v,) for v in top_vals], f"node {g_type}")
         sub = cell.filter(F.col("g").isin(top_vals)) if top_vals else cell.filter(F.lit(False))
         edges = corr_edges(sub, "g", "s", "v", threshold=CORR_THRESHOLD, min_periods=MIN_PERIODS)
         # checkpoint, not cache (optimization r14): ~12 graph consumers
@@ -246,17 +247,18 @@ def eigenvector_centrality_corr_graph(spark: SparkSession, sf_dir: str) -> DataF
 
 
 # --------------------------------------------------------------------------
-# G3: betweenness centrality (source-parallel exact Brandes)
+# G3: betweenness centrality (serial exact Brandes on the driver)
 # --------------------------------------------------------------------------
 @register(
     "betweenness_centrality_corr_graph",
-    tags=("graph", "mapInPandas"),
+    tags=("graph", "centrality"),
     oracle=GRAPH_ORACLES.get("betweenness_centrality_corr_graph"),
 )
 def betweenness_centrality_corr_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Brandes betweenness, parallel across sources with broadcast
-    adjacency (G3, pipeline2.py:748). Oracle = networkx fixture values on
-    the sf0.01 graph; parity also unit-tested in tests/test_graph.py."""
+    """Exact Brandes betweenness, serially on the driver over the
+    collected adjacency (G3, pipeline2.py:748). Oracle = networkx fixture
+    values on the sf0.01 graph; parity also unit-tested in
+    tests/test_graph.py."""
     nodes, edges = _corr_graph(spark, sf_dir)
     bc = betweenness_centrality(edges.select("src", "dst"), nodes, normalized=True)
     return bc.select("node", rnd("betweenness_centrality", 6).alias("betweenness_centrality"))
@@ -304,11 +306,10 @@ def network_target_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     desc with deterministic tie-break. Oracle = networkx fixture values
     (centralities AND the min-max composite) on the sf0.01 graph."""
     nodes, edges = _corr_graph(spark, sf_dir)
-    n_nodes, _ = _corr_graph_counts(spark, sf_dir)
     cols = ["degree_centrality", "betweenness_centrality", "eigenvector_centrality",
             "composite_score"]
     return (
-        target_scores(edges, nodes, n_nodes=n_nodes)
+        target_scores(edges, nodes)
         .select("node", *(rnd(c, 6).alias(c) for c in cols))
         .orderBy(F.desc("composite_score"), F.asc("node"))
     )
@@ -538,16 +539,13 @@ def _aa_symmetric(e: DataFrame) -> DataFrame:
 
 def _aa_degrees(e: DataFrame) -> DataFrame:
     """(node, d) over the symmetric edge list, cached: node-count-bounded,
-    and read by the gate, the middle-degree cap and the scoring join."""
+    and read by the gate and the scoring join."""
     return scoped_cache(
         _aa_symmetric(e).groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("d"))
     )
 
 
-def adamic_adar_pairs(
-    e: DataFrame,
-    max_middle_degree: int | None = None,
-) -> DataFrame:
+def adamic_adar_pairs(e: DataFrame) -> DataFrame:
     """Core Adamic-Adar scorer over a canonical (a < b) DISTINCT edge
     list: returns (u, w, n_common, s_q) for every NON-adjacent pair with
     at least one common neighbor, where s_q is the micro-unit-quantized
@@ -565,23 +563,13 @@ def adamic_adar_pairs(
     query's remaining wall is the shared corr-graph memo
     materialization, paid once per sweep by whichever family member runs
     first), identical integer quantization, exact-parity-tested against
-    ``_adamic_adar_distributed``.
-
-    ``max_middle_degree`` is the production skew valve: the wedge join
-    fans out deg(z)^2 rows per middle, so ONE hub node dominates the
-    whole job (a 5K-degree hub alone is 12.5M wedge rows). Capping
-    excludes hubs as MIDDLES only — exactly the terms Adamic-Adar
-    weights least (1/ln(deg) -> 0), the standard approximation for
-    link prediction at scale. None (default, used by the registered
-    query) is exact. The capped variant's wall-time effect is recorded
-    in SCALING.md's hub-skew table."""
+    ``_adamic_adar_distributed``."""
     # Skew-aware gate (ADVICE r6): edge count alone admits graphs whose
     # wedge-pair work is quadratic in a hub's degree — one ~20K-degree hub
-    # inside a 20K-edge graph is ~2e8 Python dict entries, the exact cliff
-    # the distributed path's max_middle_degree valve exists to avoid. The
-    # driver cost is sum_z C(deg z, 2) <= sum deg^2 / 2, an O(E) statistic
-    # read off the degree table in the SAME single action as the edge
-    # count; that action also materializes the cached degree table the
+    # inside a 20K-edge graph is ~2e8 Python dict entries. The driver
+    # cost is sum_z C(deg z, 2) <= sum deg^2 / 2, an O(E) statistic read
+    # off the degree table in the SAME single action as the edge count;
+    # that action also materializes the cached degree table the
     # distributed path then reuses.
     deg = _aa_degrees(e)
     stats = deg.agg(
@@ -591,15 +579,11 @@ def adamic_adar_pairs(
     n_edges = (stats["sd"] or 0) // 2
     wedge_pair_bound = (stats["sdd"] or 0) // 2
     if n_edges <= _AA_DRIVER_MAX_EDGES and wedge_pair_bound <= _AA_DRIVER_WEDGE_CAP:
-        return _adamic_adar_driver(e, max_middle_degree)
-    return _adamic_adar_distributed(e, max_middle_degree, deg)
+        return _adamic_adar_driver(e)
+    return _adamic_adar_distributed(e, deg)
 
 
-def _adamic_adar_distributed(
-    e: DataFrame,
-    max_middle_degree: int | None = None,
-    deg: DataFrame | None = None,
-) -> DataFrame:
+def _adamic_adar_distributed(e: DataFrame, deg: DataFrame | None = None) -> DataFrame:
     """The distributed wedge join; ``deg`` is the gate's cached degree
     table when it ran."""
     if deg is None:
@@ -607,13 +591,6 @@ def _adamic_adar_distributed(
     sym = _aa_symmetric(e)
     s1 = sym.select(F.col("a").alias("u"), F.col("b").alias("z"))
     s2 = sym.select(F.col("a").alias("z"), F.col("b").alias("w"))
-    if max_middle_degree is not None:
-        # cap ONE side only — the equi-join on z propagates the middle
-        # filter to the other side for free
-        ok = deg.filter(F.col("d") <= max_middle_degree).select(
-            F.col("node").alias("z")
-        )
-        s1 = s1.join(ok, "z", "left_semi")
     wedge = s1.join(s2, "z").filter(F.col("u") < F.col("w"))
     cand = wedge.join(
         e, (wedge["u"] == e["a"]) & (wedge["w"] == e["b"]), "left_anti"
@@ -630,9 +607,7 @@ def _adamic_adar_distributed(
     )
 
 
-def _adamic_adar_driver(
-    e: DataFrame, max_middle_degree: int | None
-) -> DataFrame:
+def _adamic_adar_driver(e: DataFrame) -> DataFrame:
     """Driver fast path for small (cardinality-gated) graphs: adjacency
     sets + wedge enumeration in Python, with the SAME per-term integer
     quantization floor(1e6/ln(deg z) + 0.5) — IEEE-identical to the
@@ -640,8 +615,6 @@ def _adamic_adar_driver(
     (pinned by tests/test_graph.py::test_driver_equals_distributed)."""
     import math
     from collections import defaultdict
-
-    from pyspark.sql.types import LongType, StructField, StructType
 
     adj: dict = defaultdict(set)
     for r in e.select("a", "b").collect():
@@ -656,8 +629,6 @@ def _adamic_adar_driver(
     for z, nbrs in adj.items():
         if len(nbrs) < 2:
             continue
-        if max_middle_degree is not None and len(nbrs) > max_middle_degree:
-            continue
         ns = sorted(nbrs)
         wz = q[z]
         for i, u in enumerate(ns):
@@ -667,17 +638,12 @@ def _adamic_adar_driver(
                     cell = acc[(u, w)]
                     cell[0] += 1
                     cell[1] += wz
-    node_type = e.schema["a"].dataType
-    schema = StructType(
-        [
-            StructField("u", node_type, False),
-            StructField("w", node_type, False),
-            StructField("n_common", LongType(), False),
-            StructField("s_q", LongType(), False),
-        ]
+    node_type = dict(e.dtypes)["a"]
+    return local_frame(
+        e.sparkSession,
+        [(u, w, c, s) for (u, w), (c, s) in acc.items()],
+        f"u {node_type}, w {node_type}, n_common bigint, s_q bigint",
     )
-    rows = [(u, w, c, s) for (u, w), (c, s) in acc.items()]
-    return e.sparkSession.createDataFrame(rows, schema)
 
 
 @register(
@@ -758,11 +724,10 @@ def closeness_centrality_corr_graph(spark: SparkSession, sf_dir: str) -> DataFra
     wf_improved semantics — per-component closeness scaled by the
     reachable fraction). Completes the centrality family next to
     degree / eigenvector / betweenness / PageRank / k-core; a rider on
-    the sweep-scoped graph memo. Source-parallel BFS with NO final
-    shuffle above SERIAL_BFS_MAX_NODES (each source yields its own
-    score — see graph/centrality.py closeness_centrality); fixture
-    VALUES oracle generated against networkx by
-    tools/gen_graph_oracles.py."""
+    the sweep-scoped graph memo. One BFS per source, serially on the
+    driver over the collected adjacency (graph/centrality.py
+    closeness_centrality); fixture VALUES oracle generated against
+    networkx by tools/gen_graph_oracles.py."""
     from drug_target_discovery_spark.graph.centrality import closeness_centrality
 
     nodes, edges = _corr_graph(spark, sf_dir)
@@ -786,11 +751,11 @@ def harmonic_centrality_corr_graph(spark: SparkSession, sf_dir: str) -> DataFram
     Vigna 2014 recommend over closeness on disconnected graphs — the
     correlation graph IS multi-component, exactly the case where
     closeness needs its wf_improved correction and harmonic needs none.
-    A rider on the sweep-scoped graph memo; same source-parallel
-    no-final-shuffle plan as closeness, with per-distance integer level
-    counts making every score order-deterministic (see
-    graph/centrality.py harmonic_centrality); fixture VALUES oracle
-    generated against networkx by tools/gen_graph_oracles.py."""
+    A rider on the sweep-scoped graph memo; same serial driver BFS as
+    closeness, with per-distance integer level counts making every score
+    order-deterministic (see graph/centrality.py harmonic_centrality);
+    fixture VALUES oracle generated against networkx by
+    tools/gen_graph_oracles.py."""
     from drug_target_discovery_spark.graph.centrality import harmonic_centrality
 
     nodes, edges = _corr_graph(spark, sf_dir)

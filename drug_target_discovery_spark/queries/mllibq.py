@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from drug_target_discovery_spark.functions.rounding import rnd
 from drug_target_discovery_spark.queries.registry import register
+from drug_target_discovery_spark.session import local_frame
 from drug_target_discovery_spark.sources.tables import load_table
 
 
@@ -104,5 +105,5 @@ def mllib_corr_matrix_top(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(len(genes))
         for j in range(i + 1, len(genes))
     ]
-    out = spark.createDataFrame(rows, "g1 BIGINT, g2 BIGINT, r DOUBLE")
+    out = local_frame(spark, rows, "g1 BIGINT, g2 BIGINT, r DOUBLE")
     return out.select("g1", "g2", rnd("r", 6).alias("r"))

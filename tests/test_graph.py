@@ -6,7 +6,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from drug_target_discovery_spark.graph import centrality
 from drug_target_discovery_spark.graph.centrality import (
     _eigenvector_distributed,
     betweenness_centrality,
@@ -84,20 +83,6 @@ class TestCentralities:
         for n, v in expected.items():
             assert got[n] == pytest.approx(v, abs=1e-12)
 
-    def test_betweenness_distributed_path(self, spark, graph_dfs, monkeypatch):
-        # force the source-parallel mapInPandas variant and check it
-        # matches networkx
-        g, nodes, edges = graph_dfs
-        monkeypatch.setattr(centrality, "SERIAL_BFS_MAX_NODES", 0)
-        got = _collect(
-            betweenness_centrality(edges, nodes),
-            "betweenness_centrality",
-        )
-        expected = nx.betweenness_centrality(g, normalized=True)
-        assert set(got) == set(expected)
-        for n, v in expected.items():
-            assert got[n] == pytest.approx(v, abs=1e-12), n
-
 
 class TestCorrGraphPipeline:
     def test_network_target_scores_against_networkx(self, spark):
@@ -135,6 +120,23 @@ class TestCorrGraphPipeline:
         assert set(got) == set(expected)
         for n, v in expected.items():
             assert got[n] == pytest.approx(v, abs=5e-4), n
+
+    def test_node_table_reads_without_a_job(self, spark):
+        """The memo's node table is a local relation: collecting it runs
+        no Spark job (counted per job group, as perfbench/trace.py counts
+        a stage)."""
+        from drug_target_discovery_spark.queries.graphq import _corr_graph
+
+        nodes, _ = _corr_graph(spark, "/root/testdata/sf0.001")
+        sc = spark.sparkContext
+        group = "corr-graph-node-table"
+        sc.setJobGroup(group, group)
+        try:
+            assert nodes.collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
 
 
 class TestAdamicAdar:
@@ -174,39 +176,9 @@ class TestAdamicAdar:
         existing = {(min(u, v), max(u, v)) for u, v in g.edges()}
         assert not (scored & existing)
 
-    def test_middle_degree_cap_drops_hub_terms(self, spark, graph_dfs):
-        from drug_target_discovery_spark.queries.graphq import adamic_adar_pairs
-
-        g, nodes, edges = graph_dfs
-        can = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        cap = 6
-        got = {
-            (r["u"], r["w"]): (r["n_common"], r["s_q"])
-            for r in adamic_adar_pairs(can, max_middle_degree=cap).collect()
-        }
-        # recompute expected: only middles with deg <= cap contribute
-        import math
-
-        deg = {n: d for n, d in g.degree()}
-        exp = {}
-        for z in g.nodes():
-            if deg[z] > cap or deg[z] < 2:
-                continue
-            nbrs = sorted(g.neighbors(z))
-            for i, u in enumerate(nbrs):
-                for w in nbrs[i + 1:]:
-                    if not g.has_edge(u, w):
-                        c, s = exp.get((u, w), (0, 0))
-                        exp[(u, w)] = (
-                            c + 1,
-                            s + math.floor(1e6 / math.log(deg[z]) + 0.5),
-                        )
-        assert got == exp
-
     def test_driver_equals_distributed(self, spark, graph_dfs):
         # the r6 driver fast path must be EXACTLY the distributed wedge
-        # join's answer — same integer quantization, same pair set —
-        # with and without the middle-degree cap
+        # join's answer — same integer quantization, same pair set
         from drug_target_discovery_spark.queries.graphq import (
             _adamic_adar_distributed,
             adamic_adar_pairs,
@@ -214,16 +186,15 @@ class TestAdamicAdar:
 
         g, nodes, edges = graph_dfs
         can = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        for kw in ({}, {"max_middle_degree": 6}):
-            drv = {
-                (r["u"], r["w"]): (r["n_common"], r["s_q"])
-                for r in adamic_adar_pairs(can, **kw).collect()
-            }
-            dist = {
-                (r["u"], r["w"]): (r["n_common"], r["s_q"])
-                for r in _adamic_adar_distributed(can, **kw).collect()
-            }
-            assert drv == dist, kw
+        drv = {
+            (r["u"], r["w"]): (r["n_common"], r["s_q"])
+            for r in adamic_adar_pairs(can).collect()
+        }
+        dist = {
+            (r["u"], r["w"]): (r["n_common"], r["s_q"])
+            for r in _adamic_adar_distributed(can).collect()
+        }
+        assert drv == dist
 
 
 class TestCloseness:
@@ -238,17 +209,6 @@ class TestCloseness:
         assert set(got) == set(expected)
         for n_, v in expected.items():
             assert got[n_] == pytest.approx(v, rel=1e-12), n_
-
-    def test_distributed_path_matches_driver(self, spark, graph_dfs, monkeypatch):
-        from drug_target_discovery_spark.graph.centrality import (
-            closeness_centrality,
-        )
-
-        g, nodes, edges = graph_dfs
-        drv = _collect(closeness_centrality(edges, nodes), "closeness_centrality")
-        monkeypatch.setattr(centrality, "SERIAL_BFS_MAX_NODES", 0)
-        dist = _collect(closeness_centrality(edges, nodes), "closeness_centrality")
-        assert drv == dist
 
 
 class TestHarmonic:
@@ -265,16 +225,3 @@ class TestHarmonic:
             assert got[n_] == pytest.approx(v, rel=1e-12), n_
         # the fixture's isolated nodes score exactly 0 (no reachable peers)
         assert got[100] == 0.0 and got[101] == 0.0
-
-    def test_distributed_path_matches_driver(self, spark, graph_dfs, monkeypatch):
-        from drug_target_discovery_spark.graph.centrality import (
-            harmonic_centrality,
-        )
-
-        g, nodes, edges = graph_dfs
-        drv = _collect(harmonic_centrality(edges, nodes), "harmonic_centrality")
-        monkeypatch.setattr(centrality, "SERIAL_BFS_MAX_NODES", 0)
-        dist = _collect(harmonic_centrality(edges, nodes), "harmonic_centrality")
-        # per-distance integer accumulation makes both paths run literally
-        # the same float ops: bit-identical, not approx
-        assert drv == dist

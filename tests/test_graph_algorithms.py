@@ -399,11 +399,6 @@ class TestDriverTwinPolicy:
             if "driver_threshold" in p.read_text()
         ]
         assert named == []
-        # one serial-BFS constant: target_scores and the three per-source
-        # centralities read it, no literal copy of it is left
-        assert not hasattr(centrality, "FUSED_DRIVER_MAX_NODES")
-        src = inspect.getsource(centrality)
-        assert src.count("512") == 1 and "SERIAL_BFS_MAX_NODES = 512" in src
 
     def test_gate_bounds_edges_and_nodes(self, spark, graph_dfs):
         g, nodes, edges = graph_dfs
@@ -465,10 +460,11 @@ class TestDriverTwinPolicy:
 
 
 class TestTargetScores:
-    def test_distributed_branch_matches_fused(self, spark, graph_dfs, monkeypatch):
-        # degree + eigenvector + source-parallel betweenness + minmax_scale
-        # must give the fused driver path's scores
-        from drug_target_discovery_spark.graph import centrality
+    def test_int_graph_against_networkx_and_empty(self, spark, graph_dfs):
+        # the three centralities, their min-max and the composite mean
+        # against networkx; INT ids stay INT, and an empty node table
+        # gives an empty result of the same schema
+        from drug_target_discovery_spark.graph.centrality import target_scores
 
         g, nodes, edges = graph_dfs
         cols = [
@@ -477,17 +473,26 @@ class TestTargetScores:
             "eigenvector_centrality",
             "composite_score",
         ]
+        dtypes = [("node", "int")] + [(c, "double") for c in cols]
+        out = target_scores(edges, nodes)
+        assert out.dtypes == dtypes
+        got = {r["node"]: r for r in out.collect()}
 
-        def scores():
-            out = centrality.target_scores(edges, nodes)
-            # INT ids stay INT on both branches
-            assert out.dtypes == [("node", "int")] + [(c, "double") for c in cols]
-            return {r["node"]: r for r in out.collect()}
+        def scale(d):
+            lo, hi = min(d.values()), max(d.values())
+            return {k: (0.0 if hi == lo else (v - lo) / (hi - lo)) for k, v in d.items()}
 
-        fused = scores()
-        monkeypatch.setattr(centrality, "SERIAL_BFS_MAX_NODES", 0)
-        dist = scores()
-        assert set(dist) == set(fused) == set(g.nodes())
-        for v, r in fused.items():
-            for c in cols:
-                assert dist[v][c] == pytest.approx(r[c], rel=1e-9), (v, c)
+        raw = [
+            nx.degree_centrality(g),
+            nx.betweenness_centrality(g, normalized=True),
+            nx.eigenvector_centrality(g, max_iter=1000, tol=1e-6),
+        ]
+        scaled = [scale(d) for d in raw]
+        assert set(got) == set(g.nodes())
+        for v in g:
+            exp = [d[v] for d in raw] + [sum(s[v] for s in scaled) / 3]
+            for c, e in zip(cols, exp):
+                assert got[v][c] == pytest.approx(e, abs=1e-9), (v, c)
+
+        empty = target_scores(edges, nodes.limit(0))
+        assert empty.dtypes == dtypes and empty.collect() == []

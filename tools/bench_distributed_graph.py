@@ -2,10 +2,11 @@
 
 The graph tier's production queries run on top-K-bounded graphs, so their
 sweeps only ever hit the driver fast paths; the `_distributed` strategies
-(join-aggregate eigenvector/PageRank/CC loops, source-parallel Brandes)
-were equivalence-tested on small fixtures only. This tool drives them on a
-synthetic graph ABOVE the driver thresholds — turning the 100 TB story from
-"designed" into "exercised" — and records timing + driver-path parity.
+(join-aggregate eigenvector/PageRank/CC/k-core loops, the Adamic-Adar
+wedge join) were equivalence-tested on small fixtures only. This tool
+drives them on a synthetic graph ABOVE the driver thresholds — turning the
+100 TB story from "designed" into "exercised" — and records timing +
+driver-path parity.
 
 Graph: deterministic, 10 components (residue classes mod 10), each a
 stride ring plus seeded pseudo-random intra-class edges — connected within
@@ -21,7 +22,6 @@ import json
 import os
 import sys
 import time
-from contextlib import contextmanager
 
 import numpy as np
 
@@ -30,7 +30,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from drug_target_discovery_spark.caching import release_caches
-from drug_target_discovery_spark.graph import centrality
 from drug_target_discovery_spark.graph.algorithms import (
     _cc_distributed,
     _core_distributed,
@@ -41,10 +40,7 @@ from drug_target_discovery_spark.graph.algorithms import (
 )
 from drug_target_discovery_spark.graph.centrality import (
     _eigenvector_distributed,
-    betweenness_centrality,
-    closeness_centrality,
     eigenvector_centrality,
-    harmonic_centrality,
 )
 from drug_target_discovery_spark.session import get_spark
 
@@ -76,17 +72,6 @@ def build_graph(spark, n: int, extra_per_node: int = 4, n_classes: int = N_CLASS
     ).dropDuplicates(["src", "dst"])
     nodes = spark.createDataFrame(pd.DataFrame({"node": ids}))
     return nodes.cache(), edges.cache()
-
-
-@contextmanager
-def serial_bfs():
-    """Run the per-source centralities' serial driver path at any size."""
-    saved = centrality.SERIAL_BFS_MAX_NODES
-    centrality.SERIAL_BFS_MAX_NODES = 10**9
-    try:
-        yield
-    finally:
-        centrality.SERIAL_BFS_MAX_NODES = saved
 
 
 def timed(fn):
@@ -180,51 +165,6 @@ def main() -> None:
         "note": "integer core numbers, exact equality",
     }
     release_caches()
-
-    # --- betweenness: serial driver Brandes vs source-parallel mapInPandas.
-    # Exact Brandes is O(V·E) — run the parity pair on a subgraph above
-    # SERIAL_BFS_MAX_NODES instead of the full 50K graph.
-    bn = 2_000
-    sub_nodes, sub_edges = build_graph(spark, bn, extra_per_node=3)
-    assert bn > centrality.SERIAL_BFS_MAX_NODES  # -> source-parallel path
-    bc_dist, t_dist = timed(lambda: betweenness_centrality(sub_edges, sub_nodes, normalized=True))
-    with serial_bfs():
-        bc_drv, t_drv = timed(
-            lambda: betweenness_centrality(sub_edges, sub_nodes, normalized=True)
-        )
-    d = compare(bc_drv, bc_dist, "betweenness_centrality", 1e-9)
-    report["checks"]["betweenness_centrality"] = {
-        "n_nodes": bn, "n_edges": sub_edges.count(),
-        "driver_sec": t_drv, "distributed_sec": t_dist, "max_diff": d,
-    }
-    release_caches()
-
-    # --- closeness: driver BFS loop vs source-parallel mapInPandas, on the
-    # same above-threshold subgraph (all-sources BFS is O(V·E) like Brandes)
-    cl_dist, t_dist = timed(lambda: closeness_centrality(sub_edges, sub_nodes))
-    with serial_bfs():
-        cl_drv, t_drv = timed(lambda: closeness_centrality(sub_edges, sub_nodes))
-    d = compare(cl_drv, cl_dist, "closeness_centrality", 0)
-    report["checks"]["closeness_centrality"] = {
-        "n_nodes": bn,
-        "driver_sec": t_drv, "distributed_sec": t_dist, "max_diff": d,
-        "note": "bit-identical: same per-source float arithmetic",
-    }
-    release_caches()
-
-    # --- harmonic: same envelope as closeness (per-source BFS, no final
-    # shuffle); per-distance integer level counts make both paths run the
-    # same float ops, so the parity bar is exact zero
-    hc_dist, t_dist = timed(lambda: harmonic_centrality(sub_edges, sub_nodes))
-    with serial_bfs():
-        hc_drv, t_drv = timed(lambda: harmonic_centrality(sub_edges, sub_nodes))
-    d = compare(hc_drv, hc_dist, "harmonic_centrality", 0)
-    report["checks"]["harmonic_centrality"] = {
-        "n_nodes": bn,
-        "driver_sec": t_drv, "distributed_sec": t_dist, "max_diff": d,
-        "note": "bit-identical: per-distance integer level counts",
-    }
-    release_caches(fixtures=True)
 
     # --- Adamic-Adar wedge enumeration at full scale vs an independent
     # numpy adjacency-list oracle: for every middle z, accumulate
